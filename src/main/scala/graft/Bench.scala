@@ -1,189 +1,247 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.nio.file.{Files, Paths}
 
-/** Benchmark main: runs the headline queries against
-  * `SPARK_GRAFT_SF_DIR`, forcing full materialisation through the noop sink
-  * (a bare .count() would let Catalyst prune the whole projection), and
-  * prints one COMPACT JSON line for the driver (r19 lesson: the driver's
-  * tail capture truncated a ~25 KB telemetry-bearing line into
-  * `parsed: null` for BOTH rounds — the printed line now carries only
-  * {metric,value,queries,...} (~5 KB) and the full per-entry telemetry
-  * lives in BENCH_LAST.json, which is also rewritten INCREMENTALLY after
-  * every entry so a killed run leaves a per-entry trail instead of
-  * nothing).
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.{ExplainMode, QueryExecution, SparkPlan, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec, AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ReusedExchangeExec, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, BroadcastNestedLoopJoinExec, CartesianProductExec, ShuffledHashJoinExec, SortMergeJoinExec}
+import org.apache.spark.sql.util.QueryExecutionListener
+
+import BenchTelemetry.{fmt, la1, measure}
+
+/** The dev CLI for timing and plan evidence. Every query runs through the
+  * noop sink, forcing full materialisation (a bare .count() would let
+  * Catalyst prune the whole projection), against `SPARK_GRAFT_SF_DIR`
+  * with `SPARK_GRAFT_CPUS` cores (default 32; `SPARK_GRAFT_MASTER`
+  * applies, see [[GraftSession]]). Three modes:
+  *
+  *   - no arguments: the headline sweep over `SparkEntry.benchNames`
+  *     ([[sweep]]), writing BENCH_LAST.json and one compact JSON line;
+  *   - `run <q…>`: per-query timing plus stage counters ([[runQueries]]):
+  *     one `[benchsub]` line per query, then its `[stage]` rows;
+  *   - `plans <q…>`: every captured execution's formatted plan to
+  *     `plans/<tag>/` plus the `[planshape]` summary ([[plans]]).
+  *
+  * `@bench` in a query list expands to the bench set. `run` and the sweep
+  * share one protocol ([[BenchTelemetry.measure]]): a warm-up, then
+  * `SPARK_GRAFT_REPS` (default 3) measured reps quoting the min.
+  *
+  *   sbt "runMain graft.Bench run x_setsim_join x_phrase"
+  *   SPARK_GRAFT_PLAN_TAG=r21 sbt "runMain graft.Bench plans x_concomp"
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Per entry: one unmeasured warm-up (Janino codegen + JIT — ~15 s for the
-    // widest aggregates, irrelevant at cluster scale), then SPARK_GRAFT_REPS
-    // measured reps (default 3) reporting the MIN. Host load only ever ADDS
-    // time, so min-of-reps is the load-robust steady-state estimate — the
-    // r10/r11 driver artifacts carried 4-30x load-pollution spikes on single
-    // measured reps that a judge had to adjudicate by hand against isolated
-    // BenchSubset runs; the min makes the headline artifact self-adjudicating.
+    val cpus = GraftSession.cpus("32")
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt.max(1)
-    // Load telemetry: the driver bench runs on a shared machine, and every
-    // round since r14 has carried phantom spikes that a judge adjudicated
-    // by hand with isolated re-runs. Three per-entry fields make the
-    // artifact SELF-adjudicating, one per pollution signature (see
-    // BenchTelemetry's scaladoc): `la` (foreign load: 1-min loadavg far
-    // above the bench's own cpus), `spread` (inconsistent reps:
-    // deterministic work timed >1.5x apart), and `cw` (CPU STEAL: the
-    // quoted rep's process-CPU/wall ratio — a local-mode noop-sink query
-    // keeps >= 1 core busy, so cw << 1 means the JVM wasn't scheduled for
-    // most of the wall; the r17 x_rollup 16x spike sat at la=1.3,
-    // spread=1.08 and ONLY this field would have flagged it). Run-level
-    // steal/iowait percent from /proc/stat corroborate machine-wide.
-    // benchdiff emits LOAD-SUSPECT from these fields alone.
-    import BenchTelemetry.{la1, procCpuNanos, fmt, freeCachedBlocks}
+    val mode = args.headOption.getOrElse("")
+    val names = args.toSeq.drop(1).flatMap {
+      case "@bench" => SparkEntry.benchNames
+      case n        => Seq(n)
+    }
+    require(mode.isEmpty || (Set("run", "plans")(mode) && names.nonEmpty),
+      "usage: graft.Bench [run <q…|@bench> | plans <q…|@bench>]")
+    val spark = GraftSession(cpus, logLevel = if (mode.isEmpty) "WARN" else "ERROR")
+    mode match {
+      case ""    => sweep(spark, sfDir, cpus, reps)
+      case "run" => runQueries(spark, sfDir, reps, names)
+      case _     => plans(spark, sfDir, names)
+    }
+    spark.stop()
+  }
+
+  private def noop(df: DataFrame): Unit =
+    df.write.format("noop").mode("overwrite").save()
+
+  /** The headline sweep. The printed line is COMPACT (r19 lesson: a
+    * stdout tail capture truncated a ~25 KB telemetry-bearing line into
+    * `parsed: null` for BOTH rounds), so it carries only
+    * {metric,value,queries,...}; the full per-entry telemetry lives in
+    * BENCH_LAST.json, which is rewritten INCREMENTALLY after every entry
+    * so a killed run leaves a per-entry trail instead of nothing.
+    *
+    * Load telemetry: the bench runs on a shared machine, and every round
+    * since r14 has carried phantom spikes that had to be adjudicated by
+    * hand with isolated re-runs. Three per-entry fields make the artifact
+    * SELF-adjudicating, one per pollution signature (see BenchTelemetry's
+    * scaladoc): `la`, `spread` and `cw`. Run-level steal/iowait percent
+    * from /proc/stat corroborate machine-wide. Steal-immune per-entry axes
+    * (the r18 verdict's binding gap): cpu_s = process-CPU seconds of the
+    * quoted min rep, plus per-entry shuffle-write records and executor-CPU
+    * seconds from stage metrics. benchdiff emits LOAD-SUSPECT from these
+    * fields alone and adjudicates round-over-round on cpu_s FIRST. */
+  private def sweep(spark: SparkSession, sfDir: String, cpus: String,
+                    reps: Int): Unit = {
     val loadStart = la1()
     val jiffiesStart = BenchTelemetry.cpuJiffies()
     val runT0 = System.nanoTime()
     def elapsed(): String = fmt((System.nanoTime() - runT0) / 1e9, 1)
-    // Steal-immune per-entry axes (the r18 verdict's binding gap: wall
-    // comparison across rounds is noise-bound both ways on a machine
-    // with persistent hypervisor steal): cpu_s = process-CPU seconds of
-    // the quoted min rep, plus per-entry shuffle-write records and
-    // executor-CPU seconds from stage metrics. Records are a plan
-    // property (bit-identical for unchanged code+data); CPU seconds
-    // don't grow when the JVM is descheduled. benchdiff adjudicates
-    // round-over-round on cpu_s FIRST, wall second.
     val counters = new BenchTelemetry.EntryCounters(spark.sparkContext)
-    val outPath = java.nio.file.Paths.get(
+    val outPath = Paths.get(
       sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_LAST.json"))
-    // Accumulated per-entry rows; BENCH_LAST.json is rewritten from these
-    // after EVERY entry (a 60-min-killed run must leave a trail — the r19
-    // driver's rc=124 run was unattributable because the only artifacts
-    // were stderr cache warnings).
     val done = scala.collection.mutable.ArrayBuffer
-      .empty[(String, Double, Double, Double, Double, Double, Double, Long, Double)]
+      .empty[(String, BenchTelemetry.Measured)]
+    def queriesJson: String = done.map { case (k, m) =>
+      "\"" + k + "\":" + fmt(m.wall, 3)
+    }.mkString("{", ",", "}")
+    def total: Double = done.map(_._2.wall).filter(_ >= 0).sum // skip -1 markers
     def writeSnapshot(partial: Boolean): Unit = {
-      val qs = done.map { case (k, v, _, _, _, _, _, _, _) =>
-        "\"" + k + "\":" + fmt(v, 3)
+      val tel = done.map { case (k, m) =>
+        "\"" + k + "\":{\"la\":" + fmt(m.la, 1) + ",\"spread\":" + fmt(m.spread, 2) +
+          ",\"cw\":" + fmt(m.cw, 2) + ",\"cpu_s\":" + fmt(m.cpuS, 3) +
+          ",\"xcpu_s\":" + fmt(m.xcpuS, 3) + ",\"shuf_rec\":" +
+          m.perRep(m.totals.shufRec) + ",\"cold_s\":" + fmt(m.cold, 3) + "}"
       }.mkString("{", ",", "}")
-      val tel = done.map { case (k, _, la, sp, cw, cpuS, xcpuS, shufRec, coldS) =>
-        "\"" + k + "\":{\"la\":" + fmt(la, 1) + ",\"spread\":" + fmt(sp, 2) +
-          ",\"cw\":" + fmt(cw, 2) + ",\"cpu_s\":" + fmt(cpuS, 3) +
-          ",\"xcpu_s\":" + fmt(xcpuS, 3) + ",\"shuf_rec\":" + shufRec +
-          ",\"cold_s\":" + fmt(coldS, 3) + "}"
-      }.mkString("{", ",", "}")
-      val total = done.map(_._2).filter(_ >= 0).sum // skip -1 error markers
       val (stealPct, iowaitPct) = BenchTelemetry.stealIowaitPct(
         jiffiesStart, BenchTelemetry.cpuJiffies())
       val line =
         s"""{"metric":"total","value":${fmt(total, 3)},"unit":"sec",""" +
-          s""""queries":$qs,"telemetry":$tel,""" +
+          s""""queries":$queriesJson,"telemetry":$tel,""" +
           s""""load_start":${fmt(loadStart, 2)},"load_end":${fmt(la1(), 2)},""" +
           s""""steal_pct":${fmt(stealPct, 2)},""" +
           s""""iowait_pct":${fmt(iowaitPct, 2)},""" +
           s""""wall_s":${elapsed()},"partial":$partial,""" +
           s""""cpus":$cpus,"reps":$reps,"sf":"$sfDir"}"""
-      try java.nio.file.Files.writeString(outPath, line + "\n")
+      try Files.writeString(outPath, line + "\n")
       catch { case _: Throwable => () } // read-only cwd must not fail the run
     }
     SparkEntry.benchNames.foreach { name =>
       val fn = SparkEntry.queries(name)
-      // None on failure: a transiently failing rep returns FAST, and under
-      // min-of-reps a failed-but-timed rep would silently LOWER the
-      // headline min for an otherwise-healthy entry — failures must be
-      // excluded from the min, not blended into it.
-      def once(): Option[(Double, Double)] = {
-        val t0 = System.nanoTime()
-        val c0 = procCpuNanos()
-        try {
-          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          val wall = (System.nanoTime() - t0) / 1e9
-          val c1 = procCpuNanos()
-          val cpuS = if (c0 >= 0 && c1 >= c0) (c1 - c0) / 1e9 else -1.0
-          Some((wall, cpuS))
-        } catch {
-          case e: Throwable => System.err.println(s"[bench] $name: $e"); None
-        }
-      }
-      val warm = once() // warm-up: codegen + JIT
-      // entry boundary for the stage counters: let the async listener bus
-      // settle so warm-up events can't leak into the measured window,
-      // then count across the measured reps (the per-rep record count is
-      // deterministic — same plan, same data — so total/nOk attributes
-      // exactly without per-rep drains)
-      counters.drain(); counters.reset()
-      // Cold/warm split (r19 verdict #3): the warm-up rep fills
-      // operator-internal persist() caches (CacheManager dedupes by
-      // logical plan, so fresh frames in later reps scan the warm-up's
-      // InMemoryRelation) and nothing used to clear them — min-of-reps
-      // for persist-using entries quoted a warm-cache scan while
-      // checkpoint-based entries rebuilt per rep. Dropping ALL cached
-      // blocks here (catalog cache AND persistent RDD blocks — catalog
-      // clearCache() cannot free localCheckpoint blocks) makes rep 1 a
-      // true cold run, reported as cold_s; reps 2..n are warm and the
-      // headline stays min-of-reps (comparable with prior rounds, whose
-      // min was in practice a warm rep for these entries).
-      freeCachedBlocks(spark)
-      val laBefore = la1() // sampled between entries: foreign load >> cpus
-      val times = (1 to reps).flatMap(_ => once())
-      counters.drain()
-      val nOk = times.size
-      if (nOk < reps)
-        System.err.println(
-          s"[bench] $name: ${reps - nOk}/$reps measured reps FAILED")
-      val shufRec = if (nOk > 0) counters.shufRec / nOk else -1L
-      val xcpuS = if (nOk > 0) counters.execCpuS / nOk else -1.0
-      // -1 is the explicit error marker when no rep succeeded — never a
-      // fabricated elapsed time. cpu_s/cw are the MIN rep's: the min is
-      // the quoted number, so its own rep must be the one to self-convict.
-      val (dt, cpuS) =
-        if (times.nonEmpty) times.minBy(_._1) else (-1.0, -1.0)
-      val coldS = times.headOption.map(_._1).getOrElse(-1.0)
-      val cw = if (dt > 0 && cpuS >= 0) cpuS / dt else -1.0
-      // spread = max/min across measured reps: reps of the same lazy plan
-      // are deterministic work, so reps that disagree badly were timed on
-      // a machine doing something else
-      val walls = times.map(_._1)
-      val spread = if (walls.size >= 2) walls.max / walls.min else 1.0
-      // isolation between entries: several queries persist() or
-      // localCheckpoint() intermediate frames (their results stay lazy, so
-      // the operator cannot unpersist) — without this, pinned blocks
-      // accumulate across the 178 entries x 4 executions and later
-      // queries pay eviction pressure for earlier ones' caches (measured:
-      // x_setsim_join 7.2 s late in the sequence vs 3.2 s in isolation).
-      // catalog.clearCache() alone does NOT free localCheckpoint RDD
-      // blocks (the r19 32-core-timeout suspect), so both are dropped.
-      freeCachedBlocks(spark)
-      done += ((name, dt, laBefore, spread, cw, cpuS, xcpuS, shufRec, coldS))
+      val m = measure(spark, counters, name, reps)(noop(fn(spark, sfDir)))
+      if (m.failed > 0)
+        System.err.println(s"[bench] $name: ${m.failed}/$reps measured reps FAILED")
+      done += ((name, m))
       writeSnapshot(partial = true)
-      // timestamped per-entry trail (r19 verdict #1): a killed run's
-      // stderr says exactly which entry it died in and what each rep cost
+      // timestamped per-entry trail: a killed run's stderr says exactly
+      // which entry it died in and what each rep cost
       System.err.println(
         s"[bench] t=${elapsed()}s $name warm=" +
-          warm.map(w => fmt(w._1, 2)).getOrElse("FAIL") +
-          s" reps=${walls.map(fmt(_, 2)).mkString(",")} min=${fmt(dt, 2)}" +
-          s" cold=${fmt(coldS, 2)} blocks=${BenchTelemetry.storageBlocks(spark)}")
+          m.warm.map(w => fmt(w.wall, 2)).getOrElse("FAIL") +
+          s" reps=${m.reps.map(r => fmt(r.wall, 2)).mkString(",")} min=${fmt(m.wall, 2)}" +
+          s" cold=${fmt(m.cold, 2)} blocks=${BenchTelemetry.storageBlocks(spark)}")
     }
     writeSnapshot(partial = false)
-    // The printed line is COMPACT (queries only, no telemetry): the driver
-    // tails stdout and a ~25 KB line was truncated past recognition in r19
-    // (parsed: null on a COMPLETED run). Full telemetry is in
-    // BENCH_LAST.json.
-    val qs = done.map { case (k, v, _, _, _, _, _, _, _) =>
-      "\"" + k + "\":" + fmt(v, 3)
-    }.mkString("{", ",", "}")
-    val total = done.map(_._2).filter(_ >= 0).sum
     println(
       s"""{"metric":"total","value":${fmt(total, 3)},"unit":"sec",""" +
-        s""""queries":$qs,"cpus":$cpus,"reps":$reps,"sf":"$sfDir"}""")
-    spark.stop()
+        s""""queries":$queriesJson,"cpus":$cpus,"reps":$reps,"sf":"$sfDir"}""")
+  }
+
+  /** `run`: one `[benchsub]` line per query with the min-of-reps wall,
+    * every stage counter per measured rep and the result's row count,
+    * then the `[stage]` rows of the measured reps in completion order
+    * (SPARK_GRAFT_REPS=1 gives one rep's stages). cw/cpu_s
+    * (process-CPU/wall of the min rep) are only printed when the
+    * executors live in THIS JVM; xcpu_s comes from the
+    * executors' own task metrics, so xcw = xcpu_s/min plays cw's role
+    * under local-cluster. A query that fails is reported with its error
+    * (an OOM under a constrained heap is a finding), not thrown. */
+  private def runQueries(spark: SparkSession, sfDir: String, reps: Int,
+                         names: Seq[String]): Unit = {
+    val counters = new BenchTelemetry.EntryCounters(spark.sparkContext)
+    val mb = 1024.0 * 1024.0
+    names.foreach { name =>
+      val m = measure(spark, counters, name, reps)(
+        noop(SparkEntry.queries(name)(spark, sfDir)))
+      // result cardinality (did the WORK grow, or just the scan?), from
+      // one unmeasured count after the reps
+      val outRows = try SparkEntry.queries(name)(spark, sfDir).count()
+        catch { case _: Throwable => -1L }
+      val t = m.totals
+      def perRepMb(b: Long): String =
+        if (m.reps.isEmpty) "-1" else fmt(m.perRep(b) / mb, 1)
+      println(s"[benchsub] $name reps=${m.reps.map(r => fmt(r.wall, 2)).mkString(",")} " +
+        s"min=${fmt(m.wall, 2)} cold=${fmt(m.cold, 2)} " +
+        s"warm=${m.warm.map(w => fmt(w.wall, 2)).getOrElse("FAIL")} " +
+        s"la=${fmt(m.la, 1)} spread=${fmt(m.spread, 2)}" +
+        (if (GraftSession.clusterMode) ""
+         else s" cw=${fmt(m.cw, 2)} cpu_s=${fmt(m.cpuS, 2)}") +
+        s" xcpu_s=${fmt(m.xcpuS, 2)}" +
+        s" xcw=${fmt(if (m.wall > 0) m.xcpuS / m.wall else -1.0, 2)}" +
+        s" shuf_rec=${m.perRep(t.shufRec)} shuf_mb=${perRepMb(t.shufBytes)}" +
+        s" in_mb=${perRepMb(t.inBytes)} out_rows=$outRows" +
+        s" mem_spill_mb=${perRepMb(t.memSpill)} disk_spill_mb=${perRepMb(t.diskSpill)}" +
+        s" peak_mem_mb=${fmt(t.peakMem / mb, 1)} gc_s=${fmt(t.gcMs / 1e3, 2)}" +
+        s" run_s=${fmt(t.runMs / 1e3, 2)} stages=${m.stages.size}" +
+        m.error.map(e => s" failed=${m.failed} err=$e").getOrElse(""))
+      m.stages.foreach { s =>
+        println(f"[stage] $name stage=${s.id}%4d tasks=${s.tasks}%3d " +
+          s"cpu=${fmt(s.cpuNs / 1e9, 2)} run=${fmt(s.runMs / 1e3, 2)} " +
+          s"gc=${fmt(s.gcMs / 1e3, 2)} inRec=${s.inRec} shufR=${s.shufReadRec} " +
+          s"shufW=${s.shufRec} spillMB=${fmt((s.memSpill + s.diskSpill) / mb, 1)} " +
+          s"peakMB=${fmt(s.peakMem / mb, 1)} name=${s.name.take(90)}")
+      }
+    }
+  }
+
+  private def allNodes(p: SparkPlan): Seq[SparkPlan] =
+    p.collect { case n => n }.flatMap {
+      case q: QueryStageExec => q +: allNodes(q.plan)
+      case a: AdaptiveSparkPlanExec => a +: allNodes(a.executedPlan)
+      case n => Seq(n)
+    }
+
+  /** `plans`: EXECUTE each query through the noop sink and write every
+    * execution it ran, formatted, to
+    * `plans/<SPARK_GRAFT_PLAN_TAG>/<q>_<SPARK_GRAFT_PLAN_SUFFIX>.txt`
+    * (defaults `dev` and `before`). A QueryExecutionListener captures
+    * EVERY execution — for the iterative operators (pageRank,
+    * labelPropagation, dupClusters, …) whose rounds execute eagerly at
+    * query-construction time, the returned frame's own plan is a vacuous
+    * checkpoint scan, so the capture (one plan per round, in execution
+    * order) is the only honest plan evidence. The formatted plans carry
+    * each scan's PushedFilters and ReadSchema.
+    *
+    * The printed `[planshape]` line summarizes the FINAL adaptive plan of
+    * the last execution (the noop write): join strategies, exchanges,
+    * reuse, AQE reads and whole-stage-codegen stages. AQE re-plans at
+    * runtime, so only the executed plan tells the truth; the
+    * pre-execution explain shows the initial guess. */
+  private def plans(spark: SparkSession, sfDir: String,
+                    names: Seq[String]): Unit = {
+    val tag = sys.env.getOrElse("SPARK_GRAFT_PLAN_TAG", "dev")
+    val suffix = sys.env.getOrElse("SPARK_GRAFT_PLAN_SUFFIX", "before")
+    val captured = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    spark.listenerManager.register(new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution,
+                             durationNs: Long): Unit = captured.add(qe)
+      override def onFailure(funcName: String, qe: QueryExecution,
+                             exception: Exception): Unit = ()
+    })
+    // the execution listener shares the listener bus; the counters' drain
+    // is the wait for it
+    val counters = new BenchTelemetry.EntryCounters(spark.sparkContext)
+    val outDir = Paths.get(s"plans/$tag")
+    Files.createDirectories(outDir)
+    names.foreach { name =>
+      captured.clear()
+      val err =
+        try { noop(SparkEntry.queries(name)(spark, sfDir)); "" }
+        catch { case e: Throwable => s" err=${e.getClass.getSimpleName}" }
+      counters.drain()
+      val qes = { import scala.jdk.CollectionConverters._; captured.asScala.toSeq }
+      val out = outDir.resolve(s"${name}_$suffix.txt")
+      Files.writeString(out, qes.zipWithIndex.map { case (qe, i) =>
+        s"==== execution ${i + 1} of ${qes.size} ====\n" +
+          qe.explainString(ExplainMode.fromString("formatted"))
+      }.mkString("\n"))
+      val nodes = qes.lastOption.toSeq.flatMap(qe => allNodes(qe.executedPlan))
+      def c(f: SparkPlan => Boolean) = nodes.count(f)
+      val smj = nodes.collect { case j: SortMergeJoinExec => j }
+      println(s"[planshape] $name" +
+        s" bhj=${c(_.isInstanceOf[BroadcastHashJoinExec])}" +
+        s" smj=${smj.size}(skew=${smj.count(_.isSkewJoin)})" +
+        s" shj=${c(_.isInstanceOf[ShuffledHashJoinExec])}" +
+        s" bnlj=${c(_.isInstanceOf[BroadcastNestedLoopJoinExec])}" +
+        s" cart=${c(_.isInstanceOf[CartesianProductExec])}" +
+        s" shuffle=${c(_.isInstanceOf[ShuffleExchangeExec])}" +
+        s" bcast=${c(_.isInstanceOf[BroadcastExchangeExec])}" +
+        s" reuse=${c(_.isInstanceOf[ReusedExchangeExec])}" +
+        s" aqeRead=${c(_.isInstanceOf[AQEShuffleReadExec])}" +
+        s" wsc=${c(_.isInstanceOf[WholeStageCodegenExec])}" +
+        s" executions=${qes.size} -> $out$err")
+      spark.catalog.clearCache()
+    }
   }
 }

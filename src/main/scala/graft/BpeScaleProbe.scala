@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 
 /** Vocabulary-scale BPE-learn evidence: real tokenizers learn THOUSANDS
@@ -30,17 +29,7 @@ object BpeScaleProbe {
     val tableName = if (args.length > 1) args(1) else "documents"
     val column = if (args.length > 2) args(2) else "text"
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession(GraftSession.cpus("32"), logLevel = "ERROR")
 
     val docs = spark.read.parquet(s"$sfDir/$tableName.parquet")
     val times = new Array[Double](nMerges + 1)

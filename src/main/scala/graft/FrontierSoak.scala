@@ -2,7 +2,6 @@ package graft
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
 
@@ -47,14 +46,9 @@ object FrontierSoak {
     val rows = sys.env.getOrElse("SPARK_GRAFT_SOAK_ROWS", "128").toInt
     val sampleEvery = sys.env.getOrElse("SPARK_GRAFT_SOAK_SAMPLE", "100").toInt
     val hosts = 97
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = MasterConfig(SparkSession.builder(), cpus)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        graft.streaming.Frontier.RocksDbProvider)
+    val spark = GraftSession(GraftSession.cpus("8"), logLevel = "ERROR", confs = Seq(
+      "spark.sql.streaming.stateStore.providerClass" ->
+        graft.streaming.Frontier.RocksDbProvider,
       // SPARK_GRAFT_SOAK_CHANGELOG=true switches the RocksDB commit mode
       // to changelog checkpointing (per-batch changelog append; snapshot
       // maintenance async) — the mode whose failure class is changelog
@@ -64,16 +58,12 @@ object FrontierSoak {
       // this tiny per-store state (the async snapshot+replay machinery
       // dominates when a full snapshot is ~200 KB), so the long-horizon
       // run uses the mode that maximizes horizon turnovers per hour.
-      .config("spark.sql.streaming.stateStore.rocksdb" +
-        ".changelogCheckpointing.enabled", sys.env.getOrElse(
-        "SPARK_GRAFT_SOAK_CHANGELOG", "false"))
-      .withExtensions(new graft.functions.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+      "spark.sql.streaming.stateStore.rocksdb" +
+        ".changelogCheckpointing.enabled" -> sys.env.getOrElse(
+        "SPARK_GRAFT_SOAK_CHANGELOG", "false")))
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
 
-    val base = Timestamp.valueOf("2024-01-01 00:00:00").getTime
     val fin = MemoryStream[(Long, String, String, Timestamp)]
     val fr = graft.streaming.Frontier.crawlFrontier(
       fin.toDF().toDF("fetch_id", "url", "text", "ts"), "url", "text", "ts",
@@ -82,28 +72,6 @@ object FrontierSoak {
     val q = fr.writeStream.outputMode(OutputMode.Append())
       .format("noop").start()
 
-    // the STREAMBENCH batch shape at low rate: 70% fresh urls, 30%
-    // syndicated same-batch body copies under batch-namespaced paths
-    def batch(b: Int): Seq[(Long, String, String, Timestamp)] = {
-      val start = (b.toLong * 7 * rows) / 10
-      val dup = (3 * rows) / 10
-      def body(k: Long): String =
-        (0 until 40).map(j => "w" + ((k * 131 + j * 7) % 99991)).mkString(" ")
-      (0 until rows).map { i =>
-        val k = start + i
-        val path = if (i < dup) s"synd/$b/$k" else s"d/$k"
-        val u = ((k + b) % 4) match {
-          case 0 => s"http://host${k % hosts}.example.com/$path?a=1&b=2"
-          case 1 => s"HTTP://Host${k % hosts}.Example.COM:80/$path?b=2&a=1"
-          case 2 => s"http://host${k % hosts}.example.com/$path?a=1&b=2&utm_source=x"
-          case _ => s"http://host${k % hosts}.example.com/$path?a=1&b=2#frag"
-        }
-        val txt = if (i < dup) s"hdr$b fresh update " + body(k + dup)
-          else body(k)
-        (k, u, txt, new Timestamp(base + b * 30L * 60000 + (i % 1800) * 1000L))
-      }
-    }
-
     case class Sample(batch: Int, urls: Long, hostsRows: Long, chunks: Long,
                       sstBytes: Long, pinnedBytes: Long, msPerBatch: Double,
                       cpuMsPerBatch: Double)
@@ -111,7 +79,8 @@ object FrontierSoak {
     var lastT = System.nanoTime()
     var lastCpu = BenchTelemetry.procCpuNanos()
     (0 until batches).foreach { b =>
-      fin.addData(batch(b))
+      // the STREAMBENCH batch shape at low rate
+      fin.addData(StreamingBench.frontierBatch(b, rows, hosts))
       q.processAllAvailable()
       if ((b + 1) % sampleEvery == 0) {
         val ops = Option(q.lastProgress).toSeq.flatMap(_.stateOperators.toSeq)

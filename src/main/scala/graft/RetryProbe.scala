@@ -1,11 +1,7 @@
 package graft
 
-import java.security.MessageDigest
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.{Success => TaskSuccess, TaskContext}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.{DataFrame, Encoders}
 
 /** Task-retry determinism probe: proves byte-identical query output when
   * tasks FAIL AND RECOMPUTE — the routine 100-TB events (speculative
@@ -90,78 +86,50 @@ object RetryProbe {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "pass query names")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
+    val cpus = GraftSession.cpus("8")
     val killMode = sys.env.contains("SPARK_GRAFT_KILL_EXEC")
     val decomMode = sys.env.contains("SPARK_GRAFT_DECOM")
-    require(!killMode || sys.env.get("SPARK_GRAFT_MASTER")
-      .exists(_.startsWith("local-cluster")),
+    require(!killMode || GraftSession.clusterMode,
       "SPARK_GRAFT_KILL_EXEC needs SPARK_GRAFT_MASTER=local-cluster[...] " +
         "(local-mode executors are the driver; killing them kills the probe)")
-    require(!decomMode || sys.env.get("SPARK_GRAFT_MASTER")
-      .exists(_.startsWith("local-cluster")),
+    require(!decomMode || GraftSession.clusterMode,
       "SPARK_GRAFT_DECOM needs SPARK_GRAFT_MASTER=local-cluster[...] " +
         "(decommission is an executor-process event; local mode has none)")
     require(!(killMode && decomMode),
       "SPARK_GRAFT_KILL_EXEC and SPARK_GRAFT_DECOM are exclusive modes")
-    require(!sys.env.contains("SPARK_GRAFT_SPECULATE") ||
-      sys.env.get("SPARK_GRAFT_MASTER")
-        .exists(_.startsWith("local-cluster")),
+    val speculate = sys.env.contains("SPARK_GRAFT_SPECULATE")
+    require(!speculate || GraftSession.clusterMode,
       "SPARK_GRAFT_SPECULATE needs SPARK_GRAFT_MASTER=local-cluster[...] " +
         "— TaskSchedulerImpl hard-disables speculation in local mode " +
         "(!isLocal gate), so a local run would silently test nothing")
-    val speculate = sys.env.contains("SPARK_GRAFT_SPECULATE")
-    val builder0 =
-      if (sys.env.contains("SPARK_GRAFT_MASTER"))
-        MasterConfig(SparkSession.builder(), cpus)
-      else SparkSession.builder().master(s"local[$cpus, 4]")
     // aggressive speculation so the probe's slow-partition bait reliably
     // draws a clone: speculate once 10% of tasks finish, threshold 1.0x
     // the median (production would never run this hot — the point is to
     // FORCE the event, then prove the output doesn't care who won)
-    val builder = if (!speculate) builder0 else builder0
-      .config("spark.speculation", "true")
-      .config("spark.speculation.interval", "100ms")
-      .config("spark.speculation.quantile", "0.1")
-      .config("spark.speculation.multiplier", "1.0")
+    val specConfs = if (!speculate) Nil else Seq(
+      "spark.speculation" -> "true",
+      "spark.speculation.interval" -> "100ms",
+      "spark.speculation.quantile" -> "0.1",
+      "spark.speculation.multiplier" -> "1.0",
       // AQE coalesces the small result stages to 1-4 tasks — BELOW the
       // quantile machinery's reach (a 1-task stage has no median to
       // compare against). The absolute single-task threshold covers
       // exactly that: any task past 1 s in a fewer-tasks-than-slots
       // stage draws a clone. The bait sleeps 3 s.
-      .config("spark.speculation.task.duration.threshold", "1s")
+      "spark.speculation.task.duration.threshold" -> "1s",
       // the 3.4+ efficiency gate only speculates tasks whose data rate
       // lags the average — a SLEEPING task processes no data, so the
       // gate must be off for the duration threshold to act alone
-      .config("spark.speculation.efficiency.enabled", "false")
+      "spark.speculation.efficiency.enabled" -> "false")
     // decommission mode: the GRACEFUL executor-departure path a 100-TB
-    // spot-instance fleet lives on — the victim gets SIGPWR (the default
-    // spark.executor.decommission.signal), tells the driver it is
-    // leaving, and MIGRATES its shuffle+RDD blocks to surviving peers
-    // before exiting, so downstream stages fetch from the new homes
-    // instead of recomputing. The success criteria are the OPPOSITE of
-    // kill mode's: zero task failures (kill mode REQUIRES >= 1).
-    val builder1 = if (!decomMode) builder else builder
-      .config("spark.decommission.enabled", "true")
-      .config("spark.storage.decommission.enabled", "true")
-      .config("spark.storage.decommission.shuffleBlocks.enabled", "true")
-      .config("spark.storage.decommission.rddBlocks.enabled", "true")
-      // give the migrator time: the default force-kill is immediate-ish;
-      // the probe's queries finish in seconds, so a 120s grace means the
-      // executor only exits when migration is DONE
-      .config("spark.executor.decommission.forceKillTimeout", "120s")
-      // the production setting for decommissioning fleets: a fetch that
-      // races the handover window fails transiently and is retried
-      // without counting toward stage-abort limits
-      .config("spark.stage.ignoreDecommissionFetchFailure", "true")
-    val spark = builder1
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // spot-instance fleet lives on (Chaos.decommissionConfs). The success
+    // criteria are the OPPOSITE of kill mode's: zero task failures (kill
+    // mode REQUIRES >= 1).
+    val decomConfs = if (!decomMode) Nil else Chaos.decommissionConfs
+    // the ", 4" IS maxFailures: plain local[n] fails the job on the first
+    // task failure
+    val spark = GraftSession(cpus, localMaster = Some(s"local[$cpus, 4]"),
+      logLevel = "ERROR", confs = specConfs ++ decomConfs)
 
     // Speculation is UNSCHEDULABLE on a one-host topology:
     // TaskSetManager.dequeueSpeculativeTask refuses any host that already
@@ -209,59 +177,14 @@ object RetryProbe {
       }
     }
 
-    val taskFailures = new AtomicInteger
-    val fetchFailures = new AtomicInteger
-    val taskStarts = new AtomicInteger
-    val speculativeLaunches = new AtomicInteger
-    val decomRemovals = new AtomicInteger
-    val migratedShuffleBlocks = new AtomicInteger
-    // live tasks keyed by taskId (exact — a +1/-1 counter drifts when an
-    // executor loss delivers task-end events out of pairing): the
-    // kill/decom victim must be an executor that is actually RUNNING
-    // work, because killing an idle one is absorbed invisibly by the
-    // scheduler and proves nothing
-    val liveTasks = new java.util.concurrent.ConcurrentHashMap[Long, String]()
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
-        if (te.reason != TaskSuccess) taskFailures.incrementAndGet()
-        // FetchFailed is the LOST-OUTPUT class: a downstream task could
-        // not read an upstream map output and forces an upstream stage
-        // rerun — exactly what shuffle-block migration exists to prevent
-        if (te.reason.isInstanceOf[org.apache.spark.FetchFailed])
-          fetchFailures.incrementAndGet()
-        if (te.taskInfo != null) liveTasks.remove(te.taskInfo.taskId)
-      }
-      override def onTaskStart(
-          ts: org.apache.spark.scheduler.SparkListenerTaskStart): Unit = {
-        taskStarts.incrementAndGet()
-        liveTasks.put(ts.taskInfo.taskId, ts.taskInfo.executorId)
-        if (ts.taskInfo.speculative) speculativeLaunches.incrementAndGet()
-      }
-      // decommission surfaces as an ExecutorRemoved whose loss reason is
-      // ExecutorDecommission ("Executor decommission...") — there is no
-      // dedicated listener event class in the public API
-      override def onExecutorRemoved(
-          er: org.apache.spark.scheduler.SparkListenerExecutorRemoved): Unit =
-        if (er.reason != null &&
-          er.reason.toLowerCase.contains("decommission"))
-          decomRemovals.incrementAndGet()
-      // migrated shuffle blocks re-register with the block manager master
-      // under their shuffle_* ids on the RECEIVING executor — counted as
-      // corroborating evidence that migration MOVED data, not just that
-      // the executor left quietly
-      override def onBlockUpdated(
-          bu: org.apache.spark.scheduler.SparkListenerBlockUpdated): Unit =
-        if (bu.blockUpdatedInfo.blockId.name.startsWith("shuffle_"))
-          migratedShuffleBlocks.incrementAndGet()
-    })
+    val census = new Chaos.TaskCensus(spark.sparkContext)
+    import census.{decomRemovals, fetchFailures, migratedShuffleBlocks,
+      speculativeLaunches, taskFailures}
 
-    // canonical result hash: sorted stringified rows — the flakehunt
-    // convention (byte-equal strings, not approximate compare)
+    // canonical result hash: sorted stringified rows
     def hashOf(df: DataFrame): (String, Long) = {
-      val rows = df.collect().map(_.toString).sorted
-      val md = MessageDigest.getInstance("MD5")
-      rows.foreach(r => md.update(r.getBytes("UTF-8")))
-      (md.digest().map("%02x".format(_)).mkString, rows.length.toLong)
+      val rows = df.collect().map(_.toString).sorted.toSeq
+      (Chaos.md5(rows), rows.length.toLong)
     }
 
     def withInjectedFailures(df: DataFrame): DataFrame =
@@ -295,76 +218,22 @@ object RetryProbe {
     // kill-mode: SIGKILL one CoarseGrainedExecutorBackend child once the
     // chaos run has tasks RUNNING; the standalone master replaces it,
     // tasks and lost shuffle outputs reschedule/rerun on the survivors.
-    // Task-aware, not a fixed delay: a wall-clock timer can land in the
-    // driver-side planning window (Catalyst on the wide dedup plans runs
-    // 1-2 s with zero live tasks), where killing an IDLE executor with no
-    // state proves nothing — the scheduler replaces it invisibly and the
-    // probe reports NO-RETRY-RECORDED on a healthy build. The pgrep is
-    // scoped to THIS probe's executors via the applicationId that the
-    // backend carries on its command line (--app-id app-...) — an
-    // unscoped match could SIGKILL an executor of an unrelated concurrent
-    // Spark job on the same machine.
-    //
-    // Returns (fired, cancel): `fired` reports signal delivery; `cancel`
-    // aborts the 30 s busy-executor poll. A stale killer thread from a
-    // retried attempt could otherwise fire DURING a later query's
-    // clean-hash run — hash still converges (that is the probe's whole
-    // claim) but the unplanned loss injects nondeterministic
+    // An idle victim is replaced invisibly and the probe would report
+    // NO-RETRY-RECORDED on a healthy build. Each retried attempt cancels
+    // the previous poll: a stale one could otherwise fire DURING a later
+    // query's clean-hash run — hash still converges (that is the probe's
+    // whole claim) but the unplanned loss injects nondeterministic
     // failure/event counts into that query's report.
-    case class Injector(fired: java.util.concurrent.atomic.AtomicBoolean,
-                        cancel: java.util.concurrent.atomic.AtomicBoolean)
     def killOneExecutor(minTaskStarts: Int, signal: String = "-9")
-        : Injector = {
-      val appId = spark.sparkContext.applicationId
-      val baseline = taskStarts.get
-      val fired = new java.util.concurrent.atomic.AtomicBoolean(false)
-      val cancel = new java.util.concurrent.atomic.AtomicBoolean(false)
-      val t = new Thread(() => {
-        import scala.jdk.CollectionConverters._
-        val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-        // wait for a stage in full flight AND a specific busy executor
-        def busiest(): Option[String] = liveTasks.values.asScala
-          .filterNot(_ == "driver").groupBy(identity)
-          .view.mapValues(_.size).toSeq.sortBy(-_._2).headOption.map(_._1)
-        var victim: Option[String] = None
-        while ({
-          victim = if (taskStarts.get - baseline >= minTaskStarts)
-            busiest() else None
-          victim.isEmpty && !cancel.get && System.nanoTime() < deadline
-        }) Thread.sleep(20)
-        if (cancel.get) victim = None
-        victim.foreach { execId =>
-          // executor id -> pid via the --executor-id arg on the backend's
-          // command line, scoped to this app
-          val procs = scala.sys.process.Process(
-            Seq("pgrep", "-af", s"CoarseGrainedExecutorBackend.*$appId")).!!
-          val pid = procs.split("\n")
-            .find(_.contains(s"--executor-id $execId "))
-            .map(_.trim.split("\\s+")(0))
-          pid match {
-            case Some(p) =>
-              System.err.println(s"[retry] sending $signal to executor " +
-                s"id=$execId pid=$p (app $appId, " +
-                s"${liveTasks.values.asScala.count(_ == execId)} tasks running)")
-              scala.sys.process.Process(Seq("kill", signal, p)).!
-              fired.set(true)
-            case None => System.err.println(
-              s"[retry] no pid found for executor $execId (app $appId)")
-          }
-        }
-        if (victim.isEmpty && !cancel.get) System.err.println(
-          "[retry] no busy executor observed within 30s — nothing killed")
-      })
-      t.setDaemon(true); t.start(); Injector(fired, cancel)
-    }
+        : Chaos.Injector =
+      Chaos.signalBusiest(spark, census, signal, "retry", minTaskStarts)
 
     var bad = 0
     args.foreach { name =>
       val fn = SparkEntry.queries(name)
       val (cleanHash, cleanRows) = hashOf(fn(spark, sfDir))
       spark.catalog.clearCache() // a cache would mask the recompute path
-      taskFailures.set(0); fetchFailures.set(0); speculativeLaunches.set(0)
-      decomRemovals.set(0); migratedShuffleBlocks.set(0)
+      census.reset()
       val (chaosHash, chaosRows) =
         if (killMode) {
           // best-effort injection: on a fast machine the observed-busy
@@ -394,7 +263,7 @@ object RetryProbe {
           // same best-effort injection as kill mode: retry a chaos run
           // whose signal found no busy executor (fast warm stages can
           // drain between observation and delivery)
-          var lastInj: Option[Injector] = None
+          var lastInj: Option[Chaos.Injector] = None
           def oneDecomRun(): (String, Long) = {
             val inj = killOneExecutor(8, signal = "-PWR")
             lastInj = Some(inj)

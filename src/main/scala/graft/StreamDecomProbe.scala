@@ -1,11 +1,7 @@
 package graft
 
-import java.security.MessageDigest
 import java.sql.Timestamp
-import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
 
-import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
 
@@ -58,105 +54,20 @@ import org.apache.spark.sql.streaming.OutputMode
   */
 object StreamDecomProbe {
   def main(args: Array[String]): Unit = {
-    require(sys.env.get("SPARK_GRAFT_MASTER")
-      .exists(_.startsWith("local-cluster")),
+    require(GraftSession.clusterMode,
       "StreamDecomProbe needs SPARK_GRAFT_MASTER=local-cluster[...] " +
         "(decommission is an executor-process event; local mode has none)")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
     val batches = sys.env.getOrElse("SPARK_GRAFT_STREAM_BATCHES", "36").toInt
     val rows = sys.env.getOrElse("SPARK_GRAFT_STREAM_ROWS", "96").toInt
     val hosts = 97
-    val spark = MasterConfig(SparkSession.builder(), cpus)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        graft.streaming.Frontier.RocksDbProvider)
-      .config("spark.decommission.enabled", "true")
-      .config("spark.storage.decommission.enabled", "true")
-      .config("spark.storage.decommission.shuffleBlocks.enabled", "true")
-      .config("spark.storage.decommission.rddBlocks.enabled", "true")
-      .config("spark.executor.decommission.forceKillTimeout", "120s")
-      .config("spark.stage.ignoreDecommissionFetchFailure", "true")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession(GraftSession.cpus("8"), logLevel = "ERROR",
+      confs = ("spark.sql.streaming.stateStore.providerClass" ->
+        graft.streaming.Frontier.RocksDbProvider) +: Chaos.decommissionConfs)
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
 
-    val taskFailures = new AtomicInteger
-    val fetchFailures = new AtomicInteger
-    val decomRemovals = new AtomicInteger
-    val liveTasks = new java.util.concurrent.ConcurrentHashMap[Long, String]()
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskStart(ts: SparkListenerTaskStart): Unit =
-        liveTasks.put(ts.taskInfo.taskId, ts.taskInfo.executorId)
-      override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
-        if (te.reason != org.apache.spark.Success)
-          taskFailures.incrementAndGet()
-        if (te.reason.isInstanceOf[org.apache.spark.FetchFailed])
-          fetchFailures.incrementAndGet()
-        if (te.taskInfo != null) liveTasks.remove(te.taskInfo.taskId)
-      }
-      override def onExecutorRemoved(er: SparkListenerExecutorRemoved): Unit =
-        if (er.reason != null &&
-          er.reason.toLowerCase.contains("decommission"))
-          decomRemovals.incrementAndGet()
-    })
-
-    val base = Timestamp.valueOf("2024-01-01 00:00:00").getTime
-    // the STREAMBENCH batch shape: 70% fresh urls, 30% syndicated
-    // same-batch body copies under batch-namespaced paths
-    def batch(b: Int): Seq[(Long, String, String, Timestamp)] = {
-      val start = (b.toLong * 7 * rows) / 10
-      val dup = (3 * rows) / 10
-      def body(k: Long): String =
-        (0 until 40).map(j => "w" + ((k * 131 + j * 7) % 99991)).mkString(" ")
-      (0 until rows).map { i =>
-        val k = start + i
-        val path = if (i < dup) s"synd/$b/$k" else s"d/$k"
-        val u = ((k + b) % 4) match {
-          case 0 => s"http://host${k % hosts}.example.com/$path?a=1&b=2"
-          case 1 => s"HTTP://Host${k % hosts}.Example.COM:80/$path?b=2&a=1"
-          case 2 => s"http://host${k % hosts}.example.com/$path?a=1&b=2&utm_source=x"
-          case _ => s"http://host${k % hosts}.example.com/$path?a=1&b=2#frag"
-        }
-        val txt = if (i < dup) s"hdr$b fresh update " + body(k + dup)
-          else body(k)
-        (k, u, txt, new Timestamp(base + b * 30L * 60000 + (i % 1800) * 1000L))
-      }
-    }
-
-    def sigpwrBusiest(fired: AtomicBoolean, cancel: AtomicBoolean): Unit = {
-      val appId = spark.sparkContext.applicationId
-      val t = new Thread(() => {
-        import scala.jdk.CollectionConverters._
-        val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
-        def busiest(): Option[String] = liveTasks.values.asScala
-          .filterNot(_ == "driver").groupBy(identity)
-          .view.mapValues(_.size).toSeq.sortBy(-_._2).headOption.map(_._1)
-        var victim: Option[String] = None
-        while ({
-          victim = busiest()
-          victim.isEmpty && !cancel.get && System.nanoTime() < deadline
-        }) Thread.sleep(10)
-        if (cancel.get) victim = None
-        victim.foreach { execId =>
-          val procs = scala.sys.process.Process(
-            Seq("pgrep", "-af", s"CoarseGrainedExecutorBackend.*$appId")).!!
-          procs.split("\n").find(_.contains(s"--executor-id $execId "))
-            .map(_.trim.split("\\s+")(0)).foreach { pid =>
-              System.err.println(s"[sdecom] SIGPWR executor id=$execId " +
-                s"pid=$pid (mid-micro-batch, " +
-                s"${liveTasks.values.asScala.count(_ == execId)} live tasks)")
-              scala.sys.process.Process(Seq("kill", "-PWR", pid)).!
-              fired.set(true)
-            }
-        }
-      })
-      t.setDaemon(true); t.start()
-    }
+    val census = new Chaos.TaskCensus(spark.sparkContext)
+    import census.{decomRemovals, fetchFailures, taskFailures}
 
     case class RunResult(fullHash: String, projHash: String, rows: Long,
                          urls: Long, hostsRows: Long, chunks: Long)
@@ -175,15 +86,17 @@ object StreamDecomProbe {
       val q = fr.writeStream.outputMode(OutputMode.Append())
         .format("parquet").option("path", out)
         .option("checkpointLocation", ckpt).start()
-      val fired = new AtomicBoolean(false)
-      val cancel = new AtomicBoolean(false)
+      var inj: Option[Chaos.Injector] = None
       (0 until batches).foreach { b =>
-        if (chaos && b == batches / 3) sigpwrBusiest(fired, cancel)
-        fin.addData(batch(b))
+        if (chaos && b == batches / 3)
+          inj = Some(Chaos.signalBusiest(spark, census, "-PWR", "sdecom",
+            timeoutS = 60))
+        // the STREAMBENCH batch shape
+        fin.addData(StreamingBench.frontierBatch(b, rows, hosts))
         q.processAllAvailable()
       }
-      cancel.set(true)
-      if (chaos && fired.get) {
+      inj.foreach(_.cancel.set(true))
+      if (inj.exists(_.fired.get)) {
         // the victim exits only after its migration drains — poll
         val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
         while (decomRemovals.get < 1 && System.nanoTime() < deadline)
@@ -201,18 +114,13 @@ object StreamDecomProbe {
       val chunks = dedups.head._1.numRowsTotal
       val urls = dedups.last._1.numRowsTotal
       q.stop()
-      def md5(xs: Seq[String]): String = {
-        val md = MessageDigest.getInstance("MD5")
-        xs.foreach(r => md.update(r.getBytes("UTF-8")))
-        md.digest().map("%02x".format(_)).mkString
-      }
       val full = spark.read.parquet(out).collect().map(_.toString).sorted
       val proj = spark.read.parquet(out)
         .select(org.apache.spark.sql.functions.concat_ws("|",
           org.apache.spark.sql.functions.col("chunk_md5"),
           org.apache.spark.sql.functions.col("n_tokens")))
         .collect().map(_.getString(0)).sorted
-      RunResult(md5(full.toSeq), md5(proj.toSeq), full.length.toLong,
+      RunResult(Chaos.md5(full.toSeq), Chaos.md5(proj.toSeq), full.length.toLong,
         urls, hostsRows, chunks)
     }
 
@@ -222,7 +130,7 @@ object StreamDecomProbe {
     // full rows would read as a decommission bug
     val cleanA = run("cleanA", chaos = false)
     val cleanB = run("cleanB", chaos = false)
-    taskFailures.set(0); fetchFailures.set(0); decomRemovals.set(0)
+    census.reset()
     val chaos = run("chaos", chaos = true)
     def stateEq(a: RunResult, b: RunResult): Boolean =
       a.urls == b.urls && a.hostsRows == b.hostsRows && a.chunks == b.chunks

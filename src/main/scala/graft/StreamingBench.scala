@@ -2,7 +2,6 @@ package graft
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
@@ -24,20 +23,51 @@ import org.apache.spark.sql.streaming.OutputMode
   */
 object StreamingBench {
 
+  /** The crawl-frontier feed, shared with FrontierSoak and
+    * StreamDecomProbe: batch `b` of `rows` fetches over `hosts` hosts,
+    * event time advancing 30 min per batch. 70% fresh pages; the leading
+    * 30% are SYNDICATED copies of a later same-batch body under a
+    * distinct url with a fresh 3-token header. The spelling variant
+    * rotates with (k + b) % 4, so the urls are duplicates only after
+    * canonicalization. */
+  def frontierBatch(b: Int, rows: Int,
+                    hosts: Int): Seq[(Long, String, String, Timestamp)] = {
+    val base = Timestamp.valueOf("2024-01-01 00:00:00").getTime
+    val start = (b.toLong * 7 * rows) / 10
+    val dup = (3 * rows) / 10
+    def body(k: Long): String =
+      (0 until 40).map(j => "w" + ((k * 131 + j * 7) % 99991)).mkString(" ")
+    (0 until rows).map { i =>
+      val k = start + i
+      // syndicated copies live in a batch-namespaced /synd/ path: their
+      // leading-30% k range overlaps the PREVIOUS batch's keys (start
+      // advances by 0.7·rows), so a /d/$k spelling would canonicalize to
+      // an already-seen url and die at stage 1 — measured in r14 as zero
+      // stage-2 denials and an untouched stage-3 (frontier_state_urls =
+      // 4×3500, the fresh-row count). The fresh namespace keeps all rows
+      // flowing past the seen-set: ~rows/hosts fetches/host/window
+      // against the budget, and the syndicated bodies genuinely reach
+      // the chunk-dedup stage.
+      val path = if (i < dup) s"synd/$b/$k" else s"d/$k"
+      val u = ((k + b) % 4) match {
+        case 0 => s"http://host${k % hosts}.example.com/$path?a=1&b=2"
+        case 1 => s"HTTP://Host${k % hosts}.Example.COM:80/$path?b=2&a=1"
+        case 2 => s"http://host${k % hosts}.example.com/$path?a=1&b=2&utm_source=x"
+        case _ => s"http://host${k % hosts}.example.com/$path?a=1&b=2#frag"
+      }
+      val txt = if (i < dup) s"hdr$b fresh update " + body(k + dup)
+        else body(k)
+      (k, u, txt, new Timestamp(base + b * 30L * 60000 + (i % 1800) * 1000L))
+    }
+  }
+
   private def stateRows(q: org.apache.spark.sql.streaming.StreamingQuery): Long =
     Option(q.lastProgress).toSeq.flatMap(_.stateOperators.toSeq)
       .map(_.numRowsTotal).sum
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = MasterConfig(SparkSession.builder(), cpus)
-      .appName("graft-streaming-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(GraftSession.cpus("8"),
+      confs = Seq("spark.app.name" -> "graft-streaming-bench"))
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
 
@@ -343,40 +373,12 @@ object StreamingBench {
         k = 3, divisor = 4, maxLen = 8)
       val q9 = fr.writeStream.outputMode(OutputMode.Append())
         .format("noop").start()
-      def frontierBatch(b: Int): Seq[(Long, String, String, Timestamp)] = {
-        val start = (b.toLong * 7 * frRows) / 10
-        val dup = (3 * frRows) / 10
-        def body(k: Long): String =
-          (0 until 40).map(j => "w" + ((k * 131 + j * 7) % 99991)).mkString(" ")
-        (0 until frRows).map { i =>
-          val k = start + i
-          // syndicated copies live in a batch-namespaced /synd/ path:
-          // their leading-30% k range overlaps the PREVIOUS batch's keys
-          // (start advances by 0.7·frRows), so a /d/$k spelling would
-          // canonicalize to an already-seen url and die at stage 1 —
-          // measured in r14 as zero stage-2 denials and an untouched
-          // stage-3 (frontier_state_urls = 4×3500, the fresh-row count).
-          // The fresh namespace keeps all frRows rows flowing past the
-          // seen-set: ~frRows/hosts fetches/host/window against the
-          // budget, and the syndicated bodies genuinely reach the
-          // chunk-dedup stage.
-          val path = if (i < dup) s"synd/$b/$k" else s"d/$k"
-          val u = ((k + b) % 4) match {
-            case 0 => s"http://host${k % hosts}.example.com/$path?a=1&b=2"
-            case 1 => s"HTTP://Host${k % hosts}.Example.COM:80/$path?b=2&a=1"
-            case 2 => s"http://host${k % hosts}.example.com/$path?a=1&b=2&utm_source=x"
-            case _ => s"http://host${k % hosts}.example.com/$path?a=1&b=2#frag"
-          }
-          // leading 30%: a syndicated copy of a LATER same-batch body
-          // under this distinct url — novel header, duplicate body spans
-          val txt = if (i < dup) s"hdr$b fresh update " + body(k + dup)
-            else body(k)
-          (k, u, txt, new Timestamp(base + b * 30L * 60000 + (i % 1800) * 1000L))
-        }
+      def feed(b: Int): Unit = {
+        fin.addData(StreamingBench.frontierBatch(b, frRows, hosts)); q9.processAllAvailable()
       }
-      (0 until warm).foreach { b => fin.addData(frontierBatch(b)); q9.processAllAvailable() }
+      (0 until warm).foreach(feed)
       val t9 = System.nanoTime()
-      (warm until total).foreach { b => fin.addData(frontierBatch(b)); q9.processAllAvailable() }
+      (warm until total).foreach(feed)
       val fSec = (System.nanoTime() - t9) / 1e9
       val fRows = (total - warm).toLong * frRows
       val fOps = Option(q9.lastProgress).toSeq.flatMap(_.stateOperators.toSeq)

@@ -1,20 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val (Array(sfDir, outDir), only) = args.splitAt(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = MasterConfig(SparkSession.builder(), cpus)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(GraftSession.cpus("4"))
     new java.io.File(outDir).mkdirs()
     // optional trailing args filter the query set (local iteration only;
     // the driver always passes exactly two args and gets the full set).

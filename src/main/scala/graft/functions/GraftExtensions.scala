@@ -10,8 +10,9 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType, StringType}
   *
   * {{{
   *   spark-submit --conf spark.sql.extensions=graft.functions.GraftExtensions
-  *   // or programmatically:
-  *   SparkSession.builder().withExtensions(new GraftExtensions)
+  *   // or programmatically, on any session builder (graft.GraftSession
+  *   // does this for every main):
+  *   builder.withExtensions(new GraftExtensions)
   * }}}
   *
   * registers `vec_dot`, `vec_norm`, `vec_cosine` and `simhash32` so SQL

@@ -1,0 +1,55 @@
+package graft
+
+import org.apache.spark.sql.functions.col
+
+/** The one stage-metrics listener: counters read after the capped drain
+  * must hold the whole run (a read before the bus delivers the last stage
+  * would undercount the second run), and the per-stage rows must carry
+  * the same numbers as the totals. */
+class BenchTelemetrySpec extends SparkTestBase {
+
+  test("EntryCounters: drained shuffle counters are complete, repeatable " +
+    "and add up per stage") {
+    // a slow listener registered first delays every stage event on the
+    // shared bus queue, so a read that does not wait for the bus misses
+    // stages
+    val slow = new org.apache.spark.scheduler.SparkListener {
+      override def onStageCompleted(
+          ev: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
+        Thread.sleep(150)
+    }
+    spark.sparkContext.addSparkListener(slow)
+    val counters = new BenchTelemetry.EntryCounters(spark.sparkContext)
+    try {
+      def runOnce(): BenchTelemetry.StageRow = {
+        spark.range(0, 20000, 1, 4).groupBy((col("id") % 10).as("k")).count()
+          .write.format("noop").mode("overwrite").save()
+        counters.drain()
+        counters.totals
+      }
+      counters.drain(); counters.reset()
+      val first = runOnce()
+      val firstStages = counters.stages
+      counters.drain(); counters.reset()
+      val second = runOnce()
+      val secondStages = counters.stages
+
+      assert(first.shufRec > 0, first)
+      assert(first.shufRec == second.shufRec, (first, second))
+      assert(first.shufBytes > 0 && first.cpuNs > 0, first)
+      Seq(first -> firstStages, second -> secondStages).foreach {
+        case (t, rows) =>
+          assert(rows.nonEmpty)
+          assert(rows.map(_.shufRec).sum == t.shufRec)
+          assert(rows.map(_.shufBytes).sum == t.shufBytes)
+          assert(rows.map(_.cpuNs).sum == t.cpuNs)
+          assert(rows.map(_.tasks).sum == t.tasks)
+          assert(rows.map(_.peakMem).max == t.peakMem)
+          assert(t.memSpill >= 0 && t.diskSpill >= 0 && t.peakMem >= 0, t)
+      }
+    } finally {
+      counters.close()
+      spark.sparkContext.removeSparkListener(slow)
+    }
+  }
+}

@@ -1,9 +1,10 @@
 package graft
 
-/** Plan-shape regression locks for the scale-critical properties PlanAudit
-  * reports: pushdown reaching the scan, explicit broadcasts staying
-  * broadcast, map-only batteries staying shuffle-free, and no accidental
-  * cartesian/nested-loop blowups. These are the properties that make the
+/** Plan-shape regression locks for the scale-critical properties:
+  * pushdown reaching the scan, explicit broadcasts staying broadcast,
+  * map-only batteries staying shuffle-free, and no accidental
+  * cartesian/nested-loop blowups (`graft.Bench plans <q>` writes the full
+  * formatted plans and the executed shape summary for a closer look). These are the properties that make the
   * queries survive a 100× scale-up; a refactor that silently loses one
   * should fail here, not in production.
   *

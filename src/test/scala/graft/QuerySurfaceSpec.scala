@@ -10,7 +10,9 @@ package graft
   * (x_ivfpq_stored/append/serve*), whose query FUNCTIONS eagerly build
   * their memoized artefacts before returning a frame; for those this spec
   * also pays one build at sf0.001 (and a build failure surfaces here by
-  * query name, which is still the loud signal we want). Execution
+  * query name, which is still the loud signal we want). The same loop
+  * plans each query and fails on any executedPlan line that expands the
+  * tokenizer chain more than once. Execution
   * correctness stays with the driver's DuckDB compare and the per-operator
   * suites.
   */
@@ -18,17 +20,28 @@ class QuerySurfaceSpec extends SparkTestBase {
 
   private val dir = sf("sf0.001")
 
+  // the tokenizer chain; tokenize-once should be a named projection, so
+  // one plan line expanding it twice is per-row duplicate evaluation
+  private val tokenChain = "split\\(trim\\(regexp_replace\\(lower\\(".r
+
   test("every declared query analyzes against sf0.001") {
     val failures = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
       case (name, fn) =>
-        try { fn(spark, dir).queryExecution.analyzed; None }
+        try {
+          val qe = fn(spark, dir).queryExecution
+          qe.analyzed
+          val worst = qe.executedPlan.toString.linesIterator
+            .map(tokenChain.findAllIn(_).size).maxOption.getOrElse(0)
+          if (worst > 1) Some(s"$name: a plan line tokenizes $worst times")
+          else None
+        }
         catch { case e: Throwable =>
           Some(s"$name: ${Option(e.getMessage).getOrElse(e.getClass.getName).linesIterator.take(3).mkString(" | ")}")
         }
     }
     assert(failures.isEmpty,
-      s"\n${failures.size} declared queries fail analysis:\n" +
-        failures.mkString("\n"))
+      s"\n${failures.size} declared queries fail analysis or the " +
+        "tokenize-once check:\n" + failures.mkString("\n"))
     // constructing every query function persists several intermediate
     // frames (and the stored-index builds cache their artefacts) into the
     // SHARED test session — left in place they change later suites' plans

@@ -2,11 +2,11 @@
 # benchdiff.sh — self-adjudicating bench deltas.
 #
 # The per-round driver bench runs on a shared machine: r10/r11/r14 all
-# carried 2-16x load-pollution spikes on code-UNCHANGED entries that a
-# judge had to refute by hand with isolated BenchSubset re-runs. This
+# carried 2-16x load-pollution spikes on code-UNCHANGED entries that had
+# to be refuted by hand with isolated single-query re-runs. This
 # script makes that adjudication self-serve: diff two bench artifacts,
 # flag suspicious regressions on entries whose code did not change,
-# re-run exactly those through BenchSubset on the current checkout, and
+# re-run exactly those through `graft.Bench run` on the current checkout, and
 # emit the adjudication table for BENCHNOTES.
 #
 # Usage:
@@ -139,7 +139,7 @@ def load_suspect(name):
     # tiny stages; full-surface sweep, r18), while a 2x+ steal episode
     # halves any entry's cw (fixed CPU work, doubled wall) — and this
     # rule only sees entries ALREADY >1.5x over their old number, so a
-    # false suspect costs one BenchSubset re-run, not a verdict.
+    # false suspect costs one isolated re-run, not a verdict.
     cw = t.get("cw")
     if cw is not None and 0 <= cw < 0.6: reasons.append(f"cw={cw}")
     return ",".join(reasons) or None
@@ -200,8 +200,8 @@ print(' '.join(n for n,_,_,v in rows
 
 # Phase 2: isolated re-runs of the flagged entries.
 if [ -n "$FLAGS" ] && [ "$RERUN" = "1" ]; then
-  echo "re-running flagged entries through BenchSubset: $FLAGS" >&2
-  SPARK_GRAFT_SF_DIR="$SF" sbt -batch "runMain graft.BenchSubset $FLAGS" \
+  echo "re-running flagged entries through graft.Bench run: $FLAGS" >&2
+  SPARK_GRAFT_SF_DIR="$SF" sbt -batch "runMain graft.Bench run $FLAGS" \
     2>/dev/null | grep -o '\[benchsub\] .*' > "$TMP/rerun.txt" || true
 fi
 touch "$TMP/rerun.txt"

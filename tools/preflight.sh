@@ -11,6 +11,16 @@
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
+# one session factory: every main builds its SparkSession through
+# graft.GraftSession, so a copied builder cannot grow back
+builders=$(grep -rn "SparkSession.builder()" src/main --include='*.scala' \
+  | grep -v "^src/main/scala/graft/GraftSession.scala:" || true)
+if [[ -n "$builders" ]]; then
+  echo "PREFLIGHT FAIL: SparkSession.builder() outside graft.GraftSession:" >&2
+  echo "$builders" >&2
+  exit 1
+fi
+
 out=$(mktemp -d)
 sbt -batch test 2>&1 | tee "$out/test.log" | grep -E "Tests:|All tests" || true
 grep -q "All tests passed." "$out/test.log" || {
