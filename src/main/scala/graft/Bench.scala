@@ -71,7 +71,9 @@ object Bench {
     * (the r18 verdict's binding gap): cpu_s = process-CPU seconds of the
     * quoted min rep, plus per-entry shuffle-write records and executor-CPU
     * seconds from stage metrics. benchdiff emits LOAD-SUSPECT from these
-    * fields alone and adjudicates round-over-round on cpu_s FIRST. */
+    * fields alone and adjudicates round-over-round on cpu_s FIRST.
+    * `compiles` is the Janino compile count over the measured reps, 0 for
+    * an entry whose generated code stays in the codegen cache. */
   private def sweep(spark: SparkSession, sfDir: String, cpus: String,
                     reps: Int): Unit = {
     val loadStart = la1()
@@ -92,7 +94,8 @@ object Bench {
         "\"" + k + "\":{\"la\":" + fmt(m.la, 1) + ",\"spread\":" + fmt(m.spread, 2) +
           ",\"cw\":" + fmt(m.cw, 2) + ",\"cpu_s\":" + fmt(m.cpuS, 3) +
           ",\"xcpu_s\":" + fmt(m.xcpuS, 3) + ",\"shuf_rec\":" +
-          m.perRep(m.totals.shufRec) + ",\"cold_s\":" + fmt(m.cold, 3) + "}"
+          m.perRep(m.totals.shufRec) + ",\"cold_s\":" + fmt(m.cold, 3) +
+          ",\"compiles\":" + m.compiles + "}"
       }.mkString("{", ",", "}")
       val (stealPct, iowaitPct) = BenchTelemetry.stealIowaitPct(
         jiffiesStart, BenchTelemetry.cpuJiffies())
@@ -129,7 +132,9 @@ object Bench {
   }
 
   /** `run`: one `[benchsub]` line per query with the min-of-reps wall,
-    * every stage counter per measured rep and the result's row count,
+    * every stage counter per measured rep, the result's row count and the
+    * Janino compiles over the measured reps (`compiles=`, 0 when every
+    * generated class hit the codegen cache),
     * then the `[stage]` rows of the measured reps in completion order
     * (SPARK_GRAFT_REPS=1 gives one rep's stages). cw/cpu_s
     * (process-CPU/wall of the min rep) are only printed when the
@@ -164,6 +169,7 @@ object Bench {
         s" mem_spill_mb=${perRepMb(t.memSpill)} disk_spill_mb=${perRepMb(t.diskSpill)}" +
         s" peak_mem_mb=${fmt(t.peakMem / mb, 1)} gc_s=${fmt(t.gcMs / 1e3, 2)}" +
         s" run_s=${fmt(t.runMs / 1e3, 2)} stages=${m.stages.size}" +
+        s" compiles=${m.compiles}" +
         m.error.map(e => s" failed=${m.failed} err=$e").getOrElse(""))
       m.stages.foreach { s =>
         println(f"[stage] $name stage=${s.id}%4d tasks=${s.tasks}%3d " +

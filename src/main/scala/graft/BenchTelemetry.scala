@@ -181,15 +181,23 @@ object BenchTelemetry {
     * the OS bean is unavailable). */
   final case class Rep(wall: Double, cpuS: Double)
 
+  /** Janino compiles so far in this JVM (Spark's static codegen counter:
+    * driver and, on a local master, executor compiles; under local-cluster
+    * the executors' own compiles are not counted). */
+  def compiles(): Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
   /** One entry measured by [[measure]]. `reps` holds the successful
     * measured reps in run order; a failed rep is left out of it (a
     * transiently failing rep returns FAST, and under min-of-reps a
     * failed-but-timed rep would silently LOWER the headline min). -1 is
     * the explicit error marker when no rep succeeded — never a fabricated
-    * elapsed time. */
+    * elapsed time. `compiles` counts the Janino compiles over the measured
+    * reps: the warm-up compiled every class the plan needs, so a nonzero
+    * count means generated code missed Spark's codegen cache. */
   final case class Measured(warm: Option[Rep], reps: Seq[Rep], failed: Int,
                             la: Double, stages: Seq[StageRow],
-                            error: Option[String]) {
+                            error: Option[String], compiles: Long) {
     private val best = reps.minByOption(_.wall)
     /** min wall across the measured reps */
     def wall: Double = best.fold(-1.0)(_.wall)
@@ -255,10 +263,12 @@ object BenchTelemetry {
     counters.drain(); counters.reset()
     freeCachedBlocks(spark)
     val la = la1() // sampled between entries: foreign load >> cpus
+    val compiles0 = compiles()
     val times = (1 to reps).flatMap(_ => once())
+    val compiled = compiles() - compiles0
     counters.drain()
     val stages = counters.stages
     freeCachedBlocks(spark)
-    Measured(warm, times, reps - times.size, la, stages, error)
+    Measured(warm, times, reps - times.size, la, stages, error, compiled)
   }
 }

@@ -4,9 +4,10 @@ import org.apache.spark.sql.SparkSession
 
 /** The one SparkSession factory for every main in this package. Shared
   * config: `local[cpus]`, shuffle partitions = cpus, UTC, ANSI off, AQE
-  * on, UI off, [[graft.functions.GraftExtensions]] (Spark's
-  * session-extension hook, owned here rather than copied into each main)
-  * and the log level. Callers add their own confs on top.
+  * on, UI off, a codegen cache of `CodegenCacheEntries` entries,
+  * [[graft.functions.GraftExtensions]] (Spark's session-extension hook,
+  * owned here rather than copied into each main) and the log level.
+  * Callers add their own confs on top.
   *
   * `SPARK_GRAFT_MASTER` overrides the master for every main — the lever
   * that turns any of them into MULTI-EXECUTOR evidence. `local[n]` is one
@@ -28,6 +29,24 @@ import org.apache.spark.sql.SparkSession
   * forwarded explicitly: the full driver classpath (app classes + the
   * Spark jars) and the launcher's own default module options. */
 object GraftSession {
+  /** Spark's codegen cache size (a static conf, default 100 entries, keyed
+    * by class loader and generated source). At 100 a plan that generates
+    * more classes than the cache holds evicts its own classes and compiles
+    * them again on every run. Measured on a 4-vCPU VM, `local[4]`, sf0.1:
+    *   - `graft.Bench run`, Janino compiles over 3 warm reps for
+    *     q_ep3_pipeline / x_ivfpq_batch / x_contain_join: 81/360/8 at 100
+    *     entries, 0/12/12 at 250, 0/14/4 at 400, 0/4/4 and 0/16/8 in two
+    *     runs at 1000;
+    *   - the `graft.Bench` sweep, one rep per entry: 623 warm compiles at
+    *     100, 174 at 1000;
+    *   - a warm perfbench `alerts_pipeline` cycle (the conf passed as a JVM
+    *     system property): 155 compiles at 100, 0 at 250, 400 and 1000;
+    *     with its 24 JSON documents rendered as distributed jobs, 258 at
+    *     100, 162 at 250 and 0 at 400.
+    * The compiles left at 1000 vary between runs: generated source that
+    * differs from run to run, which no cache size removes. */
+  private val CodegenCacheEntries = 1000
+
   /** `SPARK_GRAFT_CPUS`, else the caller's default. */
   def cpus(default: String): String = sys.env.getOrElse("SPARK_GRAFT_CPUS", default)
 
@@ -61,7 +80,8 @@ object GraftSession {
       "spark.sql.session.timeZone" -> "UTC",
       "spark.sql.ansi.enabled" -> "false",
       "spark.sql.adaptive.enabled" -> "true",
-      "spark.ui.enabled" -> "false")
+      "spark.ui.enabled" -> "false",
+      "spark.sql.codegen.cache.maxEntries" -> CodegenCacheEntries.toString)
     val spark = (cluster ++ shared ++ confs)
       .foldLeft(SparkSession.builder().master(m)) { case (b, (k, v)) =>
         b.config(k, v)

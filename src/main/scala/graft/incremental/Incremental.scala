@@ -35,11 +35,16 @@ object Incremental {
   def workLimit(df: DataFrame, order: Seq[Column], limit: Int): DataFrame =
     df.orderBy(order: _*).limit(limit)
 
-  /** Op-14: merge freshly-computed rows with retained cache; skip entirely
-    * when there is no new work ("opportunistic skip",
-    * `ServiceAlertBase.py:176-185`). */
-  def mergeOrSkip(fresh: DataFrame, kept: DataFrame): Option[DataFrame] =
-    if (fresh.isEmpty) None else Some(fresh.unionByName(kept, allowMissingColumns = true))
+  /** Op-14: merge freshly-computed rows with the retained cache, lazily:
+    * building the merge runs no job, and a fresh side that is empty leaves
+    * the kept rows, with nulls in the columns only `fresh` has. The
+    * reference's "opportunistic skip" (`ServiceAlertBase.py:176-185`) is a
+    * sink decision, taken on a bounded or persisted frame (the streaming
+    * form skips on its persisted `changed` set): testing `fresh` here
+    * would run its whole lineage — the drafting boundary, the geocode
+    * cascade — once for the test and again for the write. */
+  def merge(fresh: DataFrame, kept: DataFrame): DataFrame =
+    fresh.unionByName(kept, allowMissingColumns = true)
 
   /** Op-15 (`ServiceAlertAugmenter.py:548-570`): when fewer than `want` new
     * rows arrived, backfill with cached rows that still miss a derived value:

@@ -4,6 +4,7 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, struct, to_json}
 
 /** JSON document sink: serialise a (small, serving-layer) DataFrame to one
   * JSON array document — the reference's `orient='records'` S3 PUT
@@ -14,12 +15,22 @@ import org.apache.spark.sql.DataFrame
   * 100 TB the inputs upstream stay distributed; only the post-filter
   * serving rows (thousands) pass through the driver. For large exports use
   * `df.write.json` instead.
+  *
+  * Rendering is a `to_json(struct(*))` projection plus `collect()`, which
+  * writes the same bytes as `df.toJSON` (same generator, same session time
+  * zone, null fields dropped). Unlike `toJSON`'s typed `mapPartitions`, the
+  * projection is an expression: over a local frame (the
+  * [[graft.serve.Broadcaster.fanOut]] documents) Catalyst's
+  * `ConvertToLocalRelation` folds the filters and the projection, so the
+  * document renders on the driver with no Spark job and no generated code.
+  * A distributed frame still renders in one job.
   */
 object JsonDocumentSink {
 
   /** Render as a single JSON array string (records orient, ISO dates). */
   def renderDocument(df: DataFrame): String =
-    df.toJSON.collect().mkString("[", ",", "]")
+    df.select(to_json(struct(col("*")))).collect()
+      .map(_.getString(0)).mkString("[", ",", "]")
 
   /** Filename contract mirroring ServiceAlertOutputFileConfig
     * (ServiceAlertBroadcaster.py:24-40): {version}/{prefix}-{window}-

@@ -308,7 +308,7 @@ object GeoQueries {
     // Ops 12+14: unchanged cache rows ride through; fresh overrides
     val kept = Incremental.cacheRetain(cache, cur, Seq("id", "ck"))
       .select(col("id"), col("tweet_text"), lit("kept").as("src"))
-    Incremental.mergeOrSkip(fresh, kept).get
+    Incremental.merge(fresh, kept)
       .select(col("id"), col("src"), col("tweet_text"), col("toot_text"),
         col("resolution"), col("fp_area"), col("inferred_cells"),
         col("image_filename"))

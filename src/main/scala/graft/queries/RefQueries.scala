@@ -705,7 +705,7 @@ object RefQueries {
       .select(col("o_orderkey"), lit("fresh").as("src"))
     val kept = o.where(col("o_orderkey") % 100 =!= 0 && col("o_orderkey") % 3 === 0)
       .select(col("o_orderkey"), lit("kept").as("src"))
-    Incremental.mergeOrSkip(fresh, kept).get
+    Incremental.merge(fresh, kept)
       .groupBy(col("src")).agg(count(lit(1)).as("n"))
   }
 

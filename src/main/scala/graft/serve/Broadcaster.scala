@@ -51,25 +51,32 @@ object Broadcaster {
       .where(col(plannedCol) === lit(planned))
       .select(cols.map(col): _*)
 
-  /** The full fan-out: cache the input once, then 24 cheap filtered
-    * projections over the cached scan — each result is written as one JSON
-    * document (Op-6). Without the persist every returned frame would re-read
-    * the source when its consumer materialises it (24 full scans at serving
-    * time); with it the scan happens once, on first use. Callers that own a
-    * longer-lived cache of `alerts` pay nothing extra (CacheManager dedups
-    * by plan). Release path: the cache is registered on the `alerts` frame
-    * the caller passed in — call `alerts.unpersist()` after the 24 documents
-    * are written (a per-refresh-cycle caller that never does accumulates one
-    * cache entry per distinct input plan). */
+  /** The full fan-out: the serving rows are collected ONCE, in one job,
+    * and the 24 frames are filtered projections over that local relation.
+    * Rendering one of them ([[graft.io.JsonDocumentSink]]) then runs on the
+    * driver with no job and no generated code; over the distributed input
+    * every document would be a job with its own generated classes.
+    *
+    * Driver memory: the rows collected here are rows the sinks collect
+    * anyway — the two `All`-window `v1.2` documents between them hold
+    * every row with every served column — plus the expiry and planned
+    * columns the predicates read. Nothing is persisted (a persisted input
+    * keeps every column in the block manager, which on a local master is
+    * the driver heap too), so there is no cache entry for the caller to
+    * release. */
   def fanOut(alerts: DataFrame, baseCols: Seq[String], now: Timestamp,
              windows: Seq[TimeWindow] = Seq(All, Last7Days, Current),
              planneds: Seq[Boolean] = Seq(true, false),
              versions: Seq[String] = Seq("v0", "v1", "v1.1", "v1.2"))
   : Map[(TimeWindow, Boolean, String), DataFrame] = {
-    val cached = alerts.persist()
+    val needed = (versions.flatMap(versionColumns(baseCols, _)) ++
+      Seq("expiry_date", "planned")).distinct
+    val serving = alerts.select(needed.map(col): _*)
+    val local = alerts.sparkSession.createDataFrame(
+      java.util.Arrays.asList(serving.collect(): _*), serving.schema)
     val combos = for { w <- windows; p <- planneds; v <- versions } yield (w, p, v)
     combos.map { case (w, p, v) =>
-      (w, p, v) -> serve(cached, w, p, versionColumns(baseCols, v), now)
+      (w, p, v) -> serve(local, w, p, versionColumns(baseCols, v), now)
     }.toMap
   }
 }

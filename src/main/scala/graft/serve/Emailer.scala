@@ -125,8 +125,11 @@ object Emailer {
   }
 
   /** Full pass: for every config, the unsent matching alerts with their
-    * rendered documents and idempotency keys. One cached scan fans out to
-    * all configs (the reference loops ~120 configs over one frame). */
+    * rendered documents and idempotency keys (the reference loops ~120
+    * configs over one frame). Each returned frame is a lazy filter of
+    * `alerts` and nothing is cached, so every frame a caller materialises
+    * evaluates `alerts` again: persist it (or pass a local frame) before
+    * writing many configs' frames. */
   def fanOut(alerts: DataFrame, configs: Seq[EmailConfig],
              sentKeys: DataFrame): Map[String, DataFrame] =
     configs.map { cfg =>

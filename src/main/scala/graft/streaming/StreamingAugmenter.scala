@@ -47,7 +47,7 @@ import graft.io.StageStore
   *     retried, never lost.
   *   - **cache merge** (Ops 12+14): the enriched rows upsert into a
   *     [[graft.io.StageStore]] — fresh rows override, unmatched cached rows
-  *     ride through (`Incremental.mergeOrSkip` semantics), and the store's
+  *     ride through (`Incremental.merge` semantics), and the store's
   *     commit-marker versioning makes each micro-batch's merge an atomic
   *     publish. Replay safety: the rollback dir for a batch is published
   *     once under the same commit-marker convention (deterministic

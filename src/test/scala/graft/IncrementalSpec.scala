@@ -22,11 +22,28 @@ class IncrementalSpec extends SparkTestBase {
     assert(diff.count() + retain.count() == data.count())
   }
 
-  test("Op-14 merge skips when no fresh rows") {
-    val empty = ck(Seq.empty[(Long, String)])
-    val kept = ck(Seq(1L -> "a"))
-    assert(Incremental.mergeOrSkip(empty, kept).isEmpty)
-    assert(Incremental.mergeOrSkip(kept, empty).get.count() == 1)
+  test("Op-14 merge is lazy: no fresh rows leaves the kept rows (fresh-only " +
+    "columns null); building it runs no job") {
+    val kept = ck(Seq(1L -> "a", 2L -> "b"))
+    val noFresh = ck(Seq.empty[(Long, String)]).withColumn("drafted", lit("x"))
+    val got = Incremental.merge(noFresh, kept)
+      .as[(Long, String, String, Option[String])].collect().sortBy(_._1).toSeq
+    assert(got == kept.as[(Long, String, String)].collect().sortBy(_._1).toSeq
+      .map { case (id, v, c) => (id, v, c, None) })
+    // the fresh side stands in for the enrichment chain, counting each row
+    // where it is computed: building the merge runs no job, and one action
+    // runs it once per row (testing it for emptiness first would run it again)
+    val enriched = spark.sparkContext.longAccumulator("fresh rows enriched")
+    val fresh = ck(Seq(3L -> "c", 4L -> "d", 5L -> "e"))
+      .as[(Long, String, String)].mapPartitions { rows =>
+        rows.map { r => enriched.add(1); r }
+      }.toDF("id", "v", "ck")
+    val (merged, jobs) = jobsDuring(Incremental.merge(fresh, kept))
+    assert(jobs == 0)
+    assert(enriched.sum == 0)
+    assert(merged.select("id").as[Long].collect().sorted.toSeq ==
+      Seq(1L, 2L, 3L, 4L, 5L))
+    assert(enriched.sum == 3)
   }
 
   test("Op-9 checksum is stable under column reorder") {

@@ -623,6 +623,15 @@ class PlanSpec extends SparkTestBase {
     assert(countIn(p, "SortMergeJoin") === 0, p)
   }
 
+  test("ep3 composed pipeline: building the frame runs no more than the " +
+    "two parquet schema reads — the enrichment chain runs only at the write") {
+    val (_, jobs) = jobsDuring(SparkEntry.queries("q_ep3_pipeline")(spark, dir))
+    // `customer` and `nation` each infer their schema with one job; an
+    // eager test of the fresh side would run the drafting boundary, the
+    // geocode cascade and the overlay here and again at the write
+    assert(jobs <= 2, s"$jobs jobs while building q_ep3_pipeline")
+  }
+
   test("residual ivf-pq: the query path never shuffles data — centroid/" +
     "probe joins ride broadcasts, top-k is TakeOrderedAndProject") {
     val p = plan("x_ivfpq_res")

@@ -20,6 +20,36 @@ trait SparkTestBase extends AnyFunSuite {
       case (k, None)    => conf.unset(k)
     }
   }
+
+  /** Run `body` and count the Spark jobs it starts. The listener bus is
+    * asynchronous but delivers job starts in submission order, so a marker
+    * job run after `body` bounds the count: once the marker's start is
+    * delivered, every job `body` started has been seen. */
+  def jobsDuring[T](body: => T): (T, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val marker = "graft.test.marker"
+    val starts = new java.util.concurrent.LinkedBlockingQueue[java.lang.Boolean]()
+    val listener = new SparkListener {
+      override def onJobStart(ev: SparkListenerJobStart): Unit =
+        starts.add(Option(ev.properties).exists(_.getProperty(marker) != null))
+    }
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      sc.setLocalProperty(marker, "1")
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty(marker, null)
+      var jobs = 0
+      var seen = false
+      while (!seen) {
+        val isMarker = starts.poll(30, java.util.concurrent.TimeUnit.SECONDS)
+        assert(isMarker != null, "the marker job's start was never delivered")
+        if (isMarker.booleanValue) seen = true else jobs += 1
+      }
+      (out, jobs)
+    } finally sc.removeSparkListener(listener)
+  }
 }
 
 object SparkTestBase {

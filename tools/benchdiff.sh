@@ -55,6 +55,10 @@
 #   NEW              entry absent from OLD (not re-run)
 #   MISSING-FROM-NEW entry existed in OLD but vanished from NEW — an
 #                    errored run or a dropped registry entry; never silent
+# A re-run entry also shows compiles=OLD/RERUN: the Janino compiles over
+# the measured reps in the old snapshot ('-' when the snapshot predates the
+# field) and in the re-run — a nonzero count is generated code missing
+# Spark's codegen cache (ROADMAP item 2), a cost that moves wall and cpu_s.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
@@ -211,12 +215,21 @@ python3 - "$TMP" <<'PYEOF'
 import json, re, sys
 tmp = sys.argv[1]
 rows = json.load(open(f"{tmp}/rows.json"))
-rerun = {}
+rerun, recomp = {}, {}
 for line in open(f"{tmp}/rerun.txt"):
     m = re.search(r"\[benchsub\] (\S+) .*min=([0-9.]+)", line)
     if m: rerun[m.group(1)] = float(m.group(2))
-print("| entry | old (s) | new artifact (s) | isolated re-run min (s) | verdict |")
-print("|---|---|---|---|---|")
+    c = re.search(r"\[benchsub\] (\S+) .* compiles=(\d+)", line)
+    if c: recomp[c.group(1)] = c.group(2)
+# warm Janino compiles over the measured reps: the old snapshot's per-entry
+# `compiles` field (absent before it was recorded: '-') and the re-run's
+od = json.load(open(f"{tmp}/old.json"))
+otel = (od.get("parsed") or od).get("telemetry") or {}
+def old_compiles(name):
+    c = otel.get(name, {}).get("compiles")
+    return "-" if c is None else str(c)
+print("| entry | old (s) | new artifact (s) | isolated re-run min (s) | compiles old/re-run | verdict |")
+print("|---|---|---|---|---|---|")
 n_noise = n_real = n_sus = n_win = 0
 for name, ov, nv, verdict in rows:
     rr = rerun.get(name)
@@ -241,7 +254,9 @@ for name, ov, nv, verdict in rows:
     o = "-" if ov is None else f"{ov:.2f}"
     r = "-" if rr is None else f"{rr:.2f}"
     nvs = "-" if nv is None else f"{nv:.2f}"
-    print(f"| {name} | {o} | {nvs} | {r} | {verdict} |")
+    comp = (f"compiles={old_compiles(name)}/{recomp.get(name, '-')}"
+            if rr is not None else "-")
+    print(f"| {name} | {o} | {nvs} | {r} | {comp} | {verdict} |")
 print()
 # run-level machine state (r18+ artifacts): a nonzero steal percent
 # convicts the whole run's machine, not just individual entries
