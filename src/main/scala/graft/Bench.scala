@@ -55,12 +55,13 @@ object Bench {
   private def noop(df: DataFrame): Unit =
     df.write.format("noop").mode("overwrite").save()
 
-  /** The headline sweep. The printed line is COMPACT (r19 lesson: a
-    * stdout tail capture truncated a ~25 KB telemetry-bearing line into
-    * `parsed: null` for BOTH rounds), so it carries only
-    * {metric,value,queries,...}; the full per-entry telemetry lives in
-    * BENCH_LAST.json, which is rewritten INCREMENTALLY after every entry
-    * so a killed run leaves a per-entry trail instead of nothing.
+  /** The sweep's last stdout line ([[summaryLine]]): totals only, so its
+    * size does not grow with the entry count (a stdout tail capture
+    * truncated the ~25 KB telemetry-bearing line and, later, the ~3.8 KB
+    * per-entry `queries` map into `parsed: null`). The per-entry detail
+    * lives in BENCH_LAST.json, which keeps every key and is rewritten
+    * INCREMENTALLY after every entry so a killed run leaves a per-entry
+    * trail instead of nothing.
     *
     * Load telemetry: the bench runs on a shared machine, and every round
     * since r14 has carried phantom spikes that had to be adjudicated by
@@ -88,7 +89,6 @@ object Bench {
     def queriesJson: String = done.map { case (k, m) =>
       "\"" + k + "\":" + fmt(m.wall, 3)
     }.mkString("{", ",", "}")
-    def total: Double = done.map(_._2.wall).filter(_ >= 0).sum // skip -1 markers
     def writeSnapshot(partial: Boolean): Unit = {
       val tel = done.map { case (k, m) =>
         "\"" + k + "\":{\"la\":" + fmt(m.la, 1) + ",\"spread\":" + fmt(m.spread, 2) +
@@ -99,14 +99,12 @@ object Bench {
       }.mkString("{", ",", "}")
       val (stealPct, iowaitPct) = BenchTelemetry.stealIowaitPct(
         jiffiesStart, BenchTelemetry.cpuJiffies())
-      val line =
-        s"""{"metric":"total","value":${fmt(total, 3)},"unit":"sec",""" +
-          s""""queries":$queriesJson,"telemetry":$tel,""" +
+      val line = summaryLine(done.toSeq, cpus, reps, sfDir,
+        s""","queries":$queriesJson,"telemetry":$tel,""" +
           s""""load_start":${fmt(loadStart, 2)},"load_end":${fmt(la1(), 2)},""" +
           s""""steal_pct":${fmt(stealPct, 2)},""" +
           s""""iowait_pct":${fmt(iowaitPct, 2)},""" +
-          s""""wall_s":${elapsed()},"partial":$partial,""" +
-          s""""cpus":$cpus,"reps":$reps,"sf":"$sfDir"}"""
+          s""""wall_s":${elapsed()},"partial":$partial""")
       try Files.writeString(outPath, line + "\n")
       catch { case _: Throwable => () } // read-only cwd must not fail the run
     }
@@ -126,9 +124,20 @@ object Bench {
           s" cold=${fmt(m.cold, 2)} blocks=${BenchTelemetry.storageBlocks(spark)}")
     }
     writeSnapshot(partial = false)
-    println(
-      s"""{"metric":"total","value":${fmt(total, 3)},"unit":"sec",""" +
-        s""""queries":$queriesJson,"cpus":$cpus,"reps":$reps,"sf":"$sfDir"}""")
+    println(summaryLine(done.toSeq, cpus, reps, sfDir))
+  }
+
+  /** The sweep's totals as one JSON object: `value` is the summed
+    * min-of-reps wall (entries with no successful rep excluded), `failed`
+    * the entries with at least one failed measured rep. `more` appends
+    * further `,"key":value` members (the BENCH_LAST.json detail). */
+  private[graft] def summaryLine(done: Seq[(String, BenchTelemetry.Measured)],
+                                 cpus: String, reps: Int, sf: String,
+                                 more: String = ""): String = {
+    val total = done.map(_._2.wall).filter(_ >= 0).sum // skip -1 markers
+    s"""{"metric":"total","value":${fmt(total, 3)},"unit":"sec",""" +
+      s""""entries":${done.size},"failed":${done.count(_._2.failed > 0)},""" +
+      s""""cpus":$cpus,"reps":$reps,"sf":"$sf"$more}"""
   }
 
   /** `run`: one `[benchsub]` line per query with the min-of-reps wall,

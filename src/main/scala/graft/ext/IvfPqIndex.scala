@@ -52,21 +52,15 @@ object IvfPqIndex {
             nlist: Int, kmeansIters: Int, m: Int, ksub: Int, pqIters: Int,
             codesTable: String, basePath: String,
             numBuckets: Int = 0): Stored = {
-    val s = corpus.sparkSession
-    import s.implicits._
     val buckets = if (numBuckets > 0) numBuckets else nlist
-    val ctr = SimilarityOps.trainCentroids(corpus, idCol, vecCol, nlist,
-      kmeansIters)
-    val res = SimilarityOps.withResiduals(
-      SimilarityOps.ivfAssign(corpus, idCol, vecCol, ctr), vecCol, ctr)
-    val cb = PqOps.train(res, idCol, "__res", m, ksub, pqIters)
+    val (ctr, res, cb) = SimilarityOps.trainResidualPq(corpus, idCol, vecCol,
+      nlist, kmeansIters, m, ksub, pqIters)
     val enc = PqOps.withCodes(res, "__res", cb)
       .select(col("centroid_id"), col(idCol), col("codes"))
     BucketedStore.writeBucketed(enc, codesTable, "centroid_id", buckets,
       s"$basePath/codes")
     ctr.write.mode(SaveMode.Overwrite).parquet(s"$basePath/centroids")
-    cb.words.toSeq.map { case ((sub, c), w) => (sub, c, w) }
-      .toDF("sub", "code", "w")
+    PqOps.codebookFrame(corpus.sparkSession, cb)
       .coalesce(1) // m×ksub rows — one file beats a task's worth of shards
       .write.mode(SaveMode.Overwrite).parquet(s"$basePath/codebook")
     Stored(codesTable, s"$basePath/centroids", s"$basePath/codebook")

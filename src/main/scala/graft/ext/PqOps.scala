@@ -1,6 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Product quantization (Jégou, Douze & Schmid 2011, "Product Quantization
@@ -37,13 +37,19 @@ object PqOps {
   import SimilarityOps.dot
 
   /** round(squared L2, 6) from three portable dot products. */
-  private def sqDist(a: Column, b: Column): Column =
+  private[graft] def sqDist(a: Column, b: Column): Column =
     round(dot(a, a) + dot(b, b) - lit(2.0) * dot(a, b), 6)
 
   /** A trained codebook: (sub, code, codeword) with code 1..ksub per
     * subspace, codeword length d/m. */
   final case class Codebook(m: Int, dsub: Int, ksub: Int,
                             words: Map[(Int, Int), Seq[Double]])
+
+  /** The m×ksub codewords of `cb` as a local (sub, code, w) frame. */
+  private[ext] def codebookFrame(spark: SparkSession, cb: Codebook): DataFrame = {
+    import spark.implicits._
+    cb.words.toSeq.map { case ((s, c), w) => (s, c, w) }.toDF("sub", "code", "w")
+  }
 
   /** All m nearest-codeword ids (1-based) in one native pass — smallest
     * rounded squared distance, ties to the smaller code. */
@@ -119,6 +125,21 @@ object PqOps {
         array_sort(collect_list(struct(col("sub"), col("code"), col("__d2")))),
         t => t.getField("__d2")).as("__darr"))
 
+  /** The ADC distance tables, one `__darr` row per key of `side`: for every
+    * (keys…, sub, code), round(|q|² + |w|² − 2q·w, 6) between `qv` (a
+    * query-side vector column of `side`) sliced to subspace `sub` and that
+    * codeword — computed IN Spark, so rounding is the engine's own — then
+    * collapsed by [[dtabArray]]. One crossJoin against the broadcast
+    * codebook computes every key's whole m×ksub table; `side` is
+    * parameter-bounded (one query, its probed cells, or queries × probes). */
+  private[ext] def adcTables(side: DataFrame, keys: Seq[String], qv: Column,
+                             cb: Codebook): DataFrame = {
+    val sv = slice(qv, col("sub") * cb.dsub + 1, lit(cb.dsub))
+    dtabArray(side.crossJoin(broadcast(codebookFrame(side.sparkSession, cb)))
+      .select(keys.map(col) ++ Seq(col("sub"), col("code"),
+        sqDist(sv, col("w")).as("__d2")): _*), keys)
+  }
+
   /** ADC score of a codes row against its joined `__darr` table: a left fold
     * of the m per-subspace lookups in subspace order (0.0 + d₀ + d₁ + … —
     * bit-identical to the retired literal fold's d₀ + d₁ + …, since
@@ -139,22 +160,12 @@ object PqOps {
     * m×ksub-row table build aggregate — never the codes scan.
     * Output: (vec_id, adc_dist). */
   def adcTopKEncoded(encoded: DataFrame, idCol: String,
-                     query: DataFrame, k: Int, cb: Codebook): DataFrame = {
-    val s0 = encoded.sparkSession
-    import s0.implicits._
-    val cbDf = cb.words.toSeq.map { case ((s, c), w) => (s, c, w) }
-      .toDF("sub", "code", "w")
-    // the query subvector is sliced by the row's own sub column, so one
-    // crossJoin computes the whole m×ksub table
-    val dtab = query.crossJoin(broadcast(cbDf))
-      .select(col("sub"), col("code"),
-        sqDist(slice(col("q").cast("array<double>"),
-          col("sub") * cb.dsub + 1, lit(cb.dsub)), col("w")).as("__d2"))
-    encoded.crossJoin(broadcast(dtabArray(dtab, Nil)))
+                     query: DataFrame, k: Int, cb: Codebook): DataFrame =
+    encoded.crossJoin(broadcast(
+        adcTables(query, Nil, col("q").cast("array<double>"), cb)))
       .select(col(idCol).as("vec_id"), adcScore(cb.m, cb.ksub).as("adc_dist"))
       .orderBy(col("adc_dist").asc, col("vec_id"))
       .limit(k)
-  }
 
   /** Per-cell ADC over RESIDUAL codes — the query side of classical IVFADC
     * (Jégou et al. 2011 §III): a row in probed cell c scores against the
@@ -174,18 +185,12 @@ object PqOps {
   def adcTopKEncodedPerCell(encoded: DataFrame, idCol: String, query: DataFrame,
                             probedCentroids: DataFrame, k: Int,
                             cb: Codebook): DataFrame = {
-    val s0 = encoded.sparkSession
-    import s0.implicits._
-    val cbDf = cb.words.toSeq.map { case ((s, c), w) => (s, c, w) }
-      .toDF("sub", "code", "w")
+    val cells = query.crossJoin(probedCentroids)
+      .withColumn("centroid_id", col("centroid_id").cast("int"))
     val qres = zip_with(col("q").cast("array<double>"),
       col("centroid").cast("array<double>"), (a, b) => a - b)
-    val dtab = query.crossJoin(probedCentroids).crossJoin(broadcast(cbDf))
-      .select(col("centroid_id").cast("int").as("centroid_id"),
-        col("sub"), col("code"),
-        sqDist(slice(qres, col("sub") * cb.dsub + 1, lit(cb.dsub)), col("w"))
-          .as("__d2"))
-    encoded.join(broadcast(dtabArray(dtab, Seq("centroid_id"))), "centroid_id")
+    encoded.join(broadcast(adcTables(cells, Seq("centroid_id"), qres, cb)),
+        "centroid_id")
       .select(col(idCol).as("vec_id"), adcScore(cb.m, cb.ksub).as("adc_dist"))
       .orderBy(col("adc_dist").asc, col("vec_id"))
       .limit(k)

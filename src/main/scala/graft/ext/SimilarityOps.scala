@@ -97,12 +97,13 @@ object SimilarityOps {
     * cosine is computed only for candidates. Pairs are generated inside
     * collected buckets (same pattern as [[DedupOps.lshCandidates]]) — one
     * shuffle on (band, bkey), no self-join recomputing the signature DAG,
-    * bucket lists tiny by construction. `threshold` filters verified pairs. */
+    * bucket lists tiny by construction. `threshold` filters verified pairs;
+    * `sizing` picks the band geometry ([[LshSizing]]). */
   def annPairs(df: DataFrame, idCol: String, vecCol: String,
-               numPlanes: Int, numBands: Int, dim: Int,
-               threshold: Double, maxBucket: Int = 100000): DataFrame = {
-    val cand = annCandidates(df, idCol, vecCol, numPlanes, numBands, dim,
-      maxBucket)
+               sizing: LshSizing, dim: Int, threshold: Double,
+               maxBucket: Int = 100000): DataFrame = {
+    val cand = annCandidates(df, idCol, vecCol, sizing.resolve(df, "annPairs"),
+      dim, maxBucket)
     val withVec = df.select(col(idCol), col(vecCol), norm(col(vecCol)).as("__nrm"))
     cand
       .join(withVec.select(col(idCol).as("id_a"), col(vecCol).as("vec_a"),
@@ -120,9 +121,10 @@ object SimilarityOps {
     * recall/volume measurement queries can count the candidates an LSH
     * sizing actually paid for without re-deriving the bucket pipeline. */
   private[graft] def annCandidates(df: DataFrame, idCol: String,
-      vecCol: String, numPlanes: Int, numBands: Int, dim: Int,
+      vecCol: String, sizing: LshSizing, dim: Int,
       maxBucket: Int = 100000): DataFrame = {
-    val bands = srpBands(df, idCol, vecCol, numPlanes, numBands, dim)
+    val g = sizing.resolve(df, "annCandidates")
+    val bands = srpBands(df, idCol, vecCol, g.numPlanes, g.numBands, dim)
     // Bucket population is n / 2^(numPlanes/numBands) per band ON AVERAGE:
     // with too few planes for the corpus size, buckets grow O(n) and the
     // in-row pair expansion is O(n²) — an executor OOM, not an LSH. Fail
@@ -147,64 +149,79 @@ object SimilarityOps {
       .distinct()
   }
 
-  /** [[annPairs]] with the planes-per-band SIZED TO THE CORPUS — the form
-    * that actually survives a growing corpus. A fixed plane count has a
-    * fixed bucket-key space (2^bits per band), so bucket population grows
-    * O(n) and the in-bucket pair expansion O(n²) once the corpus outgrows
-    * the sizing — measured: the fixed 16-plane x_ann_lsh entry runs 1.1 s
-    * on 2k vectors and 352 s on 20k (318x for 10x data), while this form
-    * re-sizes to 9 bits/band and stays linear. The [[semDedupAuto]]
-    * convention: one driver-side count() (the pageRank node-count class),
-    * then delegate.
+  /** How an LSH index sizes its band geometry (planes, bands).
     *
-    * Sizing is INTEGER-exact (no float knife-edge anywhere an engine
-    * could disagree): bits/band = the smallest b >= 1 with
-    * targetBucket * 2^b >= n, i.e. expected bucket population
-    * n / 2^b <= targetBucket. The DuckDB oracle derives b with the same
-    * shift-and-compare over its own count(*), so one oracle text tracks
-    * every scale — the x_semdedup_auto lesson (its first oracle hardcoded
-    * the sf0.01 sizing and broke at sf0.1).
+    *   - [[LshSizing.Fixed]]: the geometry as given. A fixed plane count
+    *     has a fixed bucket-key space (2^bits per band), so bucket
+    *     population grows O(n) and the in-bucket pair expansion O(n²) once
+    *     the corpus outgrows it — measured: the fixed 16-plane x_ann_lsh
+    *     entry runs 1.1 s on 2k vectors and 352 s on 20k (318x for 10x
+    *     data).
+    *   - [[LshSizing.CorpusSized]]: bits/band SIZED TO THE CORPUS — the
+    *     smallest b >= 1 with targetBucket * 2^b >= n ([[autoBandBits]]),
+    *     i.e. expected bucket population n / 2^b <= targetBucket, so the
+    *     same call stays linear as the corpus grows (9 bits/band on the
+    *     20k corpus). For the query forms the CORPUS count drives the
+    *     sizing: buckets are corpus-side, and the query-set size only
+    *     multiplies the probe fan-out linearly.
+    *   - [[LshSizing.RecallTarget]]: bits/band as CorpusSized, and the band
+    *     COUNT the smallest r with S-curve recall 1−(1−q^bits)^r >=
+    *     targetRecall for pairs at cosine >= theta ([[agreeMicro]] +
+    *     [[recallBands]]; q evaluated AT theta is the minimum over the
+    *     reported range, so the guarantee holds for every emitted pair or
+    *     neighbor). Candidate volume scales linearly in r — the price of the
+    *     target. Unreachable targets raise with the arithmetic in the
+    *     message.
     *
-    * No persist bracket around the count(): unlike [[semDedupAuto]]
-    * (whose callee makes eager centroid passes that REUSE a cache before
-    * returning), this function is fully lazy — the returned frame executes
-    * after we return, so a persist/count/unpersist bracket here would pay
-    * a full-corpus cache write that nothing ever reads back. Callers that
-    * want the source scanned once across sizing + LSH own the persist
-    * (the selfJoin caller-owned-cache convention). */
-  def annPairsAuto(df: DataFrame, idCol: String, vecCol: String,
-                   numBands: Int, dim: Int, threshold: Double,
-                   targetBucket: Int = 64,
-                   maxBucket: Int = 100000): DataFrame = {
-    require(numBands > 0, "numBands must be positive")
-    require(targetBucket > 0, "targetBucket must be positive")
-    val n = df.count()
-    require(n > 0, "annPairsAuto: empty corpus")
-    annPairs(df, idCol, vecCol,
-      numPlanes = numBands * autoBandBits(n, targetBucket),
-      numBands = numBands, dim = dim, threshold = threshold,
-      maxBucket = maxBucket)
+    * Sizing is INTEGER-exact (no float knife-edge anywhere an engine could
+    * disagree), so the DuckDB oracles derive the identical geometry from
+    * their own count(*) and one oracle text tracks every scale — the
+    * x_semdedup_auto lesson (its first oracle hardcoded the sf0.01 sizing
+    * and broke at sf0.1).
+    *
+    * [[resolve]] runs at most one driver-side count() (the pageRank
+    * node-count class), and an empty corpus raises naming the operator. No
+    * persist bracket around the count: the ANN forms are fully lazy — the
+    * returned frame executes after they return — so a persist/count/
+    * unpersist bracket would pay a full-corpus cache write that nothing
+    * ever reads back. Callers that want the source scanned once across
+    * sizing + LSH own the persist (the selfJoin caller-owned-cache
+    * convention), and callers that need the geometry twice resolve once
+    * and pass the resulting [[LshSizing.Fixed]]. */
+  sealed trait LshSizing {
+    def resolve(corpus: DataFrame, op: String): LshSizing.Fixed
   }
 
-  /** [[annTopKBatch]] with corpus-sized banding — the [[annPairsAuto]]
-    * sizing (bits/band = smallest b with targetBucket * 2^b >= corpus
-    * count, one driver-side count()) applied to the query-workload form:
-    * per-query candidates ≈ numBands × bucket, and buckets are
-    * corpus-side, so the CORPUS count drives the sizing (query-set size
-    * only multiplies the probe fan-out linearly). Lazy like
-    * [[annPairsAuto]], so same rule: no persist bracket around the
-    * sizing count — a cache written before the caller ever executes the
-    * result is pure overhead. */
-  def annTopKBatchAuto(corpus: DataFrame, idCol: String, vecCol: String,
-                       queries: DataFrame, k: Int, numBands: Int, dim: Int,
-                       targetBucket: Int = 64): DataFrame = {
-    require(numBands > 0, "numBands must be positive")
-    require(targetBucket > 0, "targetBucket must be positive")
-    val n = corpus.count()
-    require(n > 0, "annTopKBatchAuto: empty corpus")
-    annTopKBatch(corpus, idCol, vecCol, queries, k,
-      numPlanes = numBands * autoBandBits(n, targetBucket),
-      numBands = numBands, dim = dim)
+  object LshSizing {
+    final case class Fixed(numPlanes: Int, numBands: Int) extends LshSizing {
+      def bits: Int = numPlanes / numBands
+      def resolve(corpus: DataFrame, op: String): Fixed = this
+    }
+
+    final case class CorpusSized(numBands: Int, targetBucket: Int = 64)
+        extends LshSizing {
+      require(numBands > 0, "numBands must be positive")
+      require(targetBucket > 0, "targetBucket must be positive")
+      def resolve(corpus: DataFrame, op: String): Fixed =
+        Fixed(numBands * autoBandBits(count(corpus, op), targetBucket), numBands)
+    }
+
+    final case class RecallTarget(theta: Double, targetRecall: Double,
+                                  targetBucket: Int = 64) extends LshSizing {
+      require(theta > -1 && theta < 1, "theta must be in (-1, 1)")
+      require(targetBucket > 0, "targetBucket must be positive")
+      def resolve(corpus: DataFrame, op: String): Fixed = {
+        val bits = autoBandBits(count(corpus, op), targetBucket)
+        val bands = recallBands(bits, agreeMicro(theta), targetRecall)
+        Fixed(bands * bits, bands)
+      }
+    }
+
+    private def count(corpus: DataFrame, op: String): Long = {
+      val n = corpus.count()
+      require(n > 0, s"$op: empty corpus")
+      n
+    }
   }
 
   /** Smallest b in [1, 32] with targetBucket * 2^b >= n (pure integer
@@ -265,31 +282,6 @@ object SimilarityOps {
     r
   }
 
-  /** [[annPairsAuto]] with the band COUNT derived from a recall target —
-    * the sizing that makes the auto forms' recall trade EXPLICIT at the
-    * call site instead of a benched honesty row: bits/band still comes
-    * from the corpus count (targetBucket-bounded buckets → linear
-    * candidate volume), and the number of bands is then the smallest r
-    * with S-curve recall 1−(1−q^bits)^r >= targetRecall for pairs at
-    * cosine >= theta (q evaluated AT theta is the minimum over the
-    * reported range, so the guarantee holds for every emitted pair).
-    * Candidate volume scales linearly in r — the price of the target,
-    * and the x_ann_lsh_recall_target query reports it next to the
-    * measured recall. Sizing is [[agreeMicro]] + [[recallBands]]:
-    * integer-exact, oracle-replayable. */
-  def annPairsAutoRecall(df: DataFrame, idCol: String, vecCol: String,
-                         dim: Int, theta: Double, targetRecall: Double,
-                         targetBucket: Int = 64,
-                         maxBucket: Int = 100000): DataFrame = {
-    require(theta > -1 && theta < 1, "theta must be in (-1, 1)")
-    val n = df.count()
-    require(n > 0, "annPairsAutoRecall: empty corpus")
-    val bits = autoBandBits(n, targetBucket)
-    val bands = recallBands(bits, agreeMicro(theta), targetRecall)
-    annPairs(df, idCol, vecCol, numPlanes = bands * bits,
-      numBands = bands, dim = dim, threshold = theta, maxBucket = maxBucket)
-  }
-
   /** SRP-LSH top-k for a SET of query vectors (`queries`: qid, q) — the
     * banded-probe analogue of [[ivfTopKBatch]] and the query-workload form
     * of [[annPairs]]. Queries compute the SAME banded signatures as the
@@ -301,66 +293,55 @@ object SimilarityOps {
     *
     * Scale contract: per-query candidate count ≈ numBands × bucket size,
     * bucket size ≈ n / 2^(numPlanes/numBands) — the same sizing guidance as
-    * [[annPairs]] (planes-per-band ≈ log2(n/desired_bucket)). Unlike IVF
+    * [[annPairs]] (planes-per-band ≈ log2(n/desired_bucket), or let
+    * [[LshSizing.CorpusSized]] derive it). Unlike IVF
     * there is no centroid table to maintain; the trade is that recall is
     * governed by the band/plane geometry, not nprobe — vectors merely
     * similar (not near-duplicate) to the query may share no bucket, so
-    * measure recall against [[cosineTopKBatch]] on a planted sample. */
+    * measure recall against [[cosineTopKBatch]] on a planted sample. With
+    * [[LshSizing.RecallTarget]] the guarantee is per NEIGHBOR AT COSINE >=
+    * theta: each such neighbor of a query enters the candidate set with
+    * probability >= targetRecall; choose k >= the neighbor count you care
+    * about or the top-k truncation, not the LSH, bounds what you see. */
   def annTopKBatch(corpus: DataFrame, idCol: String, vecCol: String,
-                   queries: DataFrame, k: Int,
-                   numPlanes: Int, numBands: Int, dim: Int): DataFrame = {
-    val cand =
-      annTopKBatchCandidates(corpus, idCol, vecCol, queries,
-        numPlanes, numBands, dim)
+                   queries: DataFrame, k: Int, sizing: LshSizing,
+                   dim: Int): DataFrame = {
+    val cand = annTopKBatchCandidates(corpus, idCol, vecCol, queries,
+      sizing.resolve(corpus, "annTopKBatch"), dim)
     val qn = queries.select(col("qid"), col("q"), norm(col("q")).as("__qnrm"))
     val cn = corpus.select(col(idCol), col(vecCol), norm(col(vecCol)).as("__nrm"))
     val scored = cand.join(cn, idCol).join(qn, "qid")
       .select(col("qid"), col(idCol),
         round(dot(col(vecCol), col("q")) / (col("__nrm") * col("__qnrm")), 6)
           .as("cos_sim"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("cos_sim").desc, col(idCol))
-    scored.withColumn("__rn", row_number().over(w)).where(col("__rn") <= k)
-      .select(col("qid"), col(idCol), col("cos_sim"))
+    topPerQuery(scored, idCol, "cos_sim", k)
   }
 
   /** The candidate set behind [[annTopKBatch]] — (qid, id) pairs sharing
     * any band key, self-matches excluded. Public so a recall row can
     * report the candidate volume PAID for a sizing next to the recall it
-    * bought (the annPairsAutoRecall reporting convention). */
+    * bought. */
   def annTopKBatchCandidates(corpus: DataFrame, idCol: String, vecCol: String,
-                             queries: DataFrame, numPlanes: Int,
-                             numBands: Int, dim: Int): DataFrame = {
-    val cb = srpBands(corpus, idCol, vecCol, numPlanes, numBands, dim)
-    val qb = srpBands(queries, "qid", "q", numPlanes, numBands, dim)
+                             queries: DataFrame, sizing: LshSizing,
+                             dim: Int): DataFrame = {
+    val g = sizing.resolve(corpus, "annTopKBatchCandidates")
+    val cb = srpBands(corpus, idCol, vecCol, g.numPlanes, g.numBands, dim)
+    val qb = srpBands(queries, "qid", "q", g.numPlanes, g.numBands, dim)
     qb.join(cb, Seq("band", "bkey"))
       .where(col(idCol) =!= col("qid"))
       .select(col("qid"), col(idCol)).distinct()
   }
 
-  /** [[annTopKBatch]] with the band COUNT derived from a recall target —
-    * the query-side symmetric of [[annPairsAutoRecall]], completing the
-    * family (pairs/topk × corpus-sized/recall-targeted). Same sizing:
-    * bits/band from the corpus count (targetBucket-bounded buckets),
-    * band count the smallest r with S-curve recall
-    * 1−(1−q^bits)^r >= targetRecall at per-plane agreement q = q(theta)
-    * — all integer fixed-point ([[agreeMicro]] + [[recallBands]]),
-    * oracle-replayable. The guarantee is per NEIGHBOR AT COSINE >= theta:
-    * each such neighbor of a query enters the candidate set with
-    * probability >= targetRecall; choose k >= the neighbor count you
-    * care about or the top-k truncation, not the LSH, bounds what you
-    * see. Unreachable targets raise with the arithmetic in the message
-    * (the recallBands contract). */
-  def annTopKBatchAutoRecall(corpus: DataFrame, idCol: String, vecCol: String,
-                             queries: DataFrame, k: Int, dim: Int,
-                             theta: Double, targetRecall: Double,
-                             targetBucket: Int = 64): DataFrame = {
-    require(theta > -1 && theta < 1, "theta must be in (-1, 1)")
-    val n = corpus.count()
-    require(n > 0, "annTopKBatchAutoRecall: empty corpus")
-    val bits = autoBandBits(n, targetBucket)
-    val bands = recallBands(bits, agreeMicro(theta), targetRecall)
-    annTopKBatch(corpus, idCol, vecCol, queries, k,
-      numPlanes = bands * bits, numBands = bands, dim = dim)
+  /** Per-query top-k of `scored` (qid, idCol, scoreCol): highest score
+    * first (lowest when `ascending`), ties to the smaller id, one ranking
+    * window partitioned by qid. */
+  private[ext] def topPerQuery(scored: DataFrame, idCol: String,
+                               scoreCol: String, k: Int,
+                               ascending: Boolean = false): DataFrame = {
+    val score = if (ascending) col(scoreCol).asc else col(scoreCol).desc
+    val w = Window.partitionBy(col("qid")).orderBy(score, col(idCol))
+    scored.withColumn("__rn", row_number().over(w)).where(col("__rn") <= k)
+      .select(col("qid"), col(idCol), col(scoreCol))
   }
 
   /** Brute-force per-query top-k for a batch of queries — the ground truth
@@ -375,9 +356,7 @@ object SimilarityOps {
       .select(col("qid"), col(idCol),
         round(dot(col(vecCol), col("q")) / (col("__nrm") * col("__qnrm")), 6)
           .as("cos_sim"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("cos_sim").desc, col(idCol))
-    scored.withColumn("__rn", row_number().over(w)).where(col("__rn") <= k)
-      .select(col("qid"), col(idCol), col("cos_sim"))
+    topPerQuery(scored, idCol, "cos_sim", k)
   }
 
   /** IVF (inverted-file) ANN: partition the corpus into `nlist` cells by
@@ -464,11 +443,8 @@ object SimilarityOps {
           coalesce(col("__cnew"), col("centroid")).as("centroid")))
     }
 
-  /** IVF top-k for one query vector (one-row DataFrame with column `q`).
-    * `kmeansIters` > 0 refines the sampled centroids with that many Lloyd
-    * rounds before assignment. */
-  /** Coarse-centroid training prologue shared by every IVF query form:
-    * md5-sample nlist seeds, optionally Lloyd-refine. */
+  /** Coarse-centroid training prologue shared by every IVF query form and
+    * [[semDedup]]: md5-sample nlist seeds, optionally Lloyd-refine. */
   private[ext] def trainCentroids(corpus: DataFrame, idCol: String, vecCol: String,
                                   nlist: Int, kmeansIters: Int): DataFrame = {
     val centroids0 = ivfCentroids(corpus, idCol, vecCol, nlist) // already local
@@ -489,77 +465,55 @@ object SimilarityOps {
       .limit(nprobe)
       .select("centroid_id")
 
+  /** IVF top-k for one query vector (one-row DataFrame with column `q`).
+    * `kmeansIters` > 0 refines the sampled centroids with that many Lloyd
+    * rounds before assignment.
+    *
+    * `predicate` makes it FILTERED ANN: top-k under a serve-time metadata
+    * predicate — the one-index-many-filters reality of a production vector
+    * store. The coarse quantizer trains on the FULL corpus (the index is
+    * shared; retraining per predicate would be a different index per
+    * filter), and the predicate restricts candidates BEFORE the top-k —
+    * PRE-filtering, so k results survive a selective predicate instead of
+    * being post-filtered away from an unfiltered top-k. The filter lands on
+    * the corpus scan (predicate pushdown — assignment is per-row, so
+    * excluded rows are never assigned or scored), probed-cell pruning
+    * applies on top, and the top-k stays TakeOrderedAndProject. */
   def ivfTopK(corpus: DataFrame, idCol: String, vecCol: String,
               query: DataFrame, k: Int, nlist: Int, nprobe: Int,
-              kmeansIters: Int = 0): DataFrame = {
+              kmeansIters: Int = 0,
+              predicate: Option[Column] = None): DataFrame = {
     val centroids = trainCentroids(corpus, idCol, vecCol, nlist, kmeansIters)
-    val assigned = ivfAssign(corpus, idCol, vecCol, centroids)
+    val served = predicate.fold(corpus)(corpus.where)
+    val assigned = ivfAssign(served, idCol, vecCol, centroids)
     cosineTopK(
       assigned.join(broadcast(probeCellsOf(query, centroids, nprobe)), "centroid_id"),
       idCol, vecCol, query, k)
   }
 
-  /** FILTERED ANN: IVF top-k under a serve-time metadata predicate — the
-    * one-index-many-filters reality of a production vector store. The
-    * coarse quantizer trains on the FULL corpus (the index is shared;
-    * retraining per predicate would be a different index per filter), and
-    * the predicate restricts candidates BEFORE the top-k — PRE-filtering,
-    * so k results survive a selective predicate instead of being
-    * post-filtered away from an unfiltered top-k. The filter lands on the
-    * corpus scan (predicate pushdown — assignment is per-row, so excluded
-    * rows are never assigned or scored), probed-cell pruning applies on
-    * top, and the top-k stays TakeOrderedAndProject. */
-  def ivfTopKFiltered(corpus: DataFrame, idCol: String, vecCol: String,
-                      query: DataFrame, predicate: Column, k: Int,
-                      nlist: Int, nprobe: Int,
-                      kmeansIters: Int = 0): DataFrame = {
-    val centroids = trainCentroids(corpus, idCol, vecCol, nlist, kmeansIters)
-    val assigned = ivfAssign(corpus.where(predicate), idCol, vecCol, centroids)
-    cosineTopK(
-      assigned.join(broadcast(probeCellsOf(query, centroids, nprobe)),
-        "centroid_id"),
-      idCol, vecCol, query, k)
-  }
-
   /** IVF top-k for a SET of query vectors (`queries`: qid, q) — the
     * many-query workload the coarse quantizer exists for. Per-query probe
-    * selection is a window over queries×nlist rows (tiny: the centroid side
-    * is nlist), then each query joins ONLY its probed cells' vectors on the
-    * centroid id — per-query work is nprobe/nlist of the corpus, and the
-    * whole batch shares one assignment pass and one k-means refinement.
-    * Self-matches (a query that is itself a corpus row) are excluded. */
+    * selection is a window over queries×nlist rows ([[perQueryProbes]];
+    * tiny: the centroid side is nlist), then each query joins ONLY its
+    * probed cells' vectors on the centroid id — per-query work is
+    * nprobe/nlist of the corpus, and the whole batch shares one assignment
+    * pass and one k-means refinement. Self-matches (a query that is itself
+    * a corpus row) are excluded. */
   def ivfTopKBatch(corpus: DataFrame, idCol: String, vecCol: String,
                    queries: DataFrame, k: Int, nlist: Int, nprobe: Int,
                    kmeansIters: Int = 0): DataFrame = {
-    val centroids0 = ivfCentroids(corpus, idCol, vecCol, nlist) // already local
-    val centroids =
-      if (kmeansIters > 0) ivfRefine(corpus, idCol, vecCol, centroids0, kmeansIters)
-      else centroids0
-    val assigned = ivfAssign(corpus, idCol, vecCol, centroids)
+    val centroids = trainCentroids(corpus, idCol, vecCol, nlist, kmeansIters)
     val qn = queries.select(col("qid"), col("q"), norm(col("q")).as("__qnrm"))
-    val probeW = Window.partitionBy(col("qid"))
-      .orderBy(col("__sim").desc, col("centroid_id"))
-    val probes = qn.crossJoin(broadcast(centroids
-        .withColumn("__cnrm", norm(col("centroid")))))
-      .select(col("qid"),
-        round(dot(col("q"), col("centroid")) / (col("__qnrm") * col("__cnrm")), 6)
-          .as("__sim"),
-        col("centroid_id"))
-      .withColumn("__rn", row_number().over(probeW)).where(col("__rn") <= nprobe)
-      .select(col("qid"), col("centroid_id"))
-    val cand = assigned
+    val cand = ivfAssign(corpus, idCol, vecCol, centroids)
       .select(col("centroid_id"), col(idCol), col(vecCol),
         norm(col(vecCol)).as("__nrm"))
-      .join(probes, "centroid_id")
+      .join(perQueryProbes(queries, centroids, nprobe), "centroid_id")
       .join(qn, "qid")
       .where(col(idCol) =!= col("qid"))
       .select(col("qid"), col(idCol),
         round(dot(col(vecCol), col("q")) / (col("__nrm") * col("__qnrm")), 6)
           .as("cos_sim"))
-    val topW = Window.partitionBy(col("qid"))
-      .orderBy(col("cos_sim").desc, col(idCol))
-    cand.withColumn("__rn", row_number().over(topW)).where(col("__rn") <= k)
-      .select(col("qid"), col(idCol), col("cos_sim"))
+    topPerQuery(cand, idCol, "cos_sim", k)
   }
 
   /** Embedding-space decontamination: annotate every train row with its
@@ -989,6 +943,19 @@ object SimilarityOps {
         col("centroid").cast("array<double>"), (a, b) => a - b))
       .drop("centroid")
 
+  /** The residual IVFADC training chain shared by [[ivfPqResTopK]],
+    * [[ivfPqResTopKBatch]] and [[IvfPqIndex.build]]: coarse centroids,
+    * assignment + residual (one map pass), then the PQ codebook trained on
+    * the residuals. Returns (centroids, residual frame carrying
+    * `centroid_id` and `__res`, codebook). */
+  private[ext] def trainResidualPq(corpus: DataFrame, idCol: String,
+      vecCol: String, nlist: Int, kmeansIters: Int, m: Int, ksub: Int,
+      pqIters: Int): (DataFrame, DataFrame, PqOps.Codebook) = {
+    val ctr = trainCentroids(corpus, idCol, vecCol, nlist, kmeansIters)
+    val res = withResiduals(ivfAssign(corpus, idCol, vecCol, ctr), vecCol, ctr)
+    (ctr, res, PqOps.train(res, idCol, "__res", m, ksub, pqIters))
+  }
+
   /** Residual IVF-PQ — true IVFADC (Jégou et al. 2011 §III): codes quantize
     * the RESIDUAL v − centroid[cell] instead of the raw vector, so the
     * codebook's resolution covers the within-cell spread (residual
@@ -1001,9 +968,8 @@ object SimilarityOps {
   def ivfPqResTopK(corpus: DataFrame, idCol: String, vecCol: String,
                    query: DataFrame, k: Int, nlist: Int, nprobe: Int,
                    kmeansIters: Int, m: Int, ksub: Int, pqIters: Int): DataFrame = {
-    val ctr = trainCentroids(corpus, idCol, vecCol, nlist, kmeansIters)
-    val res = withResiduals(ivfAssign(corpus, idCol, vecCol, ctr), vecCol, ctr)
-    val cb = PqOps.train(res, idCol, "__res", m, ksub, pqIters)
+    val (ctr, res, cb) = trainResidualPq(corpus, idCol, vecCol, nlist,
+      kmeansIters, m, ksub, pqIters)
     val probe = probeCellsOf(query, ctr, nprobe)
     // probe filter FIRST, codes after (the ivfPqTopK discipline)
     val survivors = res.join(broadcast(probe), "centroid_id")
@@ -1025,9 +991,8 @@ object SimilarityOps {
                         queries: DataFrame, k: Int, nlist: Int, nprobe: Int,
                         kmeansIters: Int, m: Int, ksub: Int,
                         pqIters: Int): DataFrame = {
-    val ctr = trainCentroids(corpus, idCol, vecCol, nlist, kmeansIters)
-    val res = withResiduals(ivfAssign(corpus, idCol, vecCol, ctr), vecCol, ctr)
-    val cb = PqOps.train(res, idCol, "__res", m, ksub, pqIters)
+    val (ctr, res, cb) = trainResidualPq(corpus, idCol, vecCol, nlist,
+      kmeansIters, m, ksub, pqIters)
     val probes = perQueryProbes(queries, ctr, nprobe)
     val cells = probes.select("centroid_id").distinct()
     val enc = PqOps.withCodes(res.join(broadcast(cells), "centroid_id"),
@@ -1038,7 +1003,8 @@ object SimilarityOps {
   /** Per-query probed cells (qid, centroid_id) — top-nprobe centroids by
     * rounded cosine per query, ties to the smaller centroid id. The window
     * ranks queries × nlist rows (tiny: the centroid side is nlist). Shared
-    * by the in-memory batch form and the stored-index serve path. */
+    * by [[ivfTopKBatch]], the in-memory IVF-PQ batch form and the
+    * stored-index serve path. */
   private[ext] def perQueryProbes(queries: DataFrame, centroids: DataFrame,
                                   nprobe: Int): DataFrame = {
     val probeW = Window.partitionBy(col("qid"))
@@ -1055,8 +1021,8 @@ object SimilarityOps {
   /** Relational batch ADC over residual codes — the scoring spine shared by
     * [[ivfPqResTopKBatch]] (in-memory) and [[IvfPqIndex.topKBatch]]
     * (stored): per-(query, cell) query-residual distance tables as a
-    * parameter-bounded frame (nq × nprobe rows of m×ksub-slot arrays after
-    * [[PqOps.dtabArray]]), broadcast onto the candidate codes on
+    * parameter-bounded frame (nq × nprobe rows of m×ksub-slot arrays,
+    * [[PqOps.adcTables]]), broadcast onto the candidate codes on
     * (qid, centroid_id); scoring is the [[PqOps.adcScore]] pure map (no
     * code explode, no per-candidate aggregation exchange); one per-query
     * top-k window. Nothing is collected to the driver, so the query set
@@ -1067,31 +1033,28 @@ object SimilarityOps {
                                     queries: DataFrame, probes: DataFrame,
                                     centroids: DataFrame, k: Int,
                                     cb: PqOps.Codebook): DataFrame = {
-    val s0 = enc.sparkSession
-    import s0.implicits._
-    val cbDf = cb.words.toSeq.map { case ((s, c), w) => (s, c, w) }
-      .toDF("sub", "code", "w")
     val qres = queries.join(probes, "qid").join(broadcast(centroids), "centroid_id")
       .select(col("qid"), col("centroid_id"),
         zip_with(col("q").cast("array<double>"),
           col("centroid").cast("array<double>"), (a, b) => a - b).as("__qr"))
-    val sv = slice(col("__qr"), col("sub") * cb.dsub + 1, lit(cb.dsub))
-    // per-subspace distances rounded 6 dp, fold-summed in subspace order and
-    // rounded 6 dp — the PqOps.sqDist/adcScore discipline
-    val dtab = qres.crossJoin(broadcast(cbDf))
-      .select(col("qid"), col("centroid_id"), col("sub"), col("code"),
-        round(dot(sv, sv) + dot(col("w"), col("w"))
-          - lit(2.0) * dot(sv, col("w")), 6).as("__d2"))
+    val keys = Seq("qid", "centroid_id")
     val scored = enc.join(broadcast(probes), "centroid_id")
       .where(col(idCol) =!= col("qid"))
-      .join(broadcast(PqOps.dtabArray(dtab, Seq("qid", "centroid_id"))),
-        Seq("qid", "centroid_id"))
+      .join(broadcast(PqOps.adcTables(qres, keys, col("__qr"), cb)), keys)
       .select(col("qid"), col(idCol),
         PqOps.adcScore(cb.m, cb.ksub).as("adc_dist"))
-    val topW = Window.partitionBy(col("qid"))
-      .orderBy(col("adc_dist").asc, col(idCol))
-    scored.withColumn("__rn", row_number().over(topW)).where(col("__rn") <= k)
-      .select(col("qid"), col(idCol), col("adc_dist"))
+    topPerQuery(scored, idCol, "adc_dist", k, ascending = true)
+  }
+
+  /** How [[semDedup]] picks nlist: `Nlist(n)` as given, or
+    * `TargetSize(s)` = ceil(corpus count / s). */
+  sealed trait ClusterSizing
+
+  object ClusterSizing {
+    final case class Nlist(nlist: Int) extends ClusterSizing
+    final case class TargetSize(targetClusterSize: Int) extends ClusterSizing {
+      require(targetClusterSize > 0, "targetClusterSize must be positive")
+    }
   }
 
   /** SemDeDup (Abbas et al. 2023, "SemDeDup: Data-efficient learning at
@@ -1102,54 +1065,51 @@ object SimilarityOps {
     * near-dup sweep into Σ cluster², and the keep-smallest-id rule makes
     * the survivor set deterministic.
     *
+    * `clusters` sizes nlist ([[ClusterSizing]]): as given, or from the
+    * corpus as ceil(n / targetClusterSize), so the expected cluster is
+    * targetClusterSize regardless of corpus growth — the knob users
+    * actually reason about (pair work scales as n · targetClusterSize).
+    * The target form costs one count() action up front and persists the
+    * input around the count + centroid-sampling + refine passes (unless
+    * the caller already did), then unpersists once training is done — the
+    * final assignment pass re-scans the source once, so nothing stays
+    * pinned after the call. An empty corpus raises there.
+    *
     * Output: (idCol, centroid_id) of the SURVIVORS.
     *
     * Scale shape: assignment is a pure map (native [[graft.functions
-    * .NearestCentroid]], broadcast centroids); the pairwise stage is one
+    * .NearestCentroid]], broadcast centroids), so the assigned frame is
+    * recomputed per use rather than cached; the pairwise stage is one
     * shuffle join on centroid_id. Cluster sizes are guarded like LSH
     * buckets: a cluster above `maxCluster` means nlist is too small for the
     * corpus (cluster ≈ n/nlist on average) and the in-cluster self-join
     * would be quadratic — fail fast with sizing guidance instead of OOMing
-    * an executor. */
-  /** [[semDedup]] with nlist sized FROM the corpus: nlist =
-    * ceil(n / targetClusterSize), so the expected cluster is
-    * targetClusterSize regardless of corpus growth — the knob users actually
-    * reason about (pair work scales as n · targetClusterSize). Costs one
-    * count() action up front; the operator persists the input around the
-    * count + centroid-sampling + refine passes (unless the caller already
-    * did), then unpersists once training is done — the final assignment
-    * pass re-scans the source once, so nothing stays pinned after the call.
-    * The maxCluster fail-fast stays as the backstop for skewed clusterings —
-    * sizing the AVERAGE correctly cannot bound the largest cell. */
-  def semDedupAuto(df: DataFrame, idCol: String, vecCol: String,
-                   targetClusterSize: Int, kmeansIters: Int, tau: Double,
-                   maxCluster: Int = 100000): DataFrame = {
-    require(targetClusterSize > 0, "targetClusterSize must be positive")
-    val alreadyCached =
-      df.storageLevel != org.apache.spark.storage.StorageLevel.NONE
-    if (!alreadyCached) df.persist()
-    try {
-      val n = df.count()
-      require(n > 0, "semDedupAuto: empty corpus")
-      val nlist = math.max(1L, (n + targetClusterSize - 1) / targetClusterSize)
-      require(nlist <= Int.MaxValue, "nlist overflow")
-      // semDedup's eager work (centroid sampling, k-means refine) happens
-      // before it returns its lazy result, so every training scan hits cache
-      semDedup(df, idCol, vecCol, nlist.toInt, kmeansIters, tau, maxCluster)
-    } finally {
-      if (!alreadyCached) df.unpersist(blocking = false)
-    }
-  }
-
+    * an executor. Sizing the AVERAGE correctly cannot bound the largest
+    * cell, so the guard stays as the backstop for skewed clusterings. */
   def semDedup(df: DataFrame, idCol: String, vecCol: String,
-               nlist: Int, kmeansIters: Int, tau: Double,
+               clusters: ClusterSizing, kmeansIters: Int, tau: Double,
                maxCluster: Int = 100000): DataFrame = {
-    val ctr0 = ivfCentroids(df, idCol, vecCol, nlist)
-    val ctr =
-      if (kmeansIters > 0) ivfRefine(df, idCol, vecCol, ctr0, kmeansIters)
-      else ctr0
+    val ctr = clusters match {
+      case ClusterSizing.Nlist(nlist) =>
+        trainCentroids(df, idCol, vecCol, nlist, kmeansIters)
+      case ClusterSizing.TargetSize(size) =>
+        val alreadyCached =
+          df.storageLevel != org.apache.spark.storage.StorageLevel.NONE
+        if (!alreadyCached) df.persist()
+        try {
+          val n = df.count()
+          require(n > 0, "semDedup: empty corpus")
+          val nlist = math.max(1L, (n + size - 1) / size)
+          require(nlist <= Int.MaxValue, "nlist overflow")
+          // training is eager (centroid sampling, k-means refine), so every
+          // training scan hits the cache before it is released
+          trainCentroids(df, idCol, vecCol, nlist.toInt, kmeansIters)
+        } finally {
+          if (!alreadyCached) df.unpersist(blocking = false)
+        }
+    }
     // assignment feeds both sides of the pair join and the final anti-join
-    val asg = ivfAssign(df, idCol, vecCol, ctr).persist()
+    val asg = ivfAssign(df, idCol, vecCol, ctr)
     val sizes = asg.groupBy("centroid_id").agg(count(lit(1)).as("__csz"))
     // the guard lives inside a consumed column (see annPairs): id_a flows
     // into the pair predicate, so the assertion cannot be pruned away

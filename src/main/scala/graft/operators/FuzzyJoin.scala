@@ -132,7 +132,7 @@ object FuzzyJoin {
     * |Σ|^q × bands (hex names at q=3: ~16k keys), so once the corpus
     * outgrows it every bucket grows together, candidates grow
     * O(n²/keyspace), and no single bucket ever crosses `maxBucket`. Unlike
-    * LSH (whose annPairsAuto widens its key space with the corpus), q
+    * LSH (whose CorpusSized sizing widens its key space with the corpus), q
     * CANNOT be widened here: the count-filter threshold len−q+1−k·q must
     * stay positive, so large k pins q small. The guard therefore
     * pre-estimates TOTAL candidate volume Σ_key |L_key|·|R_key| from the

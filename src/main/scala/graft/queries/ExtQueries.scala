@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ext._
+import graft.ext.SimilarityOps.{ClusterSizing, LshSizing}
 import graft.operators.SkewJoin
 
 /** Beyond-reference operators: the training-data-pipeline capability set
@@ -875,8 +876,8 @@ object ExtQueries {
     * full SRP oracle in DuckDB). */
   val xAnnLsh: Q = (s, dir) =>
     SimilarityOps.annPairs(plantedEmbeddings(s, dir),
-      "vec_id", "embedding", numPlanes = 16, numBands = 4, dim = 64,
-      threshold = 0.99)
+      "vec_id", "embedding", LshSizing.Fixed(numPlanes = 16, numBands = 4),
+      dim = 64, threshold = 0.99)
 
   /** Corpus-sized banded SRP-LSH: bits/band derived from count(*) by
     * integer shift-and-compare (target bucket 64), so the bucket-key
@@ -884,9 +885,9 @@ object ExtQueries {
     * the scale path; the fixed-16-plane [[xAnnLsh]] stays as the
     * documented under-sizing contrast (318x at 10x data). */
   val xAnnLshAuto: Q = (s, dir) =>
-    SimilarityOps.annPairsAuto(plantedEmbeddings(s, dir),
-      "vec_id", "embedding", numBands = 4, dim = 64, threshold = 0.99,
-      targetBucket = 64)
+    SimilarityOps.annPairs(plantedEmbeddings(s, dir),
+      "vec_id", "embedding", LshSizing.CorpusSized(numBands = 4, targetBucket = 64),
+      dim = 64, threshold = 0.99)
 
   /** IVF ANN top-k with 2 Lloyd refinement rounds (coarse quantizer; full
     * IVF oracle in DuckDB). */
@@ -904,88 +905,84 @@ object ExtQueries {
   val xAnnFiltered: Q = (s, dir) => {
     val emb = t(s, dir, "embeddings")
     val q = emb.where(col("vec_id") === 0).select(col("embedding").as("q"))
-    SimilarityOps.ivfTopKFiltered(emb.where(col("vec_id") =!= 0),
-      "vec_id", "embedding", q, predicate = col("label") === 1,
-      k = 10, nlist = 16, nprobe = 4, kmeansIters = 2)
+    SimilarityOps.ivfTopK(emb.where(col("vec_id") =!= 0),
+      "vec_id", "embedding", q, k = 10, nlist = 16, nprobe = 4,
+      kmeansIters = 2, predicate = Some(col("label") === 1))
   }
+
+  /** The batch query set (qid, q) of the planted corpus: every
+    * vec_id % 100 == 1 vector. It includes planted near-clone 20001, whose
+    * family is what LSH recall is about. */
+  private def batchQueries(emb: DataFrame): DataFrame =
+    emb.where(col("vec_id") % 100 === 1)
+      .select(col("vec_id").as("qid"),
+        col("embedding").cast("array<double>").as("q"))
 
   /** Batch IVF: top-10 neighbours for EVERY vec_id%100==1 query vector in
     * one pass — one shared assignment + refinement, per-query work bounded
     * by the probed cells. */
   val xAnnIvfBatch: Q = (s, dir) => {
     val emb = plantedEmbeddings(s, dir)
-    val queries = emb.where(col("vec_id") % 100 === 1)
-      .select(col("vec_id").as("qid"), col("embedding").as("q"))
-    SimilarityOps.ivfTopKBatch(emb, "vec_id", "embedding", queries,
+    SimilarityOps.ivfTopKBatch(emb, "vec_id", "embedding", batchQueries(emb),
       k = 10, nlist = 16, nprobe = 4, kmeansIters = 2)
   }
 
   /** Batch SRP-LSH: top-10 neighbours for every vec_id%100==1 query via the
     * banded probe (one shuffle join on (band, bkey); corpus signatures
-    * shared across the whole batch) — the LSH analogue of x_ann_ivf_batch.
-    * The query set includes planted near-clone 20001, whose family is what
-    * LSH recall is about. */
+    * shared across the whole batch) — the LSH analogue of x_ann_ivf_batch. */
   val xAnnLshBatch: Q = (s, dir) => {
     val emb = plantedEmbeddings(s, dir)
-    val queries = emb.where(col("vec_id") % 100 === 1)
-      .select(col("vec_id").as("qid"), col("embedding").as("q"))
-    SimilarityOps.annTopKBatch(emb, "vec_id", "embedding", queries,
-      k = 10, numPlanes = 16, numBands = 4, dim = 64)
+    SimilarityOps.annTopKBatch(emb, "vec_id", "embedding", batchQueries(emb),
+      k = 10, LshSizing.Fixed(numPlanes = 16, numBands = 4), dim = 64)
   }
 
-  /** Corpus-sized banded probe ([[xAnnLshBatch]] through the
-    * [[SimilarityOps.annTopKBatchAuto]] sizing — corpus count drives
-    * bits/band, the query set only multiplies probe fan-out linearly). */
+  /** Corpus-sized banded probe ([[xAnnLshBatch]] through
+    * [[LshSizing.CorpusSized]] — corpus count drives bits/band, the query
+    * set only multiplies probe fan-out linearly). */
   val xAnnLshBatchAuto: Q = (s, dir) => {
     val emb = plantedEmbeddings(s, dir)
-    val queries = emb.where(col("vec_id") % 100 === 1)
-      .select(col("vec_id").as("qid"), col("embedding").as("q"))
-    SimilarityOps.annTopKBatchAuto(emb, "vec_id", "embedding", queries,
-      k = 10, numBands = 4, dim = 64, targetBucket = 64)
+    SimilarityOps.annTopKBatch(emb, "vec_id", "embedding", batchQueries(emb),
+      k = 10, LshSizing.CorpusSized(numBands = 4, targetBucket = 64), dim = 64)
   }
 
-  /** Batch-LSH recall@10 vs the brute-force per-query top-10, one row.
-    * Unlike IVF (x_ann_recall = 1.0), banded LSH only surfaces bucket-
-    * colliding neighbours — merely-similar vectors can legitimately miss —
-    * so this is an honest measurement of the band geometry; the planted
-    * near-dup floor is asserted separately in SimilaritySpec. */
-  val xAnnLshRecall: Q = (s, dir) => {
+  /** Batch-LSH recall@10 vs the brute-force per-query top-10 over the
+    * [[batchQueries]] set, one row (n_true, n_found, recall). */
+  private def lshRecallAt10(s: SparkSession, dir: String,
+                            sizing: LshSizing): DataFrame = {
     val emb = plantedEmbeddings(s, dir)
-    val queries = emb.where(col("vec_id") % 100 === 1)
-      .select(col("vec_id").as("qid"), col("embedding").as("q"))
+    val queries = batchQueries(emb)
     val brute = SimilarityOps.cosineTopKBatch(emb, "vec_id", "embedding", queries, 10)
     val lsh = SimilarityOps.annTopKBatch(emb, "vec_id", "embedding", queries,
-        k = 10, numPlanes = 16, numBands = 4, dim = 64)
+        k = 10, sizing, dim = 64)
       .select(col("qid"), col("vec_id").as("__f"))
     brute.join(lsh, brute("qid") === lsh("qid") && col("vec_id") === col("__f"), "left")
       .agg(count(lit(1)).as("n_true"), count(col("__f")).as("n_found"),
         round(count(col("__f")) / count(lit(1)).cast("double"), 4).as("recall"))
   }
+
+  /** Batch-LSH recall@10 at the fixed 16×4 geometry. Unlike IVF
+    * (x_ann_recall = 1.0), banded LSH only surfaces bucket-colliding
+    * neighbours — merely-similar vectors can legitimately miss — so this is
+    * an honest measurement of the band geometry; the planted near-dup floor
+    * is asserted separately in SimilaritySpec. */
+  val xAnnLshRecall: Q = (s, dir) =>
+    lshRecallAt10(s, dir, LshSizing.Fixed(numPlanes = 16, numBands = 4))
 
   /** recall@10 of the CORPUS-SIZED banding vs brute force — the honesty
-    * row for the auto forms: [[SimilarityOps.annTopKBatchAuto]] RAISES
-    * bits/band with corpus count, explicitly trading candidate volume
-    * against recall, so the recall must be measured wherever the auto
-    * forms are benched (1x AND the 10x fixture), not assumed from the
-    * fixed-plane row. The oracle derives the identical sizing from its
-    * own count(*). */
-  val xAnnLshAutoRecall: Q = (s, dir) => {
-    val emb = plantedEmbeddings(s, dir)
-    val queries = emb.where(col("vec_id") % 100 === 1)
-      .select(col("vec_id").as("qid"), col("embedding").as("q"))
-    val brute = SimilarityOps.cosineTopKBatch(emb, "vec_id", "embedding", queries, 10)
-    val lsh = SimilarityOps.annTopKBatchAuto(emb, "vec_id", "embedding",
-        queries, k = 10, numBands = 4, dim = 64, targetBucket = 64)
-      .select(col("qid"), col("vec_id").as("__f"))
-    brute.join(lsh, brute("qid") === lsh("qid") && col("vec_id") === col("__f"), "left")
-      .agg(count(lit(1)).as("n_true"), count(col("__f")).as("n_found"),
-        round(count(col("__f")) / count(lit(1)).cast("double"), 4).as("recall"))
-  }
+    * row for [[LshSizing.CorpusSized]]: it RAISES bits/band with corpus
+    * count, explicitly trading candidate volume against recall, so the
+    * recall must be measured wherever the corpus-sized forms are benched
+    * (1x AND the 10x fixture), not assumed from the fixed-plane row. The
+    * oracle derives the identical sizing from its own count(*). */
+  val xAnnLshAutoRecall: Q = (s, dir) =>
+    lshRecallAt10(s, dir, LshSizing.CorpusSized(numBands = 4, targetBucket = 64))
 
-  /** Recall-TARGETED auto LSH ([[SimilarityOps.annPairsAutoRecall]],
-    * theta 0.9, target 0.95): one row (bits, bands, n_cand, n_true,
-    * n_found, recall) — the sizing, the candidate volume it PAID, and the
-    * measured pair-recall vs brute force at the same theta. Every found
+  /** Recall-TARGETED LSH pairs ([[LshSizing.RecallTarget]], theta 0.9,
+    * target 0.95): one row (bits, bands, n_cand, n_true, n_found, recall) —
+    * the sizing, the candidate volume it PAID, and the measured pair-recall
+    * vs brute force at the same theta. The sizing is resolved ONCE (one
+    * corpus count) and that geometry drives both the candidate count and
+    * the search. Every found
     * pair is exact-verified (found ⊆ true under identical 6-dp rounding),
     * so recall = n_found/n_true, no pair join needed. The S-curve sizing
     * guarantees EXPECTED recall >= 0.95 for pairs at cosine exactly theta;
@@ -997,19 +994,16 @@ object ExtQueries {
     * crossJoins are scalar-aggregate assembly, not data joins. */
   val xAnnLshRecallTarget: Q = (s, dir) => {
     val emb = plantedEmbeddings(s, dir)
-    val n = emb.count()
-    val bits = SimilarityOps.autoBandBits(n, 64)
-    val bands = SimilarityOps.recallBands(bits,
-      SimilarityOps.agreeMicro(0.9), targetRecall = 0.95)
-    val cand = SimilarityOps.annCandidates(emb, "vec_id", "embedding",
-      numPlanes = bands * bits, numBands = bands, dim = 64)
-    val found = SimilarityOps.annPairsAutoRecall(emb, "vec_id", "embedding",
-      dim = 64, theta = 0.9, targetRecall = 0.95)
+    val g = LshSizing.RecallTarget(theta = 0.9, targetRecall = 0.95)
+      .resolve(emb, "annPairs")
+    val cand = SimilarityOps.annCandidates(emb, "vec_id", "embedding", g, dim = 64)
+    val found = SimilarityOps.annPairs(emb, "vec_id", "embedding", g,
+      dim = 64, threshold = 0.9)
     val brute = SimilarityOps.bruteForcePairs(emb, "vec_id", "embedding", 0.9)
     brute.agg(count(lit(1)).as("n_true"))
       .crossJoin(found.agg(count(lit(1)).as("n_found")))
       .crossJoin(cand.agg(count(lit(1)).as("n_cand")))
-      .select(lit(bits).as("bits"), lit(bands).as("bands"), col("n_cand"),
+      .select(lit(g.bits).as("bits"), lit(g.numBands).as("bands"), col("n_cand"),
         col("n_true"), col("n_found"),
         round(col("n_found") / col("n_true").cast("double"), 4).as("recall"))
   }
@@ -1018,7 +1012,8 @@ object ExtQueries {
     * batch-serve symmetric): queries are the original every-50th vectors
     * (each has a planted exact copy at +10000; vector 0 additionally its
     * 20 near-clones), sized by the same integer S-curve for recall >= 0.95
-    * at cosine >= 0.9. n_true counts (query, neighbor>=theta) pairs from
+    * at cosine >= 0.9, resolved once for both the candidate count and the
+    * search. n_true counts (query, neighbor>=theta) pairs from
     * brute force, n_found those surfaced in the per-query top-25 (k = 25
     * exceeds the largest neighbor family, so truncation cannot mask an
     * LSH miss), n_cand the candidate volume PAID for the sizing. */
@@ -1028,16 +1023,12 @@ object ExtQueries {
       .where(col("vec_id") % 50 === 0 && col("vec_id") < 10000)
       .select(col("vec_id").as("qid"),
         col("embedding").cast("array<double>").as("q"))
-    val n = emb.count()
-    val bits = SimilarityOps.autoBandBits(n, 64)
-    val bands = SimilarityOps.recallBands(bits,
-      SimilarityOps.agreeMicro(0.9), targetRecall = 0.95)
+    val g = LshSizing.RecallTarget(theta = 0.9, targetRecall = 0.95)
+      .resolve(emb, "annTopKBatch")
     val cand = SimilarityOps.annTopKBatchCandidates(emb, "vec_id",
-      "embedding", queries, numPlanes = bands * bits, numBands = bands,
-      dim = 64)
-    val topk = SimilarityOps.annTopKBatchAutoRecall(emb, "vec_id",
-      "embedding", queries, k = 25, dim = 64, theta = 0.9,
-      targetRecall = 0.95)
+      "embedding", queries, g, dim = 64)
+    val topk = SimilarityOps.annTopKBatch(emb, "vec_id", "embedding", queries,
+      k = 25, g, dim = 64)
     val qids = queries.select(col("qid"))
     val bf = SimilarityOps.bruteForcePairs(emb, "vec_id", "embedding", 0.9)
     // union-of-two-joins on purpose, NOT the one-explode symmetrization
@@ -1057,7 +1048,7 @@ object ExtQueries {
     truePairs.agg(count(lit(1)).as("n_true"))
       .crossJoin(found.agg(count(lit(1)).as("n_found")))
       .crossJoin(cand.agg(count(lit(1)).as("n_cand")))
-      .select(lit(bits).as("bits"), lit(bands).as("bands"), col("n_cand"),
+      .select(lit(g.bits).as("bits"), lit(g.numBands).as("bands"), col("n_cand"),
         col("n_true"), col("n_found"),
         round(col("n_found") / col("n_true").cast("double"), 4).as("recall"))
   }
@@ -2192,7 +2183,7 @@ object ExtQueries {
     * family within a cluster). */
   val xSemDedup: Q = (s, dir) =>
     SimilarityOps.semDedup(plantedEmbeddings(s, dir), "vec_id", "embedding",
-      nlist = 16, kmeansIters = 2, tau = 0.99)
+      ClusterSizing.Nlist(16), kmeansIters = 2, tau = 0.99)
 
   /** The auto-sized form: targetClusterSize 34 over the sf0.01 planted
     * corpus (540 vectors) yields nlist = ceil(540/34) = 16 — byte-identical
@@ -2200,8 +2191,8 @@ object ExtQueries {
     * SFs the cluster size stays pinned while nlist grows with the corpus
     * (the knob's whole point). */
   val xSemDedupAuto: Q = (s, dir) =>
-    SimilarityOps.semDedupAuto(plantedEmbeddings(s, dir), "vec_id", "embedding",
-      targetClusterSize = 34, kmeansIters = 2, tau = 0.99)
+    SimilarityOps.semDedup(plantedEmbeddings(s, dir), "vec_id", "embedding",
+      ClusterSizing.TargetSize(34), kmeansIters = 2, tau = 0.99)
 
   // ---- LM-based quality scoring (round 4) ----
 
@@ -2388,10 +2379,7 @@ object ExtQueries {
     * cell) distance tables, no driver-side collect in the scoring path. */
   val xIvfPqBatch: Q = (s, dir) => {
     val emb = plantedEmbeddings(s, dir)
-    val queries = emb.where(col("vec_id") % 100 === 1)
-      .select(col("vec_id").as("qid"),
-        col("embedding").cast("array<double>").as("q"))
-    SimilarityOps.ivfPqResTopKBatch(emb, "vec_id", "embedding", queries,
+    SimilarityOps.ivfPqResTopKBatch(emb, "vec_id", "embedding", batchQueries(emb),
       k = 5, nlist = 16, nprobe = 4, kmeansIters = 1, m = 4, ksub = 16,
       pqIters = 1)
   }
@@ -2404,13 +2392,19 @@ object ExtQueries {
     * hash-match. */
   val xIvfPqStored: Q = (s, dir) => {
     val (corpus, query) = pqParts(s, dir)
-    val table = "graft_ivfpq_codes_s"
-    s.sql(s"DROP TABLE IF EXISTS $table")
-    val st = IvfPqIndex.build(corpus, "vec_id", "embedding",
-      nlist = 16, kmeansIters = 1, m = 4, ksub = 16, pqIters = 1,
-      codesTable = table,
-      basePath = s"${sys.props("java.io.tmpdir")}/graft_ivfpq_idx_s")
+    val st = buildPqIndex(s, corpus, "graft_ivfpq_codes_s", "graft_ivfpq_idx_s")
     IvfPqIndex.topK(s, st, "vec_id", query, k = 10, nprobe = 4)
+  }
+
+  /** Build the IVF-PQ index of the x_ivfpq_* geometry (16 cells, 1 Lloyd
+    * round, 4 subspaces × 16 codewords, 1 PQ round) into a freshly dropped
+    * `table`, with its artefacts under java.io.tmpdir/`dirName`. */
+  private def buildPqIndex(s: SparkSession, corpus: DataFrame, table: String,
+                           dirName: String): IvfPqIndex.Stored = {
+    s.sql(s"DROP TABLE IF EXISTS $table")
+    IvfPqIndex.build(corpus, "vec_id", "embedding",
+      nlist = 16, kmeansIters = 1, m = 4, ksub = 16, pqIters = 1,
+      codesTable = table, basePath = s"${sys.props("java.io.tmpdir")}/$dirName")
   }
 
   /** Stored-index batch serve: the x_ivfpq_batch workload answered from the
@@ -2418,16 +2412,8 @@ object ExtQueries {
     * Same oracle as x_ivfpq_batch. */
   val xIvfPqStoredBatch: Q = (s, dir) => {
     val emb = plantedEmbeddings(s, dir)
-    val queries = emb.where(col("vec_id") % 100 === 1)
-      .select(col("vec_id").as("qid"),
-        col("embedding").cast("array<double>").as("q"))
-    val table = "graft_ivfpq_codes_b"
-    s.sql(s"DROP TABLE IF EXISTS $table")
-    val st = IvfPqIndex.build(emb, "vec_id", "embedding",
-      nlist = 16, kmeansIters = 1, m = 4, ksub = 16, pqIters = 1,
-      codesTable = table,
-      basePath = s"${sys.props("java.io.tmpdir")}/graft_ivfpq_idx_b")
-    IvfPqIndex.topKBatch(s, st, "vec_id", queries, k = 5, nprobe = 4)
+    val st = buildPqIndex(s, emb, "graft_ivfpq_codes_b", "graft_ivfpq_idx_b")
+    IvfPqIndex.topKBatch(s, st, "vec_id", batchQueries(emb), k = 5, nprobe = 4)
   }
 
   /** Stored-index APPEND path: build on the EVEN half of the corpus,
@@ -2446,11 +2432,8 @@ object ExtQueries {
     val st = appendedIndexes.getOrElseUpdate(
       s"${s.sparkContext.applicationId}|$dir", {
         val table = s"graft_ivfpq_append_${math.abs(dir.hashCode)}"
-        s.sql(s"DROP TABLE IF EXISTS $table")
-        val built = IvfPqIndex.build(corpus.where(col("vec_id") % 2 === 0),
-          "vec_id", "embedding", nlist = 16, kmeansIters = 1, m = 4,
-          ksub = 16, pqIters = 1, codesTable = table,
-          basePath = s"${sys.props("java.io.tmpdir")}/$table")
+        val built = buildPqIndex(s, corpus.where(col("vec_id") % 2 === 0),
+          table, table)
         IvfPqIndex.append(s, built, corpus.where(col("vec_id") % 2 =!= 0),
           "vec_id", "embedding")
         built
@@ -2476,13 +2459,8 @@ object ExtQueries {
   private def servedIndex(s: SparkSession, dir: String, corpus: DataFrame,
                           workload: String): IvfPqIndex.Stored = {
     val table = s"graft_ivfpq_serve_${workload}_${math.abs(dir.hashCode)}"
-    servedIndexes.getOrElseUpdate(s"${s.sparkContext.applicationId}|$table", {
-      s.sql(s"DROP TABLE IF EXISTS $table")
-      IvfPqIndex.build(corpus, "vec_id", "embedding",
-        nlist = 16, kmeansIters = 1, m = 4, ksub = 16, pqIters = 1,
-        codesTable = table,
-        basePath = s"${sys.props("java.io.tmpdir")}/$table")
-    })
+    servedIndexes.getOrElseUpdate(s"${s.sparkContext.applicationId}|$table",
+      buildPqIndex(s, corpus, table, table))
   }
 
   /** Serve-only single-query form: answers the x_ivfpq_res workload from
@@ -2512,12 +2490,9 @@ object ExtQueries {
     import s.implicits._
     val (corpus, _) = pqParts(s, dir)
     val table = "graft_ivfpq_codes_build"
-    s.sql(s"DROP TABLE IF EXISTS $table")
-    val base = s"${sys.props("java.io.tmpdir")}/graft_ivfpq_idx_build"
-    IvfPqIndex.build(corpus, "vec_id", "embedding",
-      nlist = 16, kmeansIters = 1, m = 4, ksub = 16, pqIters = 1,
-      codesTable = table, basePath = base)
-    fsyncTree(java.nio.file.Paths.get(base))
+    buildPqIndex(s, corpus, table, "graft_ivfpq_idx_build")
+    fsyncTree(java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
+      "graft_ivfpq_idx_build"))
     Seq(s.table(table).count()).toDF("n_codes")
   }
 
@@ -2554,11 +2529,8 @@ object ExtQueries {
     * artefacts. Same oracle as x_ivfpq_batch. */
   val xIvfPqServeBatch: Q = (s, dir) => {
     val emb = plantedEmbeddings(s, dir)
-    val queries = emb.where(col("vec_id") % 100 === 1)
-      .select(col("vec_id").as("qid"),
-        col("embedding").cast("array<double>").as("q"))
     val st = servedIndex(s, dir, emb, "b")
-    IvfPqIndex.topKBatch(s, st, "vec_id", queries, k = 5, nprobe = 4)
+    IvfPqIndex.topKBatch(s, st, "vec_id", batchQueries(emb), k = 5, nprobe = 4)
   }
 
   /** Residual-IVFADC recall vs the exact squared-L2 top-10 — the honesty
@@ -2570,19 +2542,21 @@ object ExtQueries {
     * candidates SPREAD within cells (PqSpec's planted-family case asserts
     * residual ≥ raw there, and ≥ 0.6 absolute). */
   val xIvfPqResRecall: Q = (s, dir) => {
-    import SimilarityOps.dot
     val (corpus, query) = pqParts(s, dir)
-    val pq = SimilarityOps.ivfPqResTopK(corpus, "vec_id", "embedding", query,
-        k = 10, nlist = 16, nprobe = 4, kmeansIters = 1, m = 4, ksub = 16,
-        pqIters = 1)
-      .select("vec_id")
-    val v = col("embedding").cast("array<double>")
+    l2RecallAt10(corpus, query, SimilarityOps.ivfPqResTopK(corpus, "vec_id",
+      "embedding", query, k = 10, nlist = 16, nprobe = 4, kmeansIters = 1,
+      m = 4, ksub = 16, pqIters = 1))
+  }
+
+  /** recall@10 of `found` (vec_id) against the exact squared-L2 top-10 of
+    * `query` over `corpus`: one row (k, n_overlap, recall). */
+  private def l2RecallAt10(corpus: DataFrame, query: DataFrame,
+                           found: DataFrame): DataFrame = {
     val exact = corpus.crossJoin(broadcast(query))
       .select(col("vec_id"),
-        round(dot(v, v) + dot(col("q"), col("q")) - lit(2.0) * dot(v, col("q")), 6)
-          .as("d2"))
+        PqOps.sqDist(col("embedding").cast("array<double>"), col("q")).as("d2"))
       .orderBy(col("d2").asc, col("vec_id")).limit(10).select("vec_id")
-    pq.join(exact, "vec_id").agg(count(lit(1)).as("n_overlap"))
+    found.select("vec_id").join(exact, "vec_id").agg(count(lit(1)).as("n_overlap"))
       .select(lit(10).as("k"), col("n_overlap"),
         round(col("n_overlap") / lit(10.0), 4).as("recall"))
   }
@@ -2606,20 +2580,10 @@ object ExtQueries {
     * the operator exists to make (and why SemDeDup-style pipelines dedup
     * on codes first). */
   val xPqRecall: Q = (s, dir) => {
-    import SimilarityOps.dot
     val (corpus, query) = pqParts(s, dir)
     val cb = PqOps.train(corpus, "vec_id", "embedding", m = 4, ksub = 16, iters = 1)
-    val pq = PqOps.adcTopK(corpus, "vec_id", "embedding", query, k = 10, cb)
-      .select("vec_id")
-    val v = col("embedding").cast("array<double>")
-    val exact = corpus.crossJoin(broadcast(query))
-      .select(col("vec_id"),
-        round(dot(v, v) + dot(col("q"), col("q")) - lit(2.0) * dot(v, col("q")), 6)
-          .as("d2"))
-      .orderBy(col("d2").asc, col("vec_id")).limit(10).select("vec_id")
-    pq.join(exact, "vec_id").agg(count(lit(1)).as("n_overlap"))
-      .select(lit(10).as("k"), col("n_overlap"),
-        round(col("n_overlap") / lit(10.0), 4).as("recall"))
+    l2RecallAt10(corpus, query,
+      PqOps.adcTopK(corpus, "vec_id", "embedding", query, k = 10, cb))
   }
 
   // ---- in-engine classifier training (round 10) ----

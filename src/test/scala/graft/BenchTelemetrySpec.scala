@@ -52,4 +52,27 @@ class BenchTelemetrySpec extends SparkTestBase {
       spark.sparkContext.removeSparkListener(slow)
     }
   }
+
+  test("Bench.summaryLine: the sweep's last stdout line is totals-only, at " +
+    "most 1 KB and valid JSON for 178 entries") {
+    import BenchTelemetry.{Measured, Rep}
+    val done = (1 to 178).map { i =>
+      val m = Measured(warm = None,
+        reps = if (i % 50 == 0) Nil else Seq(Rep(0.5, 1.0), Rep(0.25, 0.5)),
+        failed = if (i % 50 == 0) 2 else 0, la = 1.0, stages = Nil,
+        error = None, compiles = 0L)
+      (s"x_entry_with_a_long_query_name_$i", m)
+    }
+    val line = Bench.summaryLine(done, cpus = "32", reps = 2,
+      sf = "testdata/sf0.1")
+    assert(line.length <= 1024, s"${line.length} chars: $line")
+    import scala.sys.process._
+    val parse = Seq("python3", "-c", "import json, sys; d = json.loads(" +
+      "sys.stdin.read()); print(d['metric'], d['value'], d['entries'], " +
+      "d['failed'], d['cpus'], d['reps'], d['sf'])")
+    val parsed = (parse #< new java.io.ByteArrayInputStream(
+      line.getBytes("UTF-8"))).!!.trim
+    // 175 entries quote their 0.25 s min rep; the 3 with no rep are skipped
+    assert(parsed === "total 43.75 178 3 32 2 testdata/sf0.1", line)
+  }
 }

@@ -632,6 +632,23 @@ class PlanSpec extends SparkTestBase {
     assert(jobs <= 2, s"$jobs jobs while building q_ep3_pipeline")
   }
 
+  test("recall-target LSH queries: building the frame counts the corpus " +
+    "once — one count more than building plantedEmbeddings alone") {
+    def planted = graft.queries.ExtQueries.plantedEmbeddings(spark, dir)
+    // materialize the shared cache first, so every count below costs the
+    // same jobs (a count() is more than one job under AQE: the
+    // single-partition exchange runs as its own map-stage job)
+    planted.count()
+    val (_, base) = jobsDuring(planted)
+    val (_, oneCount) = jobsDuring(planted.count())
+    assert(oneCount > base)
+    Seq("x_ann_lsh_recall_target", "x_ann_topk_recall_target").foreach { q =>
+      val (_, jobs) = jobsDuring(SparkEntry.queries(q)(spark, dir))
+      assert(jobs === oneCount, s"$q: $jobs jobs while building; " +
+        s"plantedEmbeddings alone $base, with one count $oneCount")
+    }
+  }
+
   test("residual ivf-pq: the query path never shuffles data — centroid/" +
     "probe joins ride broadcasts, top-k is TakeOrderedAndProject") {
     val p = plan("x_ivfpq_res")

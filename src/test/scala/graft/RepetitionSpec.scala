@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.ext.{CorpusOps, RepetitionOps, SimilarityOps}
+import graft.ext.SimilarityOps.ClusterSizing
 import graft.operators.BloomPrune
 
 /** Round-4 curation additions: chunk-level cross-document dedup, Gopher
@@ -225,7 +226,7 @@ class RepetitionSpec extends SparkTestBase {
         11L -> semBase(1)._2) // copy of 2
       ).toDF("vec_id", "embedding")
     val got = SimilarityOps.semDedup(corpus, "vec_id", "embedding",
-        nlist = 3, kmeansIters = 2, tau = 0.9999)
+        ClusterSizing.Nlist(3), kmeansIters = 2, tau = 0.9999)
       .select("vec_id").as[Long].collect().toSet
     assert(got === Set(1L, 2L, 3L, 4L, 5L, 6L))
   }
@@ -235,25 +236,53 @@ class RepetitionSpec extends SparkTestBase {
     val corpus = (semBase ++ Seq(10L -> semBase(0)._2, 11L -> semBase(1)._2))
       .toDF("vec_id", "embedding")
     // n = 8, target 3 -> nlist = 3: byte-identical to the explicit call
-    val auto = SimilarityOps.semDedupAuto(corpus, "vec_id", "embedding",
-        targetClusterSize = 3, kmeansIters = 2, tau = 0.9999)
+    val auto = SimilarityOps.semDedup(corpus, "vec_id", "embedding",
+        ClusterSizing.TargetSize(3), kmeansIters = 2, tau = 0.9999)
       .as[(Long, Long)].collect().toSet
     val explicit = SimilarityOps.semDedup(corpus, "vec_id", "embedding",
-        nlist = 3, kmeansIters = 2, tau = 0.9999)
+        ClusterSizing.Nlist(3), kmeansIters = 2, tau = 0.9999)
       .as[(Long, Long)].collect().toSet
     assert(auto === explicit)
     // a target >= n degenerates to one cluster, still correct
-    val one = SimilarityOps.semDedupAuto(corpus, "vec_id", "embedding",
-        targetClusterSize = 100, kmeansIters = 0, tau = 0.9999)
+    val one = SimilarityOps.semDedup(corpus, "vec_id", "embedding",
+        ClusterSizing.TargetSize(100), kmeansIters = 0, tau = 0.9999)
       .select("vec_id").as[Long].collect().toSet
     assert(one === Set(1L, 2L, 3L, 4L, 5L, 6L))
+  }
+
+  test("semDedup leaves no persisted block behind, with either sizing") {
+    val corpus = (semBase ++ Seq(10L -> semBase(0)._2, 11L -> semBase(1)._2))
+      .toDF("vec_id", "embedding").cache()
+    try {
+      corpus.count()
+      val sc = spark.sparkContext
+      Seq(ClusterSizing.Nlist(3), ClusterSizing.TargetSize(3)).foreach { c =>
+        val before = sc.getPersistentRDDs.size
+        val got = SimilarityOps.semDedup(corpus, "vec_id", "embedding", c,
+            kmeansIters = 2, tau = 0.9999)
+          .select("vec_id").as[Long].collect().toSet
+        assert(got === Set(1L, 2L, 3L, 4L, 5L, 6L))
+        assert(sc.getPersistentRDDs.size === before,
+          s"$c left ${sc.getPersistentRDDs.size - before} persisted RDD(s)")
+      }
+    } finally corpus.unpersist(blocking = true)
+  }
+
+  test("semDedup on an empty corpus: the target-size sizing raises naming " +
+    "the operator") {
+    val empty = semBase.toDF("vec_id", "embedding").where(lit(false))
+    val ex = intercept[IllegalArgumentException] {
+      SimilarityOps.semDedup(empty, "vec_id", "embedding",
+        ClusterSizing.TargetSize(3), kmeansIters = 0, tau = 0.99)
+    }
+    assert(ex.getMessage.contains("semDedup: empty corpus"), ex.getMessage)
   }
 
   test("semDedup fails fast when a cluster exceeds maxCluster") {
     val corpus = semBase.toDF("vec_id", "embedding")
     val ex = intercept[Exception] {
       SimilarityOps.semDedup(corpus, "vec_id", "embedding",
-        nlist = 1, kmeansIters = 0, tau = 0.99, maxCluster = 2).collect()
+        ClusterSizing.Nlist(1), kmeansIters = 0, tau = 0.99, maxCluster = 2).collect()
     }
     assert(ex.getMessage.contains("maxCluster") ||
       ex.getCause != null && ex.getCause.getMessage.contains("maxCluster"))

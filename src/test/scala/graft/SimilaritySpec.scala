@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.ext.SimilarityOps
+import graft.ext.SimilarityOps.LshSizing
 
 class SimilaritySpec extends SparkTestBase {
   import spark.implicits._
@@ -72,7 +73,7 @@ class SimilaritySpec extends SparkTestBase {
 
   test("annPairs recall: identical vectors share every SRP band") {
     val got = SimilarityOps.annPairs(vecs, "vec_id", "embedding",
-        numPlanes = 4, numBands = 2, dim = 3, threshold = 0.99)
+        LshSizing.Fixed(numPlanes = 4, numBands = 2), dim = 3, threshold = 0.99)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSeq
     assert(got.contains((0L, 1L)))
   }
@@ -88,14 +89,40 @@ class SimilaritySpec extends SparkTestBase {
     assert(SimilarityOps.autoBandBits(Long.MaxValue, 64) == 32) // capped
     // equality with the explicit form on a dim-3 corpus (n=5 -> b=1,
     // planes = numBands*1)
-    val auto = SimilarityOps.annPairsAuto(vecs, "vec_id", "embedding",
-      numBands = 4, dim = 3, threshold = 0.9)
+    val auto = SimilarityOps.annPairs(vecs, "vec_id", "embedding",
+      LshSizing.CorpusSized(numBands = 4), dim = 3, threshold = 0.9)
       .orderBy("id_a", "id_b").collect().toSeq
     val explicit = SimilarityOps.annPairs(vecs, "vec_id", "embedding",
-      numPlanes = 4, numBands = 4, dim = 3, threshold = 0.9)
+      LshSizing.Fixed(numPlanes = 4, numBands = 4), dim = 3, threshold = 0.9)
       .orderBy("id_a", "id_b").collect().toSeq
     assert(auto == explicit)
     assert(auto.nonEmpty) // the identical pair (0,1) must be found
+  }
+
+  test("empty corpus: the counting LSH sizings raise naming the operator, " +
+    "Fixed sizing returns an empty frame") {
+    val empty = vecs.where(lit(false))
+    val qs = vecs.where($"vec_id" === 0)
+      .select($"vec_id".as("qid"), $"embedding".as("q"))
+    Seq(LshSizing.CorpusSized(numBands = 4),
+        LshSizing.RecallTarget(theta = 0.9, targetRecall = 0.95)).foreach { sizing =>
+      val pairs = intercept[IllegalArgumentException] {
+        SimilarityOps.annPairs(empty, "vec_id", "embedding", sizing, dim = 3,
+          threshold = 0.9)
+      }
+      assert(pairs.getMessage.contains("annPairs: empty corpus"), pairs.getMessage)
+      val topk = intercept[IllegalArgumentException] {
+        SimilarityOps.annTopKBatch(empty, "vec_id", "embedding", qs, k = 3,
+          sizing, dim = 3)
+      }
+      assert(topk.getMessage.contains("annTopKBatch: empty corpus"),
+        topk.getMessage)
+    }
+    val fixed = LshSizing.Fixed(numPlanes = 4, numBands = 2)
+    assert(SimilarityOps.annPairs(empty, "vec_id", "embedding", fixed, dim = 3,
+      threshold = 0.9).collect().isEmpty)
+    assert(SimilarityOps.annTopKBatch(empty, "vec_id", "embedding", qs, k = 3,
+      fixed, dim = 3).collect().isEmpty)
   }
 
   test("recallBands: fixed-point S-curve sizing matches the hand-computed " +
@@ -128,11 +155,15 @@ class SimilaritySpec extends SparkTestBase {
     val bits = SimilarityOps.autoBandBits(n, 64)
     val bands = SimilarityOps.recallBands(bits,
       SimilarityOps.agreeMicro(0.9), 0.95)
-    val auto = SimilarityOps.annPairsAutoRecall(vecs, "vec_id", "embedding",
-      dim = 3, theta = 0.9, targetRecall = 0.95)
+    val target = LshSizing.RecallTarget(theta = 0.9, targetRecall = 0.95)
+    assert(target.resolve(vecs, "annPairs") ===
+      LshSizing.Fixed(numPlanes = bands * bits, numBands = bands))
+    val auto = SimilarityOps.annPairs(vecs, "vec_id", "embedding",
+      target, dim = 3, threshold = 0.9)
       .orderBy("id_a", "id_b").collect().toSeq
     val explicit = SimilarityOps.annPairs(vecs, "vec_id", "embedding",
-      numPlanes = bands * bits, numBands = bands, dim = 3, threshold = 0.9)
+      LshSizing.Fixed(numPlanes = bands * bits, numBands = bands), dim = 3,
+      threshold = 0.9)
       .orderBy("id_a", "id_b").collect().toSeq
     assert(auto == explicit)
     assert(auto.nonEmpty) // the identical pair (0,1) must be found
@@ -142,8 +173,8 @@ class SimilaritySpec extends SparkTestBase {
       "/root/testdata/sf0.001")
     val t = SimilarityOps.bruteForcePairs(emb, "vec_id", "embedding", 0.9)
       .count()
-    val f = SimilarityOps.annPairsAutoRecall(emb, "vec_id", "embedding",
-      dim = 64, theta = 0.9, targetRecall = 0.95).count()
+    val f = SimilarityOps.annPairs(emb, "vec_id", "embedding", target,
+      dim = 64, threshold = 0.9).count()
     assert(t > 0, "fixture must plant pairs above theta")
     assert(f.toDouble / t >= 0.95, s"recall ${f.toDouble / t} < 0.95 ($f/$t)")
   }
@@ -157,11 +188,13 @@ class SimilaritySpec extends SparkTestBase {
     val bits = SimilarityOps.autoBandBits(n, 64)
     val bands = SimilarityOps.recallBands(bits,
       SimilarityOps.agreeMicro(0.9), 0.95)
-    val auto = SimilarityOps.annTopKBatchAutoRecall(vecs, "vec_id",
-      "embedding", qs, k = 3, dim = 3, theta = 0.9, targetRecall = 0.95)
+    val target = LshSizing.RecallTarget(theta = 0.9, targetRecall = 0.95)
+    val auto = SimilarityOps.annTopKBatch(vecs, "vec_id",
+      "embedding", qs, k = 3, target, dim = 3)
       .orderBy("qid", "vec_id").collect().toSeq
     val explicit = SimilarityOps.annTopKBatch(vecs, "vec_id", "embedding",
-      qs, k = 3, numPlanes = bands * bits, numBands = bands, dim = 3)
+      qs, k = 3, LshSizing.Fixed(numPlanes = bands * bits, numBands = bands),
+      dim = 3)
       .orderBy("qid", "vec_id").collect().toSeq
     assert(auto == explicit)
     assert(auto.nonEmpty) // the identical twin of vector 0 must surface
@@ -178,9 +211,8 @@ class SimilaritySpec extends SparkTestBase {
         .select($"qid", $"id_b".as("nid"))
       .unionByName(bf.join(qids, bf("id_b") === qids("qid"))
         .select($"qid", $"id_a".as("nid")))
-    val topk = SimilarityOps.annTopKBatchAutoRecall(emb, "vec_id",
-      "embedding", queries, k = 25, dim = 64, theta = 0.9,
-      targetRecall = 0.95)
+    val topk = SimilarityOps.annTopKBatch(emb, "vec_id",
+      "embedding", queries, k = 25, target, dim = 64)
     val t = truePairs.count()
     val f = truePairs
       .join(topk.select($"qid", $"vec_id".as("nid")), Seq("qid", "nid"))
@@ -193,11 +225,11 @@ class SimilaritySpec extends SparkTestBase {
     "planes (corpus count drives the sizing)") {
     val qs = vecs.where($"vec_id" === 0)
       .select($"vec_id".as("qid"), $"embedding".as("q"))
-    val auto = SimilarityOps.annTopKBatchAuto(vecs, "vec_id", "embedding",
-      qs, k = 3, numBands = 4, dim = 3)
+    val auto = SimilarityOps.annTopKBatch(vecs, "vec_id", "embedding",
+      qs, k = 3, LshSizing.CorpusSized(numBands = 4), dim = 3)
       .orderBy("qid", "vec_id").collect().toSeq
     val explicit = SimilarityOps.annTopKBatch(vecs, "vec_id", "embedding",
-      qs, k = 3, numPlanes = 4, numBands = 4, dim = 3)
+      qs, k = 3, LshSizing.Fixed(numPlanes = 4, numBands = 4), dim = 3)
       .orderBy("qid", "vec_id").collect().toSeq
     assert(auto == explicit)
     assert(auto.nonEmpty)
@@ -218,7 +250,7 @@ class SimilaritySpec extends SparkTestBase {
     val queries = corpus.where($"vec_id" === 0L || $"vec_id" === 100L)
       .select($"vec_id".as("qid"), $"embedding".as("q"))
     val lsh = SimilarityOps.annTopKBatch(corpus, "vec_id", "embedding",
-        queries, k = 4, numPlanes = 16, numBands = 4, dim = 4)
+        queries, k = 4, LshSizing.Fixed(numPlanes = 16, numBands = 4), dim = 4)
       .select("qid", "vec_id").as[(Long, Long)].collect()
       .groupBy(_._1).map { case (q, rs) => q -> rs.map(_._2).toSet }
     // every query's own cluster-mates (cos ≈ 1) are all retrieved
@@ -281,8 +313,8 @@ class SimilaritySpec extends SparkTestBase {
       (col("vec_id") % 2 === 0).cast("int"))
     val corpus = labeled.where($"vec_id" =!= 0)
     val q = vecs.where($"vec_id" === 0).select($"embedding".as("q"))
-    val got = SimilarityOps.ivfTopKFiltered(corpus, "vec_id", "embedding",
-        q, predicate = col("label") === 1, k = 3, nlist = 2, nprobe = 2)
+    val got = SimilarityOps.ivfTopK(corpus, "vec_id", "embedding",
+        q, k = 3, nlist = 2, nprobe = 2, predicate = Some(col("label") === 1))
       .as[(Long, Double)].collect().toSeq
     // label=1 ⇔ even vec_id: 2 and 4 qualify; 1 and 3 must never appear
     assert(got.map(_._1).toSet === Set(2L, 4L))
