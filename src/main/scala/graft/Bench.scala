@@ -197,6 +197,17 @@ object Bench {
       case n => Seq(n)
     }
 
+  /** A formatted plan with the numbering that differs between runs of one
+    * commit masked: expression ids (`#123`), exchange `plan_id`s, and the
+    * whole-stage-codegen and AQE query-stage ids, which are numbered in the
+    * order stages materialize. Operator ids (`(12)`) are kept: they number
+    * the printed tree and are stable. */
+  private[graft] def maskPlan(plan: String): String =
+    plan.replaceAll("#\\d+", "#_")
+      .replaceAll("plan_id=\\d+", "plan_id=_")
+      .replaceAll("codegen id : \\d+", "codegen id : _")
+      .replaceAll("(QueryStage\\n(?:Output .*\\n)?Arguments: )\\d+", "$1_")
+
   /** `plans`: EXECUTE each query through the noop sink and write every
     * execution it ran, formatted, to
     * `plans/<SPARK_GRAFT_PLAN_TAG>/<q>_<SPARK_GRAFT_PLAN_SUFFIX>.txt`
@@ -206,7 +217,8 @@ object Bench {
     * query-construction time, the returned frame's own plan is a vacuous
     * checkpoint scan, so the capture (one plan per round, in execution
     * order) is the only honest plan evidence. The formatted plans carry
-    * each scan's PushedFilters and ReadSchema.
+    * each scan's PushedFilters and ReadSchema, with run-specific numbering
+    * masked ([[maskPlan]]), so two runs of one commit diff empty.
     *
     * The printed `[planshape]` line summarizes the FINAL adaptive plan of
     * the last execution (the noop write): join strategies, exchanges,
@@ -239,7 +251,7 @@ object Bench {
       val out = outDir.resolve(s"${name}_$suffix.txt")
       Files.writeString(out, qes.zipWithIndex.map { case (qe, i) =>
         s"==== execution ${i + 1} of ${qes.size} ====\n" +
-          qe.explainString(ExplainMode.fromString("formatted"))
+          maskPlan(qe.explainString(ExplainMode.fromString("formatted")))
       }.mkString("\n"))
       val nodes = qes.lastOption.toSeq.flatMap(qe => allNodes(qe.executedPlan))
       def c(f: SparkPlan => Boolean) = nodes.count(f)

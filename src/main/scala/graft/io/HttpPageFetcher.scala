@@ -27,9 +27,9 @@ import com.fasterxml.jackson.databind.{DeserializationFeature, ObjectMapper}
   *     snippet: silently yielding zero rows would end pagination and
   *     truncate the ingest, the worst failure mode for a sync job.
   *
-  * Numbers parse as Long/Double (`USE_LONG_FOR_INTS`) so downstream
-  * schema projection (`RestSource.load`) gets JVM types matching LongType
-  * /DoubleType columns; nested objects/arrays survive as Map/Seq for
+  * Numbers parse as Long/Double (`USE_LONG_FOR_INTS`) so the schema
+  * projection of [[RestSourceV2]]'s reads gets JVM types matching
+  * LongType/DoubleType columns; nested objects/arrays survive as Map/Seq for
   * [[RestSource.cleanRecord]] to drop (Op-2). Serializable by
   * construction (config strings only) so the DataSourceV2 path can fetch
   * executor-side. */

@@ -1,22 +1,13 @@
 package graft.io
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.types.StructType
-
-/** Paginated REST list source (the reference's SharePoint OData ingest).
+/** Paginated REST list source (the reference's SharePoint OData ingest):
+  * the transport contract and the record flatten that [[RestSourceV2]]'s
+  * batch and streaming reads share.
   *
   * Reference: `ServiceAlertConnector.py:43-64` — GET a list endpoint, follow
   * `__next` continuation links, yield JSON rows; then flatten each record by
   * dropping `__metadata`, nulls, and nested values (`:31-41`; SURVEY.md
   * Ops 1-2).
-  *
-  * Design: pagination through continuation tokens is inherently sequential
-  * (each page yields the next link), so the fetch is a driver-side iterator
-  * feeding `createDataFrame` — the standard Spark shape for cursor APIs.
-  * Ingest volume is bounded by the API, not the cluster; everything after
-  * the fetch is distributed. A `DataSourceV2` with one `PartitionReader`
-  * per page would only help for offset-paginated APIs that allow random
-  * page access.
   */
 object RestSource {
 
@@ -25,38 +16,10 @@ object RestSource {
     def fetch(token: Option[String]): (Seq[Map[String, Any]], Option[String])
   }
 
-  /** Follow continuation links to exhaustion (Op-1). */
-  def fetchAll(fetcher: PageFetcher, maxPages: Int = 10000): Seq[Map[String, Any]] = {
-    val out = Seq.newBuilder[Map[String, Any]]
-    var token: Option[String] = None
-    var pages = 0
-    var done = false
-    while (!done && pages < maxPages) {
-      val (rows, next) = fetcher.fetch(token)
-      out ++= rows
-      pages += 1
-      token = next
-      done = next.isEmpty
-    }
-    out.result()
-  }
-
   /** Op-2: keep only flat, non-null, non-metadata values. */
   def cleanRecord(rec: Map[String, Any]): Map[String, Any] =
     rec.filter { case (k, v) =>
       k != "__metadata" && v != null && !v.isInstanceOf[Map[_, _]] &&
         !v.isInstanceOf[Seq[_]]
     }
-
-  /** Fetch, flatten, and materialise as a DataFrame with the given schema
-    * (schema-on-read projection: absent keys become nulls — the dynamic-
-    * schema contract of the raw stage). */
-  def load(spark: SparkSession, fetcher: PageFetcher, schema: StructType): DataFrame = {
-    val cleaned = fetchAll(fetcher).map(cleanRecord)
-    val rows = cleaned.map { m =>
-      Row.fromSeq(schema.fields.toSeq.map(f => m.get(f.name).orNull))
-    }
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(rows.toList), schema)
-  }
 }

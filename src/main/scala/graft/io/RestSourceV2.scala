@@ -14,19 +14,19 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-/** DataSourceV2 form of the paginated REST source (SURVEY.md Op-1; the
-  * driver-side iterator in [[RestSource]] remains the simple path).
+/** The paginated REST source as a DataSourceV2 table (SURVEY.md Op-1),
+  * over the [[RestSource.PageFetcher]] transport.
   *
-  * What V2 buys over `createDataFrame`: the HTTP fetch runs inside an
-  * EXECUTOR's `PartitionReader`, pages stream through `next()/get()` one at
-  * a time (driver memory no longer bounds ingest), and the scan composes
-  * with Catalyst like any table (column pruning reaches `ReadSchema`;
-  * downstream stages pipeline instead of waiting for a full driver
-  * materialisation). Cursor pagination is inherently sequential, so the
-  * scan is ONE input partition by design — same reasoning as
-  * [[GeocodeStage]]'s single token bucket: the remote API is the
-  * bottleneck, not the cluster, and correctness of the continuation chain
-  * needs a single walker.
+  * What V2 buys over a driver-side `createDataFrame`: the HTTP fetch runs
+  * inside an EXECUTOR's `PartitionReader`, pages stream through
+  * `next()/get()` one at a time (driver memory no longer bounds ingest),
+  * and the scan composes with Catalyst like any table (column pruning
+  * reaches `ReadSchema`; downstream stages pipeline instead of waiting for
+  * a full driver materialisation). Cursor pagination is inherently
+  * sequential, so the scan is ONE input partition by design — same
+  * reasoning as [[GeocodeStage]]'s single token bucket: the remote API is
+  * the bottleneck, not the cluster, and correctness of the continuation
+  * chain needs a single walker.
   *
   * Usage:
   * {{{
@@ -135,24 +135,19 @@ object RestSourceV2 {
     // chain must degrade to an explicit cap, not a driver OOM
     private val maxPagesTotal =
       opts.get("maxpages").map(_.toLong).getOrElse(100000L)
-    // page index -> that page's rows, pre-converted to schema-aligned values
+    // page index -> that page's rows, pre-converted to Catalyst values
     private val pages = new java.util.TreeMap[Long, Array[Array[Any]]]()
     private var nextToken: Option[String] = None
     private var walked = 0L
     private var exhausted = false
     private var availableNowEnd: Option[Long] = None
 
-    private def toValues(rec: Map[String, Any]): Array[Any] = {
-      val clean = RestSource.cleanRecord(rec)
-      schema.fields.map(f => clean.get(f.name).orNull)
-    }
-
     /** Walk the continuation chain until `target` pages are buffered, the
       * chain ends, or the overall page cap is reached. */
     private def walk(target: Long): Unit =
       while (!exhausted && walked < math.min(target, maxPagesTotal)) {
         val (rows, nxt) = fetcher.fetch(nextToken)
-        pages.put(walked, rows.map(toValues).toArray)
+        pages.put(walked, rows.map(catalystValues(schema, _)).toArray)
         walked += 1
         nextToken = nxt
         exhausted = nxt.isEmpty
@@ -242,12 +237,7 @@ object RestSourceV2 {
       new PartitionReader[InternalRow] {
         private var i = -1
         override def next(): Boolean = { i += 1; i < rows.length }
-        override def get(): InternalRow = {
-          val vals = schema.fields.zip(rows(i)).map { case (f, v) =>
-            if (v == null) null else toCatalyst(v, f.dataType)
-          }
-          new GenericInternalRow(vals.asInstanceOf[Array[Any]])
-        }
+        override def get(): InternalRow = new GenericInternalRow(rows(i))
         override def close(): Unit = ()
       }
     }
@@ -282,15 +272,19 @@ object RestSourceV2 {
       rows.hasNext
     }
 
-    override def get(): InternalRow = {
-      val rec = RestSource.cleanRecord(rows.next())
-      val vals = schema.fields.map { f =>
-        rec.get(f.name).map(v => toCatalyst(v, f.dataType)).orNull
-      }
-      new GenericInternalRow(vals.asInstanceOf[Array[Any]])
-    }
+    override def get(): InternalRow =
+      new GenericInternalRow(catalystValues(schema, rows.next()))
 
     override def close(): Unit = ()
+  }
+
+  /** One record → the schema's Catalyst values, absent keys null (the
+    * schema-on-read contract of the raw stage): the Op-2 flatten, then a
+    * per-field conversion. The batch reader and the streaming page buffer
+    * both convert through here. */
+  private def catalystValues(schema: StructType, rec: Map[String, Any]): Array[Any] = {
+    val clean = RestSource.cleanRecord(rec)
+    schema.fields.map(f => clean.get(f.name).map(toCatalyst(_, f.dataType)).orNull)
   }
 
   // scalar-only conversion on purpose: cleanRecord has already dropped

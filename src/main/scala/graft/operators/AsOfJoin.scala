@@ -1,165 +1,89 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
 
-/** Distributed as-of join: each probe row picks up the build row with the
-  * greatest build timestamp ≤ the probe timestamp (inclusive), per key —
-  * the standard "latest version at event time" lookup of feature stores and
-  * slowly-changing dimensions.
+import graft.plans.{AsOfDirection, AsOfJoinPlan}
+
+/** Distributed as-of join: each probe row picks up ONE build row of the same
+  * key by time — [[asOf]] the latest with build ts ≤ probe ts (inclusive),
+  * the "latest version at event time" lookup of feature stores and slowly-
+  * changing dimensions; [[nearest]] the closest in either direction.
   *
-  * Implementation is the union-merge form, not a join: tag both sides, union
-  * them, and run one running `last(ignoreNulls)` window per key ordered by
-  * (ts, side). That costs exactly ONE shuffle per side (the window's hash
-  * partitioning on the key) and a per-partition sort — no range-join pair
-  * explosion, no per-probe scan of the build side. This is the shape that
-  * survives 100 TB: a naive `probe JOIN build ON key AND b.ts <= p.ts` +
-  * argmax materialises O(|probe| × versions-per-key) rows before pruning;
-  * the merge form materialises O(|probe| + |build|).
+  * Both plan through [[graft.plans.AsOfJoinPlan]] →
+  * [[graft.plans.AsOfJoinStrategy]] → [[graft.plans.AsOfJoinExec]]: one
+  * hash exchange per side on the key, a per-partition sort by (key, ts),
+  * and one forward merge of the two sorted streams holding one build row
+  * of state — O(|probe| + |build|) rows, where a naive
+  * `probe JOIN build ON key AND b.ts <= p.ts` + argmax materialises
+  * O(|probe| × versions-per-key) rows before pruning (the shape
+  * [[graft.plans.RewriteNaiveAsOf]] rewrites onto the same node). The
+  * strategy must be registered: [[graft.functions.GraftExtensions]] injects
+  * it, and every session in this repo is built with it.
   *
   * Contract: build must be unique per (key, ts) — pre-aggregate versions if
-  * not (equal-ts build rows would make "the" latest version ambiguous; see
+  * not (equal-ts build rows would make "the" pick ambiguous; see
   * [[graft.operators.LookupJoin.manyToOne]] for the validating helper).
-  * Probe rows with no build row at or before their ts null-extend (left
-  * as-of semantics). Null probe timestamps are the caller's to filter.
+  * Probe rows with no pick null-extend (left as-of semantics), and a NULL
+  * key or ts never matches (SQL join-key semantics).
   */
 object AsOfJoin {
 
   /** @param valueCols build columns to carry onto each probe row (must not
     *                  collide with probe column names; rename first). */
   def asOf(probe: DataFrame, build: DataFrame, keyCol: String, tsCol: String,
-           valueCols: Seq[String]): DataFrame = {
-    val probeCols = probe.columns.toSeq
-    require(valueCols.nonEmpty, "asOf: valueCols must be non-empty")
-    require(valueCols.forall(build.columns.contains),
-      s"asOf: valueCols ${valueCols.filterNot(build.columns.contains)} absent from build side")
-    require(valueCols.forall(c => !probeCols.contains(c)),
-      s"asOf: valueCols ${valueCols.filter(probeCols.contains)} collide with probe columns; rename first")
-    // SQL join-key semantics: a NULL key matches nothing (the window would
-    // otherwise group all null-key rows into one partition and happily match
-    // them to each other), and a null-ts version is never "the latest at t".
-    // Null-key/null-ts PROBE rows survive and null-extend, as in a left join
-    // — but they are routed AROUND the window: hashing every orphan row into
-    // the single null partition just to compute a __m that is null by
-    // construction is a straggler task at scale. The bypass is a map-side
-    // filter + union; semantics are identical.
-    val b = build
-      .where(col(keyCol).isNotNull && col(tsCol).isNotNull)
-      .select(col(keyCol), col(tsCol), lit(0).as("__side"),
-        struct(valueCols.map(col): _*).as("__v"))
-    val p = probe
-      .where(col(keyCol).isNotNull && col(tsCol).isNotNull)
-      .withColumn("__side", lit(1))
-      .withColumn("__v", lit(null).cast(b.schema("__v").dataType))
-    val orphans = probe
-      .where(col(keyCol).isNull || col(tsCol).isNull)
-      .select(probeCols.map(col) ++
-        valueCols.map(c => lit(null).cast(build.schema(c).dataType).as(c)): _*)
-    // build rows sort BEFORE probe rows at equal ts (side 0 < 1), so a
-    // version effective exactly at the probe instant is visible — the
-    // inclusive (≤) as-of convention, matching e.g. DuckDB's ASOF JOIN
-    val w = Window.partitionBy(col(keyCol))
-      .orderBy(col(tsCol).asc, col("__side").asc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    p.unionByName(b, allowMissingColumns = true)
-      .withColumn("__m", last(col("__v"), ignoreNulls = true).over(w))
-      .where(col("__side") === 1)
-      .select(probeCols.map(col) ++
-        valueCols.map(c => col("__m").getField(c).as(c)): _*)
-      .unionByName(orphans)
-  }
+           valueCols: Seq[String]): DataFrame =
+    join("asOf", AsOfDirection.Backward, probe, build, keyCol, tsCol, valueCols)
 
   /** Nearest-in-time join: each probe row picks the build row minimising
     * |build ts − probe ts| per key, ties to the earlier (backward) side —
     * the sensor-alignment / closest-reading lookup that [[asOf]]'s
-    * backward-only convention can't express.
-    *
-    * Same union-merge scale shape as [[asOf]]: ONE shuffle per side, one
-    * sort, and two frames over the SAME window spec (running `last` for the
-    * backward candidate, running `first` ahead for the forward one) — so
-    * the forward direction costs no extra exchange. `tsCol` must be numeric
-    * (e.g. unix micros): the pick computes distances. Build must be unique
-    * per (key, ts), the [[asOf]] contract. */
+    * backward-only convention can't express. `tsCol` must be long,
+    * timestamp, int, date or double: the pick compares gaps in its
+    * physical value. Build must be unique per (key, ts), the [[asOf]]
+    * contract. */
   def nearest(probe: DataFrame, build: DataFrame, keyCol: String,
-              tsCol: String, valueCols: Seq[String]): DataFrame = {
+              tsCol: String, valueCols: Seq[String]): DataFrame =
+    join("nearest", AsOfDirection.Nearest, probe, build, keyCol, tsCol, valueCols)
+
+  private def join(op: String, direction: AsOfDirection, probe: DataFrame,
+                   build: DataFrame, keyCol: String, tsCol: String,
+                   valueCols: Seq[String]): DataFrame = {
     val probeCols = probe.columns.toSeq
-    require(valueCols.nonEmpty, "nearest: valueCols must be non-empty")
+    require(valueCols.nonEmpty, s"$op: valueCols must be non-empty")
     require(valueCols.forall(build.columns.contains),
-      s"nearest: valueCols ${valueCols.filterNot(build.columns.contains)} absent from build side")
+      s"$op: valueCols ${valueCols.filterNot(build.columns.contains)} absent from build side")
     require(valueCols.forall(c => !probeCols.contains(c)),
-      s"nearest: valueCols ${valueCols.filter(probeCols.contains)} collide with probe columns; rename first")
-    val b = build
-      .where(col(keyCol).isNotNull && col(tsCol).isNotNull)
-      .select(col(keyCol), col(tsCol), lit(0).as("__side"),
-        struct((col(tsCol).as("__bts") +: valueCols.map(col)): _*).as("__v"))
-    val p = probe
-      .where(col(keyCol).isNotNull && col(tsCol).isNotNull)
-      .withColumn("__side", lit(1))
-      .withColumn("__v", lit(null).cast(b.schema("__v").dataType))
-    val orphans = probe
-      .where(col(keyCol).isNull || col(tsCol).isNull)
+      s"$op: valueCols ${valueCols.filter(probeCols.contains)} collide with probe columns; rename first")
+    // Null-key/null-ts rows never match. On the build side they are dropped;
+    // on the probe side they survive and null-extend, as in a left join —
+    // but routed AROUND the node: hashing every orphan row into the single
+    // null partition just to null-extend it is a straggler task at scale.
+    // The bypass is a map-side filter + union; semantics are identical.
+    val keyed = col(keyCol).isNotNull && col(tsCol).isNotNull
+    val orphans = probe.where(!keyed)
       .select(probeCols.map(col) ++
         valueCols.map(c => lit(null).cast(build.schema(c).dataType).as(c)): _*)
-    // build sorts before probe at equal ts: an exact-instant build lands in
-    // the BACKWARD frame with distance 0 and wins by the tie rule
-    val base = Window.partitionBy(col(keyCol))
-      .orderBy(col(tsCol).asc, col("__side").asc)
-    val back = last(col("__v"), ignoreNulls = true)
-      .over(base.rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    val fwd = first(col("__v"), ignoreNulls = true)
-      .over(base.rowsBetween(Window.currentRow, Window.unboundedFollowing))
-    val chosen = when(col("__bk").isNull, col("__fw"))
-      .when(col("__fw").isNull, col("__bk"))
-      .when(col(tsCol) - col("__bk.__bts") <= col("__fw.__bts") - col(tsCol),
-        col("__bk"))
-      .otherwise(col("__fw"))
-    p.unionByName(b, allowMissingColumns = true)
-      .withColumn("__bk", back)
-      .withColumn("__fw", fwd)
-      .where(col("__side") === 1)
-      .withColumn("__m", chosen)
-      .select(probeCols.map(col) ++
-        valueCols.map(c => col("__m").getField(c).as(c)): _*)
-      .unionByName(orphans)
-  }
-
-  /** The custom-physical-operator form of [[asOf]] — identical semantics
-    * (AsOfExecSpec proves output equality on random fixtures including
-    * nulls and ties), planned through [[graft.plans.AsOfJoinPlan]] →
-    * [[graft.plans.AsOfJoinStrategy]] → [[graft.plans.AsOfJoinExec]]: the
-    * two sorted streams merge directly instead of union + window, so the
-    * per-partition state is ONE build row, not a window frame over the
-    * merged stream. Requires the strategy to be registered
-    * ([[graft.functions.GraftExtensions]] injects it; already-built
-    * sessions can append to `spark.experimental.extraStrategies`). */
-  def asOfExec(probe: DataFrame, build: DataFrame, keyCol: String,
-               tsCol: String, valueCols: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.catalyst.expressions.Attribute
-    import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-    import org.apache.spark.sql.graftbridge.PlanBridge
-    val probeCols = probe.columns.toSeq
-    require(valueCols.nonEmpty, "asOf: valueCols must be non-empty")
-    require(valueCols.forall(build.columns.contains),
-      s"asOf: valueCols ${valueCols.filterNot(build.columns.contains)} absent from build side")
-    require(valueCols.forall(c => !probeCols.contains(c)),
-      s"asOf: valueCols ${valueCols.filter(probeCols.contains)} collide with probe columns; rename first")
     // fresh build-side attributes via aliases, so a self-as-of (probe and
     // build sharing lineage) never produces duplicate expression ids
-    val b = build.select(col(keyCol).as("__asof_k") +:
+    val b = build.where(keyed).select(col(keyCol).as("__asof_k") +:
       col(tsCol).as("__asof_t") +:
       valueCols.map(c => col(c).as(s"__asof_v_$c")): _*)
-    val pPlan = PlanBridge.analyzed(probe)
+    val pPlan = PlanBridge.analyzed(probe.where(keyed))
     val bPlan = PlanBridge.analyzed(b)
     def attr(plan: LogicalPlan, name: String): Attribute =
       plan.output.find(_.name == name).getOrElse(
-        throw new IllegalArgumentException(s"asOfExec: no column '$name'"))
-    val node = graft.plans.AsOfJoinPlan(pPlan, bPlan,
+        throw new IllegalArgumentException(s"$op: no column '$name'"))
+    val node = AsOfJoinPlan(pPlan, bPlan,
       attr(pPlan, keyCol), attr(pPlan, tsCol),
       attr(bPlan, "__asof_k"), attr(bPlan, "__asof_t"),
-      valueCols.map(c => attr(bPlan, s"__asof_v_$c")))
+      valueCols.map(c => attr(bPlan, s"__asof_v_$c")), direction)
     PlanBridge.ofRows(probe.sparkSession, node)
       .select(probeCols.map(col) ++
         valueCols.map(c => col(s"__asof_v_$c").as(c)): _*)
+      .unionByName(orphans)
   }
 }

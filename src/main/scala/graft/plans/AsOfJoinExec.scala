@@ -6,6 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, GenericI
 import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution, Partitioning}
 import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan}
+import org.apache.spark.sql.types.{DataType, DateType, DoubleType, IntegerType, LongType, TimestampNTZType, TimestampType}
 
 /** Sorted-merge as-of join exec: both children hash-clustered on the key
   * (the SortMergeJoin distribution contract, so EnsureRequirements
@@ -13,22 +14,29 @@ import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan}
   * partitions. Per probe row the build iterator advances past every row
   * with smaller key or (same key, ts ≤ probe ts), remembering the LAST
   * same-key candidate — because probes ascend, the build cursor never moves
-  * back, and the only retained state is one projected build row. Compare
-  * with the declarative [[graft.operators.AsOfJoin.asOf]]: same two
-  * exchanges and sorts, but no union re-key and no window buffering of the
-  * merged stream.
+  * back, and the only retained state is one projected build row. Where the
+  * cursor stops on the same key, the buffered head is the first build row
+  * AFTER the probe: the `Nearest` direction takes it when its gap is
+  * strictly smaller than the backward one's (ties backward), comparing
+  * gaps in the ts column's physical value ([[AsOfJoinExec.backWins]]).
+  * The head is not consumed, so the next probe still sees it.
   *
-  * Null semantics (the asOf contract, locked by AsOfExecSpec): a probe with
-  * NULL key or ts null-extends without consuming build rows; build rows
-  * with NULL key or ts are skipped. Both sort NULLS FIRST, so the skips sit
-  * at the front of each run and the merge invariant (monotone cursors)
-  * holds.
+  * Null semantics (locked by AsOfExecSpec): a probe with NULL key or ts
+  * null-extends without consuming build rows; build rows with NULL key or
+  * ts are skipped. Both sort NULLS FIRST, so the skips sit at the front of
+  * each run and the merge invariant (monotone cursors) holds.
   */
 case class AsOfJoinExec(probeKey: Attribute, probeTs: Attribute,
                         buildKey: Attribute, buildTs: Attribute,
                         valueAttrs: Seq[Attribute],
+                        direction: AsOfDirection,
                         left: SparkPlan, right: SparkPlan)
     extends BinaryExecNode {
+
+  // the default direction prints nothing, so backward plans read as they
+  // did before the node had a direction
+  override protected def stringArgs: Iterator[Any] =
+    super.stringArgs.filter(_ != AsOfDirection.Backward)
 
   override def output: Seq[Attribute] =
     left.output ++ valueAttrs.map(_.withNullability(true))
@@ -60,17 +68,25 @@ case class AsOfJoinExec(probeKey: Attribute, probeTs: Attribute,
     val rightOut = right.output
     val vals = valueAttrs
     val outAttrs = output
+    // Some(gap comparison) iff the forward candidate competes
+    val nearest =
+      if (direction == AsOfDirection.Nearest) AsOfJoinExec.backWins.lift(tsType)
+      else None
     left.execute().zipPartitions(right.execute()) { (pIt, bIt) =>
       val keyOrd = TypeUtils.getInterpretedOrdering(keyType)
       val tsOrd = TypeUtils.getInterpretedOrdering(tsType)
       val valueProj = UnsafeProjection.create(vals, rightOut)
-      val resultProj = UnsafeProjection.create(outAttrs, leftOut ++ vals)
+      // value slots read as nullable: a non-nullable build column still
+      // null-extends an unmatched probe (nullVals), never reads as 0
+      val resultProj = UnsafeProjection.create(outAttrs,
+        leftOut ++ vals.map(_.withNullability(true)))
       val joined = new JoinedRow
       val nullVals = new GenericInternalRow(vals.length)
       val bBuf = bIt.buffered
       var haveKey = false
       var curKey: Any = null
       var lastMatch: InternalRow = null
+      var lastTs: Any = null
       new Iterator[InternalRow] {
         override def hasNext: Boolean = pIt.hasNext
         override def next(): InternalRow = {
@@ -85,6 +101,8 @@ case class AsOfJoinExec(probeKey: Attribute, probeTs: Attribute,
               curKey = InternalRow.copyValue(pk)
               lastMatch = null
             }
+            var ahead: InternalRow = null // same-key head past the probe
+            var aheadTs: Any = null
             var done = false
             while (!done && bBuf.hasNext) {
               val b = bBuf.head
@@ -94,14 +112,24 @@ case class AsOfJoinExec(probeKey: Attribute, probeTs: Attribute,
                 if (c < 0) { bBuf.next(); () }
                 else if (c == 0) {
                   if (b.isNullAt(btIdx)) { bBuf.next(); () }
-                  else if (tsOrd.compare(b.get(btIdx, tsType), pt) <= 0) {
-                    lastMatch = valueProj(b).copy()
-                    bBuf.next()
-                  } else done = true
+                  else {
+                    val bt = b.get(btIdx, tsType)
+                    if (tsOrd.compare(bt, pt) <= 0) {
+                      lastMatch = valueProj(b).copy()
+                      lastTs = bt
+                      bBuf.next()
+                    } else { ahead = b; aheadTs = bt; done = true }
+                  }
                 } else done = true
               }
             }
-            resultProj(joined(p, if (lastMatch ne null) lastMatch else nullVals))
+            val pick =
+              if ((ahead ne null) && nearest.exists(backWins =>
+                  (lastMatch eq null) || !backWins(lastTs, pt, aheadTs)))
+                valueProj(ahead)
+              else if (lastMatch ne null) lastMatch
+              else nullVals
+            resultProj(joined(p, pick))
           }
         }
       }
@@ -111,4 +139,24 @@ case class AsOfJoinExec(probeKey: Attribute, probeTs: Attribute,
   override protected def withNewChildrenInternal(
       newLeft: SparkPlan, newRight: SparkPlan): AsOfJoinExec =
     copy(left = newLeft, right = newRight)
+}
+
+object AsOfJoinExec {
+
+  /** (backward ts, probe ts, forward ts) => the backward gap is no larger
+    * than the forward one, in the ts type's physical value (ints widen to
+    * long). Both gaps are non-negative, so their wrapped long differences
+    * compare exactly as unsigned. */
+  val backWins: PartialFunction[DataType, (Any, Any, Any) => Boolean] = {
+    case LongType | TimestampType | TimestampNTZType => (b, p, f) =>
+      longBackWins(b.asInstanceOf[Long], p.asInstanceOf[Long], f.asInstanceOf[Long])
+    case IntegerType | DateType => (b, p, f) =>
+      longBackWins(b.asInstanceOf[Int], p.asInstanceOf[Int], f.asInstanceOf[Int])
+    case DoubleType => (b, p, f) =>
+      p.asInstanceOf[Double] - b.asInstanceOf[Double] <=
+        f.asInstanceOf[Double] - p.asInstanceOf[Double]
+  }
+
+  private def longBackWins(b: Long, p: Long, f: Long): Boolean =
+    java.lang.Long.compareUnsigned(p - b, f - p) <= 0
 }

@@ -7,29 +7,35 @@ import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy}
 
 /** Whole-operator custom-plan path for the as-of join (SURVEY §2.4 Op-35
-  * family / the x_asof_join semantics): a dedicated logical node, a planner
-  * strategy lowering it to [[AsOfJoinExec]], and an optimizer rule restoring
-  * probe-side predicate pushdown through the opaque node — the
+  * family): a dedicated logical node, a planner strategy lowering it to
+  * [[AsOfJoinExec]], and an optimizer rule restoring probe-side predicate
+  * pushdown through the opaque node — the
   * `LogicalPlan + Rule + SparkStrategy + SparkPlan` extension tier, wired
   * through the same `SparkSessionExtensions` the SQL functions use
-  * ([[graft.functions.GraftExtensions]]).
+  * ([[graft.functions.GraftExtensions]]). [[graft.operators.AsOfJoin]]'s
+  * `asOf` and `nearest` both build this node; [[RewriteNaiveAsOf]] builds
+  * it from the naive join + row_number shape.
   *
-  * Semantics (identical to [[graft.operators.AsOfJoin.asOf]], which remains
-  * the pure-DataFrame formulation and the equivalence reference): every
-  * probe row picks up the value columns of the LATEST build row with the
-  * same key and build ts ≤ probe ts; unmatched probes null-extend; NULL
-  * keys/timestamps never match (SQL join-key semantics). The declarative
-  * form pays a union + window over the merged stream; this exec merges the
-  * two sorted streams directly — per partition one forward pass, O(1) state
-  * (the current key's best build row), no window buffer at all.
+  * Semantics: every probe row picks up the value columns of ONE build row
+  * with the same key — under [[AsOfDirection.Backward]] the LATEST with
+  * build ts ≤ probe ts, under [[AsOfDirection.Nearest]] the one closest in
+  * time either way, ties to the earlier; unmatched probes null-extend;
+  * NULL keys/timestamps never match (SQL join-key semantics). The exec
+  * merges the two sorted streams directly — per partition one forward
+  * pass, O(1) state (the current key's best build row), no window buffer.
   */
 case class AsOfJoinPlan(left: LogicalPlan, right: LogicalPlan,
                         probeKey: Attribute, probeTs: Attribute,
                         buildKey: Attribute, buildTs: Attribute,
-                        valueAttrs: Seq[Attribute]) extends BinaryNode {
+                        valueAttrs: Seq[Attribute],
+                        direction: AsOfDirection) extends BinaryNode {
   require(probeKey.dataType == buildKey.dataType &&
     probeTs.dataType == buildTs.dataType,
     "as-of key/ts types must match across sides")
+  require(direction == AsOfDirection.Backward ||
+    AsOfJoinExec.backWins.isDefinedAt(probeTs.dataType),
+    "nearest as-of needs a long, timestamp, int, date or double ts, got " +
+      probeTs.dataType.simpleString)
 
   override def output: Seq[Attribute] =
     left.output ++ valueAttrs.map(_.withNullability(true))
@@ -42,11 +48,20 @@ case class AsOfJoinPlan(left: LogicalPlan, right: LogicalPlan,
     copy(left = newLeft, right = newRight)
 }
 
+/** Which build row an as-of probe picks: the latest at or before its ts
+  * (`Backward`, the feature-store lookup), or the closest in either
+  * direction with ties to the earlier (`Nearest`, sensor alignment). */
+sealed trait AsOfDirection
+object AsOfDirection {
+  case object Backward extends AsOfDirection
+  case object Nearest extends AsOfDirection
+}
+
 /** Lowers [[AsOfJoinPlan]] to the merge exec. */
 object AsOfJoinStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case AsOfJoinPlan(l, r, pk, pt, bk, bt, vals) =>
-      AsOfJoinExec(pk, pt, bk, bt, vals, planLater(l), planLater(r)) :: Nil
+    case AsOfJoinPlan(l, r, pk, pt, bk, bt, vals, dir) =>
+      AsOfJoinExec(pk, pt, bk, bt, vals, dir, planLater(l), planLater(r)) :: Nil
     case _ => Nil
   }
 }
@@ -184,7 +199,8 @@ object RewriteNaiveAsOf extends Rule[LogicalPlan] with PredicateHelper {
     if (partAttrs.length != w.partitionSpec.length) return None
     val pSet = ExpressionSet(partAttrs)
     if (!l.distinctKeys.exists(_.subsetOf(pSet))) return None
-    val asof = AsOfJoinPlan(l, r, pk, pts, bk, bts, r.output)
+    val asof = AsOfJoinPlan(l, r, pk, pts, bk, bts, r.output,
+      AsOfDirection.Backward)
     val inner =
       if (join.joinType == Inner)
         Filter(IsNotNull(bts.withNullability(true)), asof)

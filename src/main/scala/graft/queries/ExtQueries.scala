@@ -14,10 +14,7 @@ import graft.operators.SkewJoin
   */
 object ExtQueries {
 
-  import RefQueries.Q
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
+  import RefQueries.{Q, t}
 
   private def docs(s: SparkSession, dir: String): DataFrame =
     t(s, dir, "documents").where(col("text").isNotNull)
@@ -1349,7 +1346,7 @@ object ExtQueries {
   /** Nearest-in-time join: each purchase matched to the CLOSEST signup of
     * its user in either direction (ties to the earlier), carrying the
     * signup's ts and value — the sensor-alignment complement to the
-    * backward-only as-of family, same one-exchange union-merge shape. */
+    * backward-only as-of family, on the same sorted-merge exec. */
   val xAsofNearest: Q = (s, dir) => {
     val e = RefQueries.events(s, dir)
     val build = e.where(col("event_type") === "signup")
@@ -1632,7 +1629,7 @@ object ExtQueries {
     * gap-filling pass that turns an irregular event stream into a
     * time-series feature table. Composes sequence+explode (grid,
     * map-side) with the [[graft.operators.AsOfJoin]] operator (one
-    * sorted-merge window pass); ties at an instant are pre-collapsed to
+    * sorted-merge pass); ties at an instant are pre-collapsed to
     * max(value) so the as-of pick is total. The first grid point of a
     * user is the end of their first event's hour, so LOCF never emits a
     * null. */
@@ -1837,7 +1834,8 @@ object ExtQueries {
     * signup null-extend). The build side is pre-aggregated unique per
     * (user_id, ts) as the [[graft.operators.AsOfJoin]] contract requires;
     * the oracle is DuckDB's native ASOF LEFT JOIN — a genuinely independent
-    * implementation of the same semantics. */
+    * implementation of the same semantics. x_asof_exec runs this same
+    * query under its own name. */
   val xAsofJoin: Q = (s, dir) => {
     val e = RefQueries.events(s, dir)
     val build = e.where(col("event_type") === "signup")
@@ -1847,21 +1845,6 @@ object ExtQueries {
     val probe = e.where(col("event_type") === "purchase")
       .select(col("event_id"), col("user_id"), col("ts"))
     graft.operators.AsOfJoin.asOf(probe, build, "user_id", "ts",
-      Seq("v_ts", "v_value"))
-  }
-
-  /** The custom-physical-operator as-of form (AsOfJoinPlan → Strategy →
-    * sorted-merge exec): same inputs, same DuckDB ASOF oracle — a third
-    * independent implementation agreeing on the semantics. */
-  val xAsofExec: Q = (s, dir) => {
-    val e = RefQueries.events(s, dir)
-    val build = e.where(col("event_type") === "signup")
-      .groupBy(col("user_id"), col("ts"))
-      .agg(max(col("value")).as("v_value"))
-      .withColumn("v_ts", col("ts"))
-    val probe = e.where(col("event_type") === "purchase")
-      .select(col("event_id"), col("user_id"), col("ts"))
-    graft.operators.AsOfJoin.asOfExec(probe, build, "user_id", "ts",
       Seq("v_ts", "v_value"))
   }
 

@@ -20,10 +20,7 @@ import graft.geo.{GeocodeStage, GeoFunctions, GridJoin, KeyedStubGeocoder, Spati
   */
 object GeoQueries {
 
-  import RefQueries.Q
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
+  import RefQueries.{Q, t}
 
   /** 25 nation grid cells: nation n → [2(n%5), 2(n%5)+2] × [2(n/5), 2(n/5)+2]. */
   private[graft] def nationCells(s: SparkSession, dir: String): DataFrame =

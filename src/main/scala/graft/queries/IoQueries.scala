@@ -20,10 +20,9 @@ import graft.streaming.ChangeStream
   */
 object IoQueries {
 
-  type Q = RefQueries.Q
+  import RefQueries.t
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
+  type Q = RefQueries.Q
 
   private def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString

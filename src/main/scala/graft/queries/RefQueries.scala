@@ -17,7 +17,8 @@ object RefQueries {
 
   type Q = (SparkSession, String) => DataFrame
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
+  /** The one table loader of the query surface: `<dir>/<name>.parquet`. */
+  private[queries] def t(s: SparkSession, dir: String, name: String): DataFrame =
     s.read.parquet(s"$dir/$name.parquet")
 
   /** The events table's `ts` encoding has varied across testdata

@@ -75,4 +75,38 @@ class BenchTelemetrySpec extends SparkTestBase {
     // 175 entries quote their 0.25 s min rep; the 3 with no rep are skipped
     assert(parsed === "total 43.75 178 3 32 2 testdata/sf0.1", line)
   }
+
+  test("Bench.maskPlan: two runs' formatted plans differ only in masked " +
+    "ids, while operator ids and real plan differences survive") {
+    def run(e: Int, plan: Int, cg: Int, stage: Int, join: String) =
+      s"""AdaptiveSparkPlan (9)
+         |+- == Final Plan ==
+         |   ResultQueryStage (8)
+         |   +- * Project (7)
+         |      +- ShuffleQueryStage (5), Statistics(sizeInBytes=48.0 B, rowCount=3)
+         |
+         |(4) $join [codegen id : $cg]
+         |Output [2]: [user_id#${e}L, v#${e + 1}]
+         |
+         |(5) Exchange
+         |Input [2]: [user_id#${e}L, v#${e + 1}]
+         |Arguments: hashpartitioning(user_id#${e}L, 4), ENSURE_REQUIREMENTS, [plan_id=$plan]
+         |
+         |(6) ShuffleQueryStage
+         |Output [2]: [user_id#${e}L, v#${e + 1}]
+         |Arguments: $stage
+         |
+         |(8) ResultQueryStage
+         |Arguments: ${stage + 1}
+         |""".stripMargin
+    val a = Bench.maskPlan(run(12, 72, 10, 16, "SortMergeJoin"))
+    assert(a === Bench.maskPlan(run(340, 147, 11, 17, "SortMergeJoin")))
+    assert(a.contains("user_id#_L") && a.contains("[plan_id=_]") &&
+      a.contains("[codegen id : _]") && a.contains("ResultQueryStage (8)"), a)
+    assert(!a.contains("Arguments: 16") && !a.contains("Arguments: 17"), a)
+    // the operator ids and the Exchange's arguments are not run-specific
+    assert(a.contains("(6) ShuffleQueryStage") &&
+      a.contains("hashpartitioning(user_id#_L, 4)"), a)
+    assert(a !== Bench.maskPlan(run(12, 72, 10, 16, "BroadcastHashJoin")))
+  }
 }

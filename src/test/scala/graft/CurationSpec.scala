@@ -95,8 +95,8 @@ class CurationSpec extends SparkTestBase {
     val out = AsOfJoin.asOf(probe, build, "k", "t", Seq("v_t", "v"))
     val got = out.select("id", "v").as[(Long, Option[String])].collect().toMap
     assert(got === Map(10L -> Some("v1"), 11L -> None, 12L -> None, 13L -> None))
-    // the orphan rows are routed around the window: the plan is a Union of
-    // the windowed path and a window-free null-extend branch
+    // the orphan rows are routed around the as-of node: the plan is a Union
+    // of the merge path and a join-free null-extend branch
     val p = out.queryExecution.executedPlan.toString
     assert(p.contains("Union"), p)
     // value-column types survive the null-extend (struct cast, not string)

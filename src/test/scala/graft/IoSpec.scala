@@ -121,10 +121,11 @@ class IoSpec extends SparkTestBase {
 
   test("Op-1/2 REST source: pagination + record flattening") {
     val pages = pagesFixture
-    val fetcher = new RestSource.PageFetcher {
+    graft.io.RestSourceV2.register("iospec-flatten", new RestSource.PageFetcher {
       def fetch(token: Option[String]) = pages(token)
-    }
-    val got = RestSource.load(spark, fetcher, restSchema)
+    })
+    val got = spark.read.format(classOf[graft.io.RestSourceV2].getName)
+      .schema(restSchema).option("fetcher", "iospec-flatten").load()
       .as[(Option[Long], Option[String])].collect().toSeq.sortBy(_._1)
     assert(got == Seq((Some(1L), Some("t1")), (Some(2L), Some("t2")),
       (Some(3L), None)))
@@ -194,8 +195,8 @@ class IoSpec extends SparkTestBase {
     }
     base = b
     try {
-      val got = RestSource.load(spark,
-          new graft.io.HttpPageFetcher(s"$base/list"), restSchema)
+      val got = spark.read.format(classOf[graft.io.RestSourceV2].getName)
+        .schema(restSchema).option("url", s"$base/list").load()
         .as[(Option[Long], Option[String])].collect().toSeq.sortBy(_._1)
       assert(got == Seq((Some(1L), Some("t1")), (Some(2L), Some("t2")),
         (Some(3L), None)))

@@ -443,6 +443,15 @@ class PlanSpec extends SparkTestBase {
     assert(countIn(p, "Exchange hashpartitioning") <= 3, p)
   }
 
+  test("as-of queries run on the sorted-merge exec: x_asof_join, " +
+    "x_asof_nearest and x_resample plan through AsOfJoin with no Window node") {
+    for (q <- Seq("x_asof_join", "x_asof_nearest", "x_resample")) {
+      val p = plan(q)
+      assert(countIn(p, "AsOfJoin") === 1, s"$q:\n$p")
+      assert(!p.contains("Window"), s"$q:\n$p")
+    }
+  }
+
   test("tfidf vocabulary join carries no forced broadcast hint; the gate " +
     "restores it") {
     // At sf0.001 size-based planning legitimately broadcasts the tiny
