@@ -3,7 +3,7 @@ package graft
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.{ExplainMode, QueryExecution, SparkPlan, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.{ExplainMode, FileSourceScanExec, MapPartitionsExec, QueryExecution, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec, AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ReusedExchangeExec, ShuffleExchangeExec}
 import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, BroadcastNestedLoopJoinExec, CartesianProductExec, ShuffledHashJoinExec, SortMergeJoinExec}
@@ -190,7 +190,8 @@ object Bench {
     }
   }
 
-  private def allNodes(p: SparkPlan): Seq[SparkPlan] =
+  /** Every node of a physical plan, descending into AQE query stages. */
+  private[graft] def allNodes(p: SparkPlan): Seq[SparkPlan] =
     p.collect { case n => n }.flatMap {
       case q: QueryStageExec => q +: allNodes(q.plan)
       case a: AdaptiveSparkPlanExec => a +: allNodes(a.executedPlan)
@@ -222,7 +223,9 @@ object Bench {
     *
     * The printed `[planshape]` line summarizes the FINAL adaptive plan of
     * the last execution (the noop write): join strategies, exchanges,
-    * reuse, AQE reads and whole-stage-codegen stages. AQE re-plans at
+    * reuse, AQE reads, whole-stage-codegen stages, `MapPartitions` nodes
+    * (`mapp`, one per typed service boundary) and file scans (`scans`), so
+    * a lineage the plan replicates shows on this one line. AQE re-plans at
     * runtime, so only the executed plan tells the truth; the
     * pre-execution explain shows the initial guess. */
   private def plans(spark: SparkSession, sfDir: String,
@@ -267,6 +270,8 @@ object Bench {
         s" reuse=${c(_.isInstanceOf[ReusedExchangeExec])}" +
         s" aqeRead=${c(_.isInstanceOf[AQEShuffleReadExec])}" +
         s" wsc=${c(_.isInstanceOf[WholeStageCodegenExec])}" +
+        s" mapp=${c(_.isInstanceOf[MapPartitionsExec])}" +
+        s" scans=${c(_.isInstanceOf[FileSourceScanExec])}" +
         s" executions=${qes.size} -> $out$err")
       spark.catalog.clearCache()
     }

@@ -1,7 +1,8 @@
 package graft.enrich
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, StringType, StructField}
 
 /** Row-wise effectful enrichment stages (the reference's LLM/geocoder ops).
   *
@@ -15,9 +16,13 @@ import org.apache.spark.sql.functions._
   * bounded concurrency by partition count), NOT a UDF — so retries, rate
   * limits and fallbacks live in the client, outside the query plan, and the
   * planner can't multiply side effects by re-evaluating an expression.
+  * Each stage carries every input row through its one `mapPartitions` and
+  * appends the service's column, so the service boundary appears once in
+  * the plan and a stage never changes the row count (no join back on id,
+  * which would multiply rows that share an id).
   * Deterministic stubs stand in for the real services in tests and queries:
   * the container has no network egress, and the *plumbing* (work-limiting,
-  * join-back, column contracts) is what the engine owns.
+  * row carry-through, column contracts) is what the engine owns.
   */
 object Enrichment {
 
@@ -52,30 +57,28 @@ object Enrichment {
     fallback
   }
 
-  /** Op-53 stage: draft social text for (id, title, description) rows.
-    * Output joins back on id so the enrichment never widens the scan.
-    *
-    * `broadcastJoinBack`: the typed mapPartitions output carries NO size
-    * stats, so size-based planning cannot pick a broadcast for the
-    * join-back and falls to a sort-merge join — two exchanges for a frame
-    * that, in the reference's use, is bounded by DRAFT_LIMIT. Pass true
-    * when the input is work-limited (parameter-bounded, the Augmenter
-    * contract); leave false for unbounded corpora (q53 drafts every
-    * document). */
-  def draftStage(df: DataFrame, drafter: Drafter,
-                 broadcastJoinBack: Boolean = false): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val drafted = df.select(col("id").cast("long"), col("title"), col("description"))
-      .as[(Long, String, String)]
-      .mapPartitions { it =>
-        // per-partition client init goes here (one connection per partition)
-        it.map { case (id, t, d) => (id, drafter.draft(id, t, d)) }
-      }
-      .toDF("id", "tweet_text")
-    df.join(if (broadcastJoinBack) broadcast(drafted) else drafted,
-      Seq("id"), "left")
+  /** Op-53 stage: draft social text for rows carrying `id` (integral,
+    * non-null), `title` and `description` (strings). Output: df's columns
+    * plus `tweet_text`, one row per input row. */
+  def draftStage(df: DataFrame, drafter: Drafter): DataFrame = {
+    val (id, title, description) = (df.schema.fieldIndex("id"),
+      df.schema.fieldIndex("title"), df.schema.fieldIndex("description"))
+    appendColumns(df, StructField("tweet_text", StringType)) { () => r =>
+      Seq(drafter.draft(r.getAs[Number](id).longValue, r.getString(title),
+        r.getString(description)).orNull)
+    }
   }
+
+  /** The shape every service boundary shares: ONE `mapPartitions` that
+    * carries each row through and appends `fields`, valued by the function
+    * `open` returns — `open` runs once per partition, where a client sets
+    * up its connection or rate limiter. */
+  private[graft] def appendColumns(df: DataFrame, fields: StructField*)(
+      open: () => Row => Seq[Any]): DataFrame =
+    df.mapPartitions { it =>
+      val f = open()
+      it.map(r => Row.fromSeq(r.toSeq ++ f(r)))
+    }(Encoders.row(fields.foldLeft(df.schema)(_ add _)))
 
   /** Op-54: toot = tweet + hashtag(service_area) + " #CapeTown" — pure
     * column expression, no service involved. */
@@ -177,18 +180,14 @@ object Enrichment {
       .otherwise(reject)
   }
 
-  /** Op-55 stage: extract candidate location groups per row.
-    * `broadcastJoinBack` as in [[draftStage]] — the typed output has no
-    * stats, so opt in when the input is work-limited. */
-  def locateStage(df: DataFrame, locator: Locator,
-                  broadcastJoinBack: Boolean = false): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val located = df.select(col("id").cast("long"), col("description"))
-      .as[(Long, String)]
-      .mapPartitions(it => it.map { case (id, d) => (id, locator.locate(d)) })
-      .toDF("id", "location_suggestions")
-    df.join(if (broadcastJoinBack) broadcast(located) else located,
-      Seq("id"), "left")
+  /** Op-55 stage: extract candidate location groups from the
+    * `description` string column. Output: df's columns plus
+    * `location_suggestions`, one row per input row. */
+  def locateStage(df: DataFrame, locator: Locator): DataFrame = {
+    val description = df.schema.fieldIndex("description")
+    appendColumns(df, StructField("location_suggestions",
+        ArrayType(ArrayType(StringType)))) { () => r =>
+      Seq(locator.locate(r.getString(description)))
+    }
   }
 }

@@ -1,7 +1,9 @@
 package graft.geo
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, StringType, StructField}
+
+import graft.enrich.Enrichment
 
 /** External geocoding service boundary (reference
   * ServiceAlertAugmenter.py:76-77,110-121,179-197: a Nominatim client behind
@@ -82,39 +84,41 @@ object GeocodeStage {
   private def defaultSleep(ns: Long): Unit =
     java.util.concurrent.locks.LockSupport.parkNanos(ns)
 
-  /** Geocode `queryCol` per row through `geocoder`, bounding the global call
-    * rate at `qps`. Returns (idCol, gx, gy) with null coords for
-    * unresolved rows.
+  /** Geocode the string column `queryCol` per row through `geocoder`,
+    * bounding the global call rate at `qps`. Output: df's columns plus
+    * `gx`, `gy`, one row per input row; coords are null where the service
+    * can't resolve the query. A null query is never sent: its row carries
+    * through with null coords, takes no token and counts in no metric —
+    * so a cascade marks the rows an earlier step resolved by nulling their
+    * query, and only the stragglers reach the service.
     *
-    * Scale note: the slice is repartitioned to ONE partition on purpose.
+    * Scale note: the stage runs on ONE partition on purpose.
     * An external geocoder is rate-bound (the reference's ceiling is below
     * 1 QPS), so distributing the calls buys nothing — what matters is that
     * the limit holds across the WHOLE job, which per-executor buckets can't
     * guarantee. One partition makes the token bucket globally authoritative;
-    * the cascade's earlier steps (exact, fuzzy) exist precisely to shrink
-    * this slice to the stragglers. */
-  def geocode(df: DataFrame, idCol: String, queryCol: String,
+    * the input must be bounded (a work-limited set), since every row of it
+    * passes through that one task. */
+  def geocode(df: DataFrame, queryCol: String,
               geocoder: Geocoder, qps: Double,
               sleeper: Long => Unit = defaultSleep,
               metrics: Option[GeocodeMetrics] = None): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(queryCol).cast("string"))
-      .as[(Long, String)]
-      .repartition(1)
-      .mapPartitions { it =>
-        val bucket = new TokenBucket(qps, () => System.nanoTime())
-        it.map { case (id, q) =>
-          val waitNs = bucket.acquire()
-          if (waitNs > 0) sleeper(waitNs)
-          val r = geocoder.geocode(q)
-          metrics.foreach { m =>
-            m.calls.add(1); m.waitNanos.add(waitNs)
-            if (r.isDefined) m.hits.add(1)
-          }
-          (id, r.map(_._1), r.map(_._2))
+    require(df.schema(queryCol).dataType == StringType,
+      s"geocode: $queryCol must be a string column")
+    val q = df.schema.fieldIndex(queryCol)
+    Enrichment.appendColumns(df.repartition(1),
+        StructField("gx", DoubleType), StructField("gy", DoubleType)) { () =>
+      val bucket = new TokenBucket(qps, () => System.nanoTime())
+      r => if (r.isNullAt(q)) Seq(null, null) else {
+        val waitNs = bucket.acquire()
+        if (waitNs > 0) sleeper(waitNs)
+        val res = geocoder.geocode(r.getString(q))
+        metrics.foreach { m =>
+          m.calls.add(1); m.waitNanos.add(waitNs)
+          if (res.isDefined) m.hits.add(1)
         }
+        res.fold(Seq[Any](null, null)) { case (x, y) => Seq(x, y) }
       }
-      .toDF(idCol, "gx", "gy")
+    }
   }
 }

@@ -33,19 +33,21 @@ object SpatialJoin {
   /** Pairs (left row, layer row) where the footprints intersect AND the
     * intersection/area ratio of either side exceeds `minRatio`. Convex
     * layer cells take the O(n) clip path; non-convex ones the exact
-    * arrangement sweep (Geometry.intersectionArea dispatches). */
+    * arrangement sweep (Geometry.intersectionArea dispatches).
+    *
+    * The ratio test is part of the join condition, so `joinType` "left"
+    * keeps every `big` row: one with no qualifying cell comes out once,
+    * null-extended (the group-collect form of Op-37 needs no join back). */
   def overlayRatio(big: DataFrame, layer: DataFrame,
                    bigWkt: Column, layerWkt: Column,
-                   minRatio: Double): DataFrame = {
+                   minRatio: Double, joinType: String = "inner"): DataFrame = {
     val b = big.withColumn("__bgeo", stGeomFromWkt(bigWkt))
     val l = layer.withColumn("__lgeo", stGeomFromWkt(layerWkt))
     val inter = stIntersectionAreaBin(col("__bgeo"), col("__lgeo"))
-    b.join(broadcast(l), stIntersectsBin(col("__bgeo"), col("__lgeo")))
-      .withColumn("__inter", inter)
-      .withColumn("__ratio_layer", col("__inter") / stAreaBin(col("__lgeo")))
-      .withColumn("__ratio_big", col("__inter") / stAreaBin(col("__bgeo")))
-      .where(col("__ratio_layer") > minRatio || col("__ratio_big") > minRatio)
-      .drop("__inter", "__bgeo", "__lgeo")
+    b.join(broadcast(l), stIntersectsBin(col("__bgeo"), col("__lgeo")) &&
+        (inter / stAreaBin(col("__lgeo")) > minRatio ||
+          inter / stAreaBin(col("__bgeo")) > minRatio), joinType)
+      .drop("__bgeo", "__lgeo")
   }
 
   /** Op-34: semi-join form — left rows whose footprint intersects any layer

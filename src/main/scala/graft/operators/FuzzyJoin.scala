@@ -342,8 +342,8 @@ object FuzzyJoin {
     * rows survive null-extended. Output: all left columns ++ all right
     * columns (names must not collide).
     *
-    * `broadcastRight` is a PLAN knob, never a semantics knob (the
-    * broadcastJoinBack convention), and it now DEFAULTS from the data:
+    * `broadcastRight` is a PLAN knob, never a semantics knob, and it
+    * DEFAULTS from the data:
     * `None` sizes the right side's optimized-plan estimate against the
     * session's `autoBroadcastJoinThreshold` — the same gate the planner
     * applies to ordinary joins — so a naive call on a large layer gets the

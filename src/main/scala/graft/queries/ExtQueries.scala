@@ -1351,6 +1351,7 @@ object ExtQueries {
     val e = RefQueries.events(s, dir)
     val build = e.where(col("event_type") === "signup")
       .select(col("user_id"), unix_micros(col("ts")).as("tu"), col("value"))
+      .repartition(col("user_id"))  // one exchange for the dedup and the exec
       .groupBy(col("user_id"), col("tu"))
       .agg(max(col("value")).as("v_value"))
       .withColumn("v_ts_us", col("tu"))
@@ -1635,8 +1636,11 @@ object ExtQueries {
     * null. */
   val xResample: Q = (s, dir) => {
     val hUs = 3600L * 1000000
+    // keyed on user_id once: the build dedup, the grid aggregate and the
+    // exec's user_id clustering all read that one exchange
     val e = RefQueries.events(s, dir)
       .select(col("user_id"), unix_micros(col("ts")).as("tu"), col("value"))
+      .repartition(col("user_id"))
     val build = e.groupBy(col("user_id"), col("tu"))
       .agg(max(col("value")).as("v_value"))
       .withColumnRenamed("tu", "ts_us")
@@ -1838,7 +1842,10 @@ object ExtQueries {
     * query under its own name. */
   val xAsofJoin: Q = (s, dir) => {
     val e = RefQueries.events(s, dir)
+    // keyed on user_id BEFORE the (user_id, ts) dedup: that one exchange
+    // satisfies both the aggregate and the exec's user_id clustering
     val build = e.where(col("event_type") === "signup")
+      .repartition(col("user_id"))
       .groupBy(col("user_id"), col("ts"))
       .agg(max(col("value")).as("v_value"))
       .withColumn("v_ts", col("ts"))

@@ -129,7 +129,7 @@ object GeoQueries {
     * match against the layer names, (3) the external geocoder behind the
     * rate-limited [[graft.geo.GeocodeStage]] service boundary (reference
     * ServiceAlertAugmenter.py:179-197), (4) fallback: buffered point.
-    * Each step only sees what the previous steps could not resolve.
+    * Each step queries only what the previous steps could not resolve.
     *
     * Output is a numeric digest (resolution kind + footprint area at 6 dp)
     * rather than raw WKT: the kind and area are closed-form per step, so the
@@ -142,56 +142,49 @@ object GeoQueries {
       .when(key % 3 === 1, concat(lit("NATIN#"), (key % 25).cast("string")))
       .otherwise(concat(lit("unknown place "), key.cast("string")))
 
-  /** The Op-56/57/58 cascade body over (c_custkey, loc_text) rows: returns
-    * (c_custkey, cell_wkt, resolution). Factored out of [[g56GeocodeCascade]]
-    * so the EP-3 composed pipeline runs the identical stage. */
+  /** The Op-56/57/58 cascade body over rows carrying (c_custkey, loc_text):
+    * returns every input column plus `cell_wkt` and `resolution`, one row
+    * per input row. Factored out of [[g56GeocodeCascade]] so the EP-3
+    * composed pipeline runs the identical stage.
+    *
+    * One linear chain, each step once per action: (1) a left exact join on
+    * the layer name; (2) [[graft.operators.FuzzyJoin.topOneLeft]] over a
+    * query that is null where (1) hit; (3) the geocoder over a query that
+    * is null where (1) or (2) hit — [[graft.geo.GeocodeStage]] never sends
+    * a null query, so each straggler reaches the rate-limited service
+    * exactly once and no other row does; (4) one projection that picks the
+    * footprint (with the buffered-point fallback) and the resolution.
+    * Nothing is persisted: the plan stays lazy and lineage-recoverable.
+    *
+    * The geocode step runs the whole frame on ONE partition (its global
+    * rate bound), so the input must be bounded: Op-13's work limit in
+    * EP-3, 500 rows in g56. `c_custkey` must be unique (it keys the fuzzy
+    * step's per-row pick). */
   private[queries] def cascadeResolve(cust: DataFrame, cells: DataFrame,
-                             broadcastFuzzyLayer: Boolean = true,
                              geocodeMetrics: Option[graft.geo.GeocodeMetrics] = None): DataFrame = {
     val layer = cells.select(
-      concat(lit("NATION#"), col("n_nationkey").cast("string")).as("layer_name"),
-      col("cell_wkt"))
-    // (1) exact name match
-    val ex = cust.join(broadcast(layer), col("loc_text") === col("layer_name"), "left")
-    val exactHit = ex.where(col("layer_name").isNotNull)
-      .select(col("c_custkey"), col("cell_wkt"), lit("exact").as("resolution"))
-    val rest1 = ex.where(col("layer_name").isNull).select("c_custkey", "loc_text")
-    // (2) fuzzy match, best by (distance, name) — size-gated dispatch: the
-    // 25-name layer here rides the broadcast nested-loop; a large layer
-    // flips the knob and the same step runs as the FastSS deletion
-    // equi-join (FuzzyJoin.topOneLeft; both forms output-identical).
-    // NOT persisted: the fuzzy join feeds two branches (hits + the geocode
-    // slice), so it recomputes once per action — a bounded narrow recompute.
-    // A persist here would pin the lineage in the CacheManager for the
-    // session's lifetime (and WARN on every re-invocation); at 100 TB a
-    // recompute beats an unbounded cache. The stage that must NOT run
-    // twice — the rate-limited external geocoder — is consumed exactly
-    // once (see below).
-    val f1 = graft.operators.FuzzyJoin.topOneLeft(rest1, "c_custkey",
-      "loc_text", layer, "layer_name", maxDist = 2,
-      broadcastRight = Some(broadcastFuzzyLayer))
-    val fuzzyHit = f1.where(col("layer_name").isNotNull)
-      .select(col("c_custkey"), col("cell_wkt"), lit("fuzzy").as("resolution"))
-    val rest2 = f1.where(col("layer_name").isNull).select("c_custkey", "loc_text")
-    // (3)+(4) rate-limited external geocoder (deterministic stub; the qps
-    // bound is the service contract, set loose here so the query is
-    // instant), with the fallback FUSED into the same projection: one
-    // consumer, so each unresolved row reaches the service exactly once
-    // per action — no persist needed to hold the service boundary, and the
-    // plan stays lazy and lineage-recoverable (an executor loss replays;
-    // a cached-only boundary would not)
+      concat(lit("NATION#"), col("n_nationkey").cast("string")).as("__layer_name"),
+      col("cell_wkt").as("__layer_wkt"))
+    // (1) exact name match: layer names are unique, so at most one hit
+    val exact = cust.join(broadcast(layer.toDF("__exact_name", "__exact_wkt")),
+      col("loc_text") === col("__exact_name"), "left")
+    // (2) fuzzy match, best by (distance, name), for exact misses only; the
+    // 25-name layer rides the broadcast nested-loop
+    val fuzzy = graft.operators.FuzzyJoin.topOneLeft(
+      exact.withColumn("__fuzzy_q",
+        when(col("__exact_name").isNull, col("loc_text"))),
+      "c_custkey", "__fuzzy_q", layer.toDF("__fuzzy_name", "__fuzzy_wkt"),
+      "__fuzzy_name", maxDist = 2, broadcastRight = Some(true))
+    // (3) rate-limited external geocoder (deterministic stub; the qps bound
+    // is the service contract, set loose here so the query is instant)
+    val geocoded = GeocodeStage.geocode(
+      fuzzy.withColumn("__geo_q",
+        when(col("__exact_name").isNull && col("__fuzzy_name").isNull,
+          col("loc_text"))),
+      "__geo_q", KeyedStubGeocoder, qps = 1e6, metrics = geocodeMetrics)
+    // (4) footprint + resolution; fallback: a buffered point at the key
     val px = ((col("c_custkey") * 7) % 100).cast("double") / 10.0
     val py = ((col("c_custkey") * 13) % 100).cast("double") / 10.0
-    val geoResolved = GeocodeStage.geocode(rest2, "c_custkey", "loc_text",
-        KeyedStubGeocoder, qps = 1e6, metrics = geocodeMetrics)
-      .select(col("c_custkey"),
-        when(col("gx").isNotNull,
-          GeoFunctions.stBufferEnv(
-            GeoFunctions.stPoint(col("gx"), col("gy")), lit(0.02)))
-          .otherwise(GeoFunctions.stBufferEnv(
-            GeoFunctions.stPoint(px, py), lit(0.01))).as("cell_wkt"),
-        when(col("gx").isNotNull, lit("geocoded"))
-          .otherwise(lit("fallback")).as("resolution"))
     // per-stage funnel as observed metrics (CollectMetrics — a map-side
     // count piggybacking the action, no extra job): how many rows each
     // cheap stage resolved vs how many leaked through to the rate-limited
@@ -199,7 +192,17 @@ object GeoQueries {
     // growing geocoded+fallback share against a fixed-QPS ceiling flags a
     // layer/name drift long before wall-clock does. Readable via a
     // QueryExecutionListener (GeocodeSpec) or the SQL UI.
-    exactHit.unionByName(fuzzyHit).unionByName(geoResolved)
+    geocoded.select(cust.columns.toSeq.map(col) :+
+        coalesce(col("__exact_wkt"), col("__fuzzy_wkt"),
+          when(col("gx").isNotNull,
+            GeoFunctions.stBufferEnv(
+              GeoFunctions.stPoint(col("gx"), col("gy")), lit(0.02)))
+            .otherwise(GeoFunctions.stBufferEnv(
+              GeoFunctions.stPoint(px, py), lit(0.01)))).as("cell_wkt") :+
+        when(col("__exact_name").isNotNull, lit("exact"))
+          .when(col("__fuzzy_name").isNotNull, lit("fuzzy"))
+          .when(col("gx").isNotNull, lit("geocoded"))
+          .otherwise(lit("fallback")).as("resolution"): _*)
       .observe("graft.geo.cascade",
         count(when(col("resolution") === "exact", 1)).as("exact"),
         count(when(col("resolution") === "fuzzy", 1)).as("fuzzy"),
@@ -223,7 +226,7 @@ object GeoQueries {
     * via overlay + group-collect (Ops 33+37), map-image filename (Op-59),
     * and the cache merge (Ops 12+14). The per-op queries verify each stage
     * in isolation; this locks the STAGE BOUNDARIES — column contracts,
-    * join-backs and the fresh/kept union — the way q_ep2_pipeline locks the
+    * row carry-through and the fresh/kept union — the way q_ep2_pipeline locks the
     * Fixer chain.
     *
     * World model: alerts are customers ≤ 500 (the geo world). A synthetic
@@ -236,50 +239,56 @@ object GeoQueries {
     * 53→54→56-58→33+37→59, exactly the stage boundaries q_ep3_pipeline
     * locks, factored so the batch pipeline and the streaming composition
     * ([[graft.streaming.StreamingAugmenter]]) run the IDENTICAL stages.
-    * `work` must carry (id, c_name, c_mktsegment) and be bounded (the
-    * Op-13 contract: every stats-less join-back below rides a broadcast
-    * justified by the work limit). Output: (id, tweet_text, toot_text,
-    * resolution, fp_area, inferred_cells, image_filename). */
+    * `work` must carry (id, c_name, c_mktsegment), with `id` unique, and be
+    * bounded (the Op-13 contract: the geocode cascade runs on one
+    * partition). Output: (id, tweet_text, toot_text, resolution, fp_area,
+    * inferred_cells, image_filename), one row per work row.
+    *
+    * One linear pipeline: every stage carries the row through, so each
+    * operator and each service boundary (the drafter, the geocoder)
+    * appears once in the plan and runs once per action — no self-join,
+    * no join back on id, no union of branches. */
   def ep3EnrichStage(work: DataFrame, cells: DataFrame): DataFrame = {
     import graft.enrich.Enrichment
-    // Op-53: drafting service boundary (mapPartitions, join-back on id);
-    // the input is work-limited, so the stats-less typed output is
-    // parameter-bounded and the join-back rides a broadcast
+    // Op-53: drafting service boundary (carries the row, appends tweet_text)
     val drafted = Enrichment.draftStage(
       work.select(col("id"), col("c_mktsegment").as("title"),
         col("c_name").as("description")),
-      Enrichment.StubDrafter, broadcastJoinBack = true)
+      Enrichment.StubDrafter)
     // Op-54: toot = tweet + segment hashtag + #CapeTown
     val hashtags = typedlit(Map(
       "BUILDING" -> "#Building", "MACHINERY" -> "#Machinery",
       "HOUSEHOLD" -> "#Household"))
-    val tooted = drafted.withColumn("toot_text",
-      Enrichment.tootColumn(col("tweet_text"),
-        try_element_at(hashtags, col("title"))))
-    // Ops 56-58: the geocode cascade over the work set only
+    // Ops 56-58: the geocode cascade, carrying tweet and toot
     val fp = cascadeResolve(
-      tooted.select(col("id").as("c_custkey"), locText(col("id")).as("loc_text")),
+      drafted.select(col("id").as("c_custkey"), locText(col("id")).as("loc_text"),
+        col("tweet_text"), Enrichment.tootColumn(col("tweet_text"),
+          try_element_at(hashtags, col("title"))).as("toot_text")),
       cells)
-    // Ops 33+37: infer intersecting cells from the resolved footprint
+    // Ops 33+37: a LEFT overlay of the resolved footprint, then one
+    // group-collect per alert; an alert no cell qualifies for gets null
+    // inferred_cells (an empty list)
     val inferred = SpatialJoin.overlayRatio(
-        fp.select(col("c_custkey"), col("cell_wkt").as("fp_wkt")), cells,
-        col("fp_wkt"), col("cell_wkt"), minRatio = 0.045)
-      .groupBy(col("c_custkey"))
-      .agg(array_join(array_sort(collect_list(col("n_name"))), ",")
-        .as("inferred_cells"))
-    // Op-59: map-image filename from the resolution digest. Both join-backs
-    // ride broadcasts: the cascade/overlay outputs are stats-less (typed
-    // geocode stage in the lineage) but bounded by the work limit
-    val fpCols = fp.select(col("c_custkey").as("id"), col("resolution"),
-        round(GeoFunctions.stArea(col("cell_wkt")), 6).as("fp_area"))
-      .join(broadcast(inferred.withColumnRenamed("c_custkey", "id")),
-        Seq("id"), "left")
+        fp.select(col("c_custkey").as("id"), col("tweet_text"),
+          col("toot_text"), col("resolution"),
+          round(GeoFunctions.stArea(col("cell_wkt")), 6).as("fp_area"),
+          col("cell_wkt").as("fp_wkt")),
+        cells, col("fp_wkt"), col("cell_wkt"), minRatio = 0.045,
+        joinType = "left")
+      .groupBy(col("id"))
+      .agg(first(col("tweet_text")).as("tweet_text"),
+        first(col("toot_text")).as("toot_text"),
+        first(col("resolution")).as("resolution"),
+        first(col("fp_area")).as("fp_area"),
+        collect_list(col("n_name")).as("__cells"))
+    // Op-59: map-image filename from the resolution digest
     val key = concat_ws("_", lit("map"), col("resolution"), col("id").cast("string"))
     val b64 = base64(substring(key, 1, 48).cast("binary"))
-    tooted.select(col("id"), col("tweet_text"), col("toot_text"))
-      .join(broadcast(fpCols), Seq("id"))
-      .withColumn("image_filename",
-        when(length(b64) > 22, sha2(key, 256)).otherwise(b64))
+    inferred.select(col("id"), col("tweet_text"), col("toot_text"),
+      col("resolution"), col("fp_area"),
+      when(size(col("__cells")) > 0,
+        array_join(array_sort(col("__cells")), ",")).as("inferred_cells"),
+      when(length(b64) > 22, sha2(key, 256)).otherwise(b64).as("image_filename"))
   }
 
   val qEp3Pipeline: Q = (s, dir) => {

@@ -1109,7 +1109,8 @@ object RefQueries {
   // ---- §2.8 enrichment (deterministic stub services; real plumbing) ----
 
   /** Op-53: LLM draft stage — mapPartitions over (id, title, description)
-    * behind the Drafter interface, joined back by id. The stub drafter's
+    * behind the Drafter interface, each row carried through with its
+    * tweet_text appended. The stub drafter's
     * contract (≤280 chars, None on empty) is SQL-expressible, so this stage
     * gets a full oracle despite being a typed enrichment. */
   val q53LlmDraft: Q = (s, dir) => {

@@ -80,6 +80,21 @@ class EnrichSpec extends SparkTestBase {
     assert(got == Seq(Seq("Burst", "Main")))
   }
 
+  test("draft and locate stages keep one row per input row: rows that " +
+    "share an id are not multiplied") {
+    val df = Seq((1L, "Water Off", "Main Road"), (1L, "Power Off", "Church Street"))
+      .toDF("id", "title", "description")
+    val drafted = Enrichment.draftStage(df, Enrichment.StubDrafter)
+    assert(drafted.columns.toSeq == Seq("id", "title", "description", "tweet_text"))
+    assert(drafted.select("tweet_text").as[String].collect().sorted.toSeq ==
+      Seq("Power Off: Church Street", "Water Off: Main Road"))
+    val located = Enrichment.locateStage(df, Enrichment.StubLocator)
+    assert(located.select("description", "location_suggestions")
+      .as[(String, Seq[Seq[String]])].collect().toMap ==
+      Map("Main Road" -> Seq(Seq("Main", "Road")),
+        "Church Street" -> Seq(Seq("Church", "Street"))))
+  }
+
   test("Op-48-50 emailer predicates + Op-31 sent registry") {
     val alerts = Seq(
       (1L, "Open", "Water", "Suburb", Seq("ward 57")),

@@ -29,9 +29,10 @@ class GeocodeSpec extends SparkTestBase {
   test("GeocodeStage returns coords for resolved rows, nulls otherwise, on ONE partition") {
     val in = Seq((2L, "place 2"), (3L, "place 3"), (8L, "place 8"))
       .toDF("id", "q")
-    val out = GeocodeStage.geocode(in, "id", "q", KeyedStubGeocoder, qps = 1e6)
+    val out = GeocodeStage.geocode(in, "q", KeyedStubGeocoder, qps = 1e6)
     assert(out.rdd.getNumPartitions == 1) // global rate bound needs one bucket
-    val rows = out.as[(Long, Option[Double], Option[Double])].collect()
+    val rows = out.select("id", "gx", "gy")
+      .as[(Long, Option[Double], Option[Double])].collect()
       .map { case (k, x, y) => k -> ((x, y)) }.toMap
     assert(rows(2L) == (Some(0.6), Some(2.2)))
     assert(rows(3L) == (None, None))
@@ -50,15 +51,28 @@ class GeocodeSpec extends SparkTestBase {
       }
     }
     val in = Seq((1L, "a"), (2L, "b")).toDF("id", "q")
-    val out = GeocodeStage.geocode(in, "id", "q", g, qps = 1e6).collect()
+    val out = GeocodeStage.geocode(in, "q", g, qps = 1e6).collect()
     assert(out.length == 2)
+  }
+
+  test("GeocodeStage carries every row through and never sends a null query") {
+    val m = GeocodeMetrics(spark)
+    val in = Seq((2L, Some("place 2"), "a"), (3L, None, "b"), (4L, None, "c"))
+      .toDF("id", "q", "tag")
+    val out = GeocodeStage.geocode(in, "q", KeyedStubGeocoder, qps = 1e6,
+      metrics = Some(m))
+    assert(out.columns.toSeq == Seq("id", "q", "tag", "gx", "gy"))
+    val rows = out.select("id", "tag", "gx").as[(Long, String, Option[Double])]
+      .collect().sortBy(_._1).toSeq
+    assert(rows == Seq((2L, "a", Some(0.6)), (3L, "b", None), (4L, "c", None)))
+    assert(m.calls.value === 1L)
   }
 
   test("GeocodeMetrics counts calls, hits, and rate-limiter waits") {
     val m = GeocodeMetrics(spark)
     val in = Seq((2L, "place 2"), (3L, "place 3"), (8L, "place 8"))
       .toDF("id", "q")
-    GeocodeStage.geocode(in, "id", "q", KeyedStubGeocoder, qps = 1e6,
+    GeocodeStage.geocode(in, "q", KeyedStubGeocoder, qps = 1e6,
       metrics = Some(m)).collect()
     assert(m.calls.value === 3L)
     assert(m.hits.value === 2L)   // keys 2 and 8 resolve, 3 does not
@@ -133,7 +147,7 @@ class GeocodeSpec extends SparkTestBase {
       }
     }
     val in = Seq((1L, "aa"), (2L, "b"), (3L, "ccc")).toDF("id", "q")
-    val fused = GeocodeStage.geocode(in, "id", "q", g, qps = 1e6)
+    val fused = GeocodeStage.geocode(in, "q", g, qps = 1e6)
       .select(col("id"),
         when(col("gx").isNotNull, lit("hit")).otherwise(lit("miss")).as("r"))
     assert(fused.collect().length === 3)

@@ -443,6 +443,14 @@ class PlanSpec extends SparkTestBase {
     assert(countIn(p, "Exchange hashpartitioning") <= 3, p)
   }
 
+  test("as-of build dedup shares the key exchange: x_asof_join, " +
+    "x_asof_exec and x_asof_nearest shuffle once per side") {
+    for (q <- Seq("x_asof_join", "x_asof_exec", "x_asof_nearest")) {
+      val p = plan(q)
+      assert(countIn(p, "Exchange hashpartitioning") === 2, s"$q:\n$p")
+    }
+  }
+
   test("as-of queries run on the sorted-merge exec: x_asof_join, " +
     "x_asof_nearest and x_resample plan through AsOfJoin with no Window node") {
     for (q <- Seq("x_asof_join", "x_asof_nearest", "x_resample")) {
@@ -628,7 +636,7 @@ class PlanSpec extends SparkTestBase {
     // (2 at sf0.001; slack for planner-inserted re-keys) — a regression past
     // this means a stage boundary started shuffling the full alert set
     assert(countIn(p, "Exchange hashpartitioning") <= 4, p)
-    // the drafted join-back is work-limited → broadcast, never sort-merge
+    // no stage boundary of the bounded chain falls to a sort-merge join
     assert(countIn(p, "SortMergeJoin") === 0, p)
   }
 
@@ -639,6 +647,19 @@ class PlanSpec extends SparkTestBase {
     // eager test of the fresh side would run the drafting boundary, the
     // geocode cascade and the overlay here and again at the write
     assert(jobs <= 2, s"$jobs jobs while building q_ep3_pipeline")
+  }
+
+  test("ep3 composed pipeline: the executed plan holds each service " +
+    "boundary once — exactly 2 MapPartitions (drafter, geocoder), at most 8 " +
+    "file scans") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, MapPartitionsExec}
+    val df = SparkEntry.queries("q_ep3_pipeline")(spark, dir)
+    df.write.format("noop").mode("overwrite").save()
+    val nodes = Bench.allNodes(df.queryExecution.executedPlan)
+    val mapp = nodes.count(_.isInstanceOf[MapPartitionsExec])
+    val scans = nodes.count(_.isInstanceOf[FileSourceScanExec])
+    assert(mapp === 2, s"$mapp MapPartitions:\n${df.queryExecution.executedPlan}")
+    assert(scans <= 8, s"$scans file scans:\n${df.queryExecution.executedPlan}")
   }
 
   test("recall-target LSH queries: building the frame counts the corpus " +
