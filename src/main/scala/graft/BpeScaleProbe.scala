@@ -31,7 +31,7 @@ object BpeScaleProbe {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession(GraftSession.cpus("32"), logLevel = "ERROR")
 
-    val docs = spark.read.parquet(s"$sfDir/$tableName.parquet")
+    val docs = graft.io.Tables.read(spark, s"$sfDir/$tableName.parquet")
     val times = new Array[Double](nMerges + 1)
     val t0 = System.nanoTime()
     val table = graft.ext.TextOps.bpeLearnMerges(docs, col(column), nMerges,

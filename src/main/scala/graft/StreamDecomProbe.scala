@@ -5,6 +5,8 @@ import java.sql.Timestamp
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
 
+import graft.io.Tables
+
 /** Graceful decommission DURING the 3-stage streaming frontier — the one
   * failure×streaming cross product the batch RetryProbe matrix does not
   * cover. A spot fleet loses executors mid-micro-batch with RocksDB
@@ -114,8 +116,8 @@ object StreamDecomProbe {
       val chunks = dedups.head._1.numRowsTotal
       val urls = dedups.last._1.numRowsTotal
       q.stop()
-      val full = spark.read.parquet(out).collect().map(_.toString).sorted
-      val proj = spark.read.parquet(out)
+      val full = Tables.read(spark, out).collect().map(_.toString).sorted
+      val proj = Tables.read(spark, out)
         .select(org.apache.spark.sql.functions.concat_ws("|",
           org.apache.spark.sql.functions.col("chunk_md5"),
           org.apache.spark.sql.functions.col("n_tokens")))

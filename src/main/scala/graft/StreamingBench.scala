@@ -176,7 +176,7 @@ object StreamingBench {
     import graft.streaming.StreamingAugmenter.AlertSnapshot
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cells = graft.queries.GeoQueries.nationCells(spark, sfDir)
-    val alerts = spark.read.parquet(s"$sfDir/customer.parquet")
+    val alerts = graft.io.Tables.read(spark, s"$sfDir/customer.parquet")
       .where(col("c_custkey") <= 500)
       .select(col("c_custkey"), col("c_name"), col("c_mktsegment"))
       .collect().map(r => (r.getLong(0), r.getString(1), r.getString(2)))

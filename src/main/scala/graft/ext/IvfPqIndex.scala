@@ -3,7 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.io.BucketedStore
+import graft.io.{BucketedStore, Tables}
 
 /** Build-once / serve-many persistence for the residual IVF-PQ index — the
   * deployment shape every 100-TB ANN installation actually runs. The
@@ -92,13 +92,13 @@ object IvfPqIndex {
     * with; parquet doubles round-trip exactly, so probe selection is
     * bit-identical to the in-memory path). */
   def loadCentroids(spark: SparkSession, stored: Stored): DataFrame =
-    SimilarityOps.localize(spark.read.parquet(stored.centroidsPath))
+    SimilarityOps.localize(Tables.read(spark, stored.centroidsPath))
 
   /** The stored codebook, reassembled: m = #subspaces, ksub = #codes per
     * subspace, dsub = codeword length — all recovered from the rows. */
   def loadCodebook(spark: SparkSession, stored: Stored): PqOps.Codebook = {
     import spark.implicits._
-    val rows = spark.read.parquet(stored.codebookPath)
+    val rows = Tables.read(spark, stored.codebookPath)
       .select(col("sub").cast("int"), col("code").cast("int"),
         col("w").cast("array<double>"))
       .as[(Int, Int, Seq[Double])].collect()

@@ -47,3 +47,50 @@ object FunctionInstaller {
       spark.sessionState.functionRegistry.registerFunction(id, info, b)
     }
 }
+
+/** Parquet footer bridge for [[graft.io.Tables]]: the file listing and the
+  * footer conversion that `spark.read.parquet`'s schema inference uses.
+  * `listing` is Spark's own file index (hidden-file rules, Hive-style
+  * partition discovery and partition column types included). `footerSchema`
+  * builds the converter as `ParquetFileFormat.mergeSchemasInParallel` does,
+  * from the session's SQL conf (binaryAsString, int96AsTimestamp,
+  * inferTimestampNTZ, nanosAsLong, respectUnknownTypeAnnotation), and
+  * `readSchemaFromFooter` prefers the Spark schema stored in the footer, as
+  * inference does. A read relation makes an inferred schema nullable
+  * throughout but keeps a pinned one as given, so the result is made
+  * nullable here. `sessionState` and `asNullable` are Spark-private, hence
+  * this shim. */
+object ParquetSchemaBridge {
+  import org.apache.hadoop.fs.{FileStatus, Path}
+  import org.apache.parquet.format.converter.ParquetMetadataConverter
+  import org.apache.parquet.hadoop.Footer
+  import org.apache.parquet.hadoop.util.HadoopInputFile
+  import org.apache.spark.sql.execution.datasources.InMemoryFileIndex
+  import org.apache.spark.sql.execution.datasources.parquet.{
+    ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
+  import org.apache.spark.sql.types.StructType
+
+  /** The files and the partition schema Spark's file index finds under
+    * `path` (listed on the driver, as the read itself lists them). */
+  def listing(spark: org.apache.spark.sql.SparkSession, path: Path)
+      : (Seq[FileStatus], StructType) = {
+    val index = new InMemoryFileIndex(spark, Seq(path), Map.empty, None)
+    (index.allFiles(), index.partitionSchema)
+  }
+
+  def footerSchema(spark: org.apache.spark.sql.SparkSession,
+                   file: FileStatus): StructType = {
+    val conf = spark.sessionState.conf
+    val converter = new ParquetToSparkSchemaConverter(
+      assumeBinaryIsString = conf.isParquetBinaryAsString,
+      assumeInt96IsTimestamp = conf.isParquetINT96AsTimestamp,
+      inferTimestampNTZ = conf.parquetInferTimestampNTZEnabled,
+      nanosAsLong = conf.legacyParquetNanosAsLong,
+      respectUnknownTypeAnnotation = conf.parquetReaderRespectUnknownTypeAnnotation)
+    val footer = ParquetFooterReader.readFooter(
+      HadoopInputFile.fromStatus(file, spark.sessionState.newHadoopConf()),
+      ParquetMetadataConverter.SKIP_ROW_GROUPS)
+    ParquetFileFormat.readSchemaFromFooter(new Footer(file.getPath, footer), converter)
+      .asNullable
+  }
+}

@@ -88,15 +88,8 @@ case class SrpBandKeys(child: Expression, planes: IndexedSeq[IndexedSeq[Double]]
         var s = 0.0
         var i = 0
         while (i < dim) { s += x(i) * pl(i); i += 1 }
-        // Catalyst round(_, 6) semantics INCLUDING non-finite passthrough
-        // (BigDecimal.valueOf(NaN) throws; Catalyst round(NaN)=NaN and
-        // NaN > 0 is true in Spark SQL ordering)
-        val rounded =
-          if (java.lang.Double.isNaN(s) || java.lang.Double.isInfinite(s)) s
-          else java.math.BigDecimal.valueOf(s)
-            .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
         // NaN > 0 mirrors Spark's GreaterThan on double (NaN sorts greatest)
-        if (java.lang.Double.compare(rounded, 0.0) > 0) key |= (1L << j)
+        if (java.lang.Double.compare(Round6(s), 0.0) > 0) key |= (1L << j)
         j += 1
       }
       out(b) = key
@@ -107,6 +100,53 @@ case class SrpBandKeys(child: Expression, planes: IndexedSeq[IndexedSeq[Double]]
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
+}
+
+/** Catalyst's `round(x, 6)` on doubles (BigDecimal HALF_UP; NaN and ±Inf
+  * pass through), and the arg-best over rounded scores that rounds only the
+  * scores that can tie with the best. */
+private[graft] object Round6 {
+
+  def apply(x: Double): Double =
+    if (java.lang.Double.isNaN(x) || java.lang.Double.isInfinite(x)) x
+    else java.math.BigDecimal.valueOf(x)
+      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
+
+  /** The index a scan over `scores(0 until n)` returns when it rounds every
+    * score, starts from -Inf (`max`) or +Inf (arg-min) at index 0, and moves
+    * only on a strictly better rounded score under
+    * `java.lang.Double.compare` (NaN greatest: it wins an arg-max and loses
+    * an arg-min).
+    *
+    * Rounding is monotone (`Double.toString` keeps order and HALF_UP
+    * rounding does too), so the best rounded score is the rounding of the
+    * best raw one, and the answer is the first index whose rounded score
+    * equals it. Two scores that round alike lie within 1e-6 plus their
+    * decimal conversion error (half an ulp each) of one another, so only
+    * scores within 2e-6 + 2 ulp of the best raw score are rounded. Non-finite
+    * scores round to themselves and no finite score rounds to one. */
+  def argBest(scores: Array[Double], n: Int, max: Boolean): Int = {
+    val sign = if (max) 1 else -1
+    var b = 0
+    var k = 1
+    while (k < n) {
+      if (sign * java.lang.Double.compare(scores(k), scores(b)) > 0) b = k
+      k += 1
+    }
+    val best = scores(b)
+    if (java.lang.Double.isNaN(best) || java.lang.Double.isInfinite(best))
+      // a best equal to the start value never moved the scan
+      if (best == (if (max) Double.NegativeInfinity else Double.PositiveInfinity)) 0
+      else b
+    else {
+      val target = apply(best)
+      val bound = best - sign * (2e-6 + 2 * math.ulp(best))
+      k = 0
+      while (!(sign * java.lang.Double.compare(scores(k), bound) >= 0 &&
+               apply(scores(k)) == target)) k += 1
+      k
+    }
+  }
 }
 
 /** Nearest-centroid assignment in one pass: returns the centroid_id (from
@@ -137,19 +177,13 @@ case class NearestCentroid(child: Expression, ids: IndexedSeq[Int],
     math.sqrt(s)
   }
 
-  private def round6(x: Double): Double =
-    if (java.lang.Double.isNaN(x) || java.lang.Double.isInfinite(x)) x
-    else java.math.BigDecimal.valueOf(x)
-      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
-
   override protected def nullSafeEval(v: Any): Any = {
     val x = v.asInstanceOf[ArrayData].toDoubleArray()
     var xs = 0.0
     var i = 0
     while (i < x.length) { xs += x(i) * x(i); i += 1 }
     val xn = math.sqrt(xs)
-    var bestId = idsArr(0)
-    var best = Double.NegativeInfinity
+    val sims = new Array[Double](centroidsArr.length)
     var k = 0
     while (k < centroidsArr.length) {
       val c = centroidsArr(k)
@@ -157,11 +191,10 @@ case class NearestCentroid(child: Expression, ids: IndexedSeq[Int],
       var s = 0.0
       i = 0
       while (i < n) { s += x(i) * c(i); i += 1 }
-      val sim = round6(s / (xn * cnorms(k)))
-      if (java.lang.Double.compare(sim, best) > 0) { best = sim; bestId = idsArr(k) }
+      sims(k) = s / (xn * cnorms(k))
       k += 1
     }
-    bestId
+    idsArr(Round6.argBest(sims, sims.length, max = true))
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
@@ -200,15 +233,12 @@ case class PqEncode(child: Expression, m: Int, dsub: Int,
     while (i < w.length) { s += w(i) * w(i); i += 1 }
     s
   })
-
-  private def round6(x: Double): Double =
-    if (java.lang.Double.isNaN(x) || java.lang.Double.isInfinite(x)) x
-    else java.math.BigDecimal.valueOf(x)
-      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
+  private lazy val ksubMax: Int = wArr.map(_.length).max
 
   override protected def nullSafeEval(v: Any): Any = {
     val x = v.asInstanceOf[ArrayData].toDoubleArray()
     val codes = new Array[Int](m)
+    val dists = new Array[Double](ksubMax)
     var s = 0
     while (s < m) {
       val off = s * dsub
@@ -217,8 +247,6 @@ case class PqEncode(child: Expression, m: Int, dsub: Int,
       var i = 0
       while (i < len) { val xi = x(off + i); svv += xi * xi; i += 1 }
       val ws = wArr(s)
-      var bestK = 1
-      var best = Double.PositiveInfinity
       var k = 0
       while (k < ws.length) {
         val w = ws(k)
@@ -226,11 +254,10 @@ case class PqEncode(child: Expression, m: Int, dsub: Int,
         var ab = 0.0
         i = 0
         while (i < n) { ab += x(off + i) * w(i); i += 1 }
-        val d = round6(svv + wNorm2(s)(k) - 2.0 * ab)
-        if (java.lang.Double.compare(d, best) < 0) { best = d; bestK = k + 1 }
+        dists(k) = svv + wNorm2(s)(k) - 2.0 * ab
         k += 1
       }
-      codes(s) = bestK
+      codes(s) = Round6.argBest(dists, ws.length, max = false) + 1
       s += 1
     }
     new org.apache.spark.sql.catalyst.util.GenericArrayData(codes)

@@ -59,7 +59,7 @@ object BucketedStore {
   def compact(spark: SparkSession, inPath: String, outPath: String,
               sortKey: String, targetFileRows: Long,
               numFiles: Int): Unit =
-    spark.read.parquet(inPath)
+    Tables.read(spark, inPath)
       .repartitionByRange(numFiles, org.apache.spark.sql.functions.col(sortKey))
       .sortWithinPartitions(sortKey)
       .write.mode(SaveMode.Overwrite)

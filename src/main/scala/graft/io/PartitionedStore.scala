@@ -62,5 +62,5 @@ object PartitionedStore {
     * directories at planning time (PartitionedStoreSpec locks the
     * `PartitionFilters` evidence). */
   def readPartitioned(spark: SparkSession, basePath: String): DataFrame =
-    spark.read.parquet(basePath)
+    Tables.read(spark, basePath)
 }

@@ -95,5 +95,7 @@ class StageStore(spark: SparkSession, root: String, retain: Int = 5) {
     read(vs.head)
   }
 
-  def read(versionId: Long): DataFrame = spark.read.parquet(s"$root/v=$versionId")
+  /** Read one version. Its schema comes from a footer on the driver
+    * ([[Tables]]), so resolving and reading a version starts no job. */
+  def read(versionId: Long): DataFrame = Tables.read(spark, s"$root/v=$versionId")
 }

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.core.{Checksum, FixerColumns}
 import graft.incremental.Incremental
+import graft.io.Tables
 import graft.operators.Dedup
 import graft.serve.{Broadcaster, Emailer}
 
@@ -17,9 +18,10 @@ object RefQueries {
 
   type Q = (SparkSession, String) => DataFrame
 
-  /** The one table loader of the query surface: `<dir>/<name>.parquet`. */
+  /** The query surface's table path helper: `<dir>/<name>.parquet`, read
+    * through [[graft.io.Tables]] so building a query starts no schema job. */
   private[queries] def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
+    Tables.read(s, s"$dir/$name.parquet")
 
   /** The events table's `ts` encoding has varied across testdata
     * generations: TIMESTAMP(NANOS) (which Spark's vector reader only accepts

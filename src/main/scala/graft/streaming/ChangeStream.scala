@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 
+import graft.io.Tables
+
 /** The reference's event-driven side re-expressed as Structured Streaming.
   *
   * Reference: `cct_recon/alerts-recon.py` — on each new snapshot, diff
@@ -78,7 +80,7 @@ object ChangeStream {
   def run(spark: SparkSession, inputPath: String, checkpoint: String,
           watermark: String, sink: (String, DataFrame) => Unit,
           notify: Seq[Long] => Unit): StreamingQuery = {
-    val schema = spark.read.parquet(inputPath).schema
+    val schema = Tables.schema(spark, inputPath)
     val stream = spark.readStream.schema(schema).parquet(inputPath)
     newStatusPairs(stream, "Id", "status", "ts", watermark)
       .writeStream

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 
 import graft.incremental.Incremental
-import graft.io.StageStore
+import graft.io.{StageStore, Tables}
 
 /** The Augmenter nightly chain (reference ServiceAlertAugmenter.py:778-812
   * over ServiceAlertBase.py:123-166's checksum-incremental contract) as ONE
@@ -232,7 +232,7 @@ object StreamingAugmenter {
       val in = new Path(inputPath)
       val inFs = in.getFileSystem(spark.sparkContext.hadoopConfiguration)
       if (!inFs.exists(in)) None
-      else Option(spark.read.schema(snapSchema).parquet(inputPath)
+      else Option(Tables.read(spark, inputPath, snapSchema)
         .agg(max(col("event_ts"))).head().getTimestamp(0))
     }
     val snapshots = spark.readStream.schema(snapSchema)

@@ -21,6 +21,18 @@ if [[ -n "$builders" ]]; then
   exit 1
 fi
 
+# one parquet loader: every batch parquet read in src/main goes through
+# graft.io.Tables, which pins the schema from a footer on the driver
+# instead of running Spark's schema-inference job; streaming readStream
+# reads are exempt (they carry their own schema)
+reads=$(grep -rnE "\.read\.parquet\(|\.read\.schema\(.*\)\.parquet\(" src/main \
+  --include='*.scala' | grep -v "^src/main/scala/graft/io/Tables.scala:" || true)
+if [[ -n "$reads" ]]; then
+  echo "PREFLIGHT FAIL: batch parquet read outside graft.io.Tables:" >&2
+  echo "$reads" >&2
+  exit 1
+fi
+
 out=$(mktemp -d)
 sbt -batch test 2>&1 | tee "$out/test.log" | grep -E "Tests:|All tests" || true
 grep -q "All tests passed." "$out/test.log" || {
