@@ -20,7 +20,8 @@ import BenchTelemetry.{fmt, la1, measure}
   *   - no arguments: the headline sweep over `SparkEntry.benchNames`
   *     ([[sweep]]), writing BENCH_LAST.json and one compact JSON line;
   *   - `run <q…>`: per-query timing plus stage counters ([[runQueries]]):
-  *     one `[benchsub]` line per query, then its `[stage]` rows;
+  *     one `[benchsub]` line per query, then its `[jobs]` rows (one per
+  *     job label) and its `[stage]` rows;
   *   - `plans <q…>`: every captured execution's formatted plan to
   *     `plans/<tag>/` plus the `[planshape]` summary ([[plans]]).
   *
@@ -143,8 +144,10 @@ object Bench {
   /** `run`: one `[benchsub]` line per query with the min-of-reps wall,
     * every stage counter per measured rep, the result's row count and the
     * Janino compiles over the measured reps (`compiles=`, 0 when every
-    * generated class hit the codegen cache),
-    * then the `[stage]` rows of the measured reps in completion order
+    * generated class hit the codegen cache), then one `[jobs]` row per job
+    * description (a `graft:<op> r<i>` label, or `-`) with its jobs, stages
+    * and executor CPU seconds per measured rep, then the `[stage]` rows of
+    * the measured reps in completion order
     * (SPARK_GRAFT_REPS=1 gives one rep's stages). cw/cpu_s
     * (process-CPU/wall of the min rep) are only printed when the
     * executors live in THIS JVM; xcpu_s comes from the
@@ -180,6 +183,10 @@ object Bench {
         s" run_s=${fmt(t.runMs / 1e3, 2)} stages=${m.stages.size}" +
         s" compiles=${m.compiles}" +
         m.error.map(e => s" failed=${m.failed} err=$e").getOrElse(""))
+      m.labels.foreach { l =>
+        println(s"[jobs] $name ${l.label} jobs=${m.perRep(l.jobs)} " +
+          s"stages=${m.perRep(l.stages)} cpu=${fmt(m.perRep(l.cpuNs) / 1e9, 2)}")
+      }
       m.stages.foreach { s =>
         println(f"[stage] $name stage=${s.id}%4d tasks=${s.tasks}%3d " +
           s"cpu=${fmt(s.cpuNs / 1e9, 2)} run=${fmt(s.runMs / 1e3, 2)} " +
@@ -213,8 +220,8 @@ object Bench {
     * execution it ran, formatted, to
     * `plans/<SPARK_GRAFT_PLAN_TAG>/<q>_<SPARK_GRAFT_PLAN_SUFFIX>.txt`
     * (defaults `dev` and `before`). A QueryExecutionListener captures
-    * EVERY execution — for the iterative operators (pageRank,
-    * labelPropagation, dupClusters, …) whose rounds execute eagerly at
+    * EVERY execution — for the iterative operators (labelPropagation,
+    * connectedComponents, dupClusters, …) whose rounds execute eagerly at
     * query-construction time, the returned frame's own plan is a vacuous
     * checkpoint scan, so the capture (one plan per round, in execution
     * order) is the only honest plan evidence. The formatted plans carry

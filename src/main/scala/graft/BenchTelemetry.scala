@@ -126,6 +126,10 @@ object BenchTelemetry {
     * themselves (CPU burn attributed to a stage, and via the stage name
     * to an operator, without a UI).
     *
+    * Jobs are grouped by their `spark.job.description` (a
+    * [[graft.core.JobLabel]] label, or none): [[byLabel]] gives each
+    * label's job count and the stages and executor CPU of those jobs.
+    *
     * The listener bus is async, so rows are read after [[drain]]: poll
     * until the count of delivered events (stage completions and SQL
     * execution ends) holds still for 3 consecutive 100 ms windows — a
@@ -136,7 +140,17 @@ object BenchTelemetry {
     private val rows =
       new java.util.concurrent.ConcurrentLinkedQueue[StageRow]()
     private val events = new java.util.concurrent.atomic.AtomicLong
+    // (description, stage ids) per job start, in delivery order
+    private val jobs =
+      new java.util.concurrent.ConcurrentLinkedQueue[(String, Seq[Int])]()
     private val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          ev: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.add((Option(ev.properties)
+          .flatMap(p => Option(p.getProperty(graft.core.JobLabel.DescriptionKey)))
+          .getOrElse("-"), ev.stageIds))
+        events.incrementAndGet()
+      }
       override def onStageCompleted(
           ev: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
         val s = ev.stageInfo
@@ -168,14 +182,33 @@ object BenchTelemetry {
         if (cur == snap) same += 1 else { same = 0; snap = cur }
       }
     }
-    def reset(): Unit = rows.clear()
+    def reset(): Unit = { rows.clear(); jobs.clear() }
     def stages: Seq[StageRow] = {
       import scala.jdk.CollectionConverters._
       rows.asScala.toSeq
     }
+    /** One row per job description, in order of first job start
+      * (unlabelled jobs under "-"). A completed stage counts for the first
+      * job that listed it; skipped stages never complete, so they count
+      * nowhere. */
+    def byLabel: Seq[LabelRow] = {
+      import scala.jdk.CollectionConverters._
+      val js = jobs.asScala.toSeq
+      val owner = scala.collection.mutable.HashMap.empty[Int, String]
+      js.foreach { case (l, ids) => ids.foreach(owner.getOrElseUpdate(_, l)) }
+      val done = stages.groupBy(s => owner.getOrElse(s.id, "-"))
+      js.map(_._1).distinct.map { l =>
+        val ss = done.getOrElse(l, Nil)
+        LabelRow(l, js.count(_._1 == l), ss.size, ss.map(_.cpuNs).sum)
+      }
+    }
     def totals: StageRow = stages.foldLeft(StageRow())(_ + _)
     def close(): Unit = sc.removeSparkListener(listener)
   }
+
+  /** The jobs of one job description, with the completed stages and
+    * executor CPU nanos of those jobs. */
+  final case class LabelRow(label: String, jobs: Int, stages: Int, cpuNs: Long)
 
   /** One measured rep: wall seconds and this JVM's CPU seconds (-1 when
     * the OS bean is unavailable). */
@@ -197,7 +230,8 @@ object BenchTelemetry {
     * count means generated code missed Spark's codegen cache. */
   final case class Measured(warm: Option[Rep], reps: Seq[Rep], failed: Int,
                             la: Double, stages: Seq[StageRow],
-                            error: Option[String], compiles: Long) {
+                            error: Option[String], compiles: Long,
+                            labels: Seq[LabelRow] = Nil) {
     private val best = reps.minByOption(_.wall)
     /** min wall across the measured reps */
     def wall: Double = best.fold(-1.0)(_.wall)
@@ -268,7 +302,9 @@ object BenchTelemetry {
     val compiled = compiles() - compiles0
     counters.drain()
     val stages = counters.stages
+    val labels = counters.byLabel
     freeCachedBlocks(spark)
-    Measured(warm, times, reps - times.size, la, stages, error, compiled)
+    Measured(warm, times, reps - times.size, la, stages, error, compiled,
+      labels)
   }
 }

@@ -103,7 +103,7 @@ object DedupOps {
     // localCheckpoint, not persist: the candidate-pair lineage (LSH
     // banding over the whole corpus) is expensive plan state, and a
     // persist would ship it inside every propagation-round task's binary
-    // (the GraphOps.pageRank task-binary finding — ~100 ms CPU per
+    // (the task-binary finding in the GraphOps doc — ~100 ms CPU per
     // cache-scanning task); the checkpoint stores the same rows behind a
     // flat LogicalRDD scan
     val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))

@@ -1,20 +1,35 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.collection.mutable
+
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+
+import graft.core.JobLabel
 
 /** Link-graph analytics over an edge list — the web-crawl curation
   * companion to the similarity/dedup operators: crawl frontiers, seed-list
   * weighting, and domain-authority features for quality scoring all start
-  * from "rank the nodes of a 100-TB link graph".
+  * from "rank the nodes of a 100-TB link graph". Everything is edge-list
+  * shaped: never an adjacency matrix, never a collect of the node set.
   *
-  * Scale shapes: everything is edge-list relational — one shuffle on `src`
-  * (the contribution join) plus one partial-aggregated shuffle on `dst`
-  * per iteration, never an adjacency matrix and never a collect of the
-  * node set. Iteration intermediates are lineage-TRUNCATED per round
-  * (localCheckpoint — the [[DedupOps.dupClusters]] convention; swap for
+  * [[pageRank]] runs its rounds on co-partitioned RDDs (the GraphX
+  * vertex/edge layout): the rank table and the adjacency share one hash
+  * partitioner, so a round is a narrow join, one shuffle and one job.
+  *
+  * The other iterative operators run each round as a Catalyst plan and
+  * truncate its lineage with an eager `localCheckpoint(true)` (swap for a
   * reliable checkpoint() on a cluster where executor loss mid-run must be
   * survivable), so plan size stays constant however many rounds run.
+  * Frames read by every round are checkpointed too, not persisted: an
+  * InMemoryRelation embeds the derivation lineage in the cached plan, and
+  * every task of every round stage that scans the cache pays to
+  * deserialize that plan inside its task binary — measured (sf0.1) at
+  * ~100 ms CPU per task, ~3 CPU-seconds per 32-task round stage on a
+  * 100-node graph; the checkpoint plans as a flat LogicalRDD scan.
   */
 object GraphOps {
 
@@ -23,7 +38,8 @@ object GraphOps {
     * out-edges proportionally to edge multiplicity. Dangling nodes (no
     * out-edges) redistribute their mass uniformly, so total rank stays 1
     * at every iteration. Output: (node, pagerank) with rank rounded to
-    * 6 dp; the node universe is src ∪ dst of the edge list.
+    * 6 dp; the node universe is src ∪ dst of the edge list, and `node`
+    * has the endpoints' common type.
     *
     *   rank'(v) = (1-d)/N + d * (Σ_{u→v} rank(u)·w(u,v)/out(u) + D/N)
     *
@@ -31,72 +47,121 @@ object GraphOps {
     * convergence test) keeps the result deterministic and cross-engine
     * reproducible — the oracle unrolls the same `iters` rounds.
     *
-    * Scale notes: the normalised edge table is built once (two
-    * partial-aggregated shuffles: multi-edge collapse, out-degree) and
-    * persisted across rounds; each round is edges ⋈ ranks on `src` (both
-    * sides hash-partitioned on the same key — AQE may broadcast ranks when
-    * the node set is genuinely small) followed by a partial-aggregated
-    * sum on `dst`. The dangling mass is a one-row aggregate broadcast back
-    * onto the update, and the node count is the single driver scalar.
-    * Hot-authority nodes (many in-edges) are absorbed by the map-side
-    * partial sum on `dst`, not a skewed join key: skew lives on `src` only
-    * if one node has pathological out-degree, which the multi-edge
-    * collapse bounds at one row per (src, dst). */
+    * Node ids must be integral, decimal, boolean, date, timestamp or
+    * binary-collated string values: the rounds key by the JVM value, whose
+    * equality is SQL equality only for those types (a binary id is an
+    * array compared by reference, a float id splits 0.0 from -0.0), so any
+    * other type is an IllegalArgumentException naming it.
+    *
+    * Scale notes: Catalyst runs only the prelude (projection, null
+    * filter, endpoints cast to their common type). Every table after it
+    * is an RDD hash-partitioned by `spark.sql.shuffle.partitions`:
+    *   - build (job label `graft:pagerank r0`, one job, plus a job per
+    *     exchange inside the caller's edge derivation, which AQE runs when
+    *     the prelude becomes an RDD): the normalised
+    *     adjacency src → [(dst, p)] takes one shuffle on `src`, collapsing
+    *     multi-edges and summing out-weights map-side and per partition;
+    *     the node table (node, has_out) takes one shuffle of the endpoints;
+    *     the job collects the node count N (the single driver scalar) and
+    *     the dangling count per partition;
+    *   - round i (label `graft:pagerank r<i>`, one job): ranks ⋈ adjacency
+    *     on the shared partitioner (no shuffle), contributions summed with
+    *     a map-side combine on `dst` (the round's only shuffle), then a
+    *     left join onto the previous rank table — which carries every node
+    *     and its has_out flag, so it is the node table — with no shuffle.
+    *     The new ranks are localCheckpointed, and the action that
+    *     materialises them also returns each partition's dangling mass for
+    *     the next round.
+    * Release: the node table once round 1 is checkpointed, round i's
+    * ranks once round i+1 is, the adjacency after the last round. Only
+    * the final ranks stay held, until the returned frame is dropped (the
+    * ContextCleaner then frees them). Hot-authority nodes (many in-edges)
+    * are absorbed by the map-side sum on `dst`; `src` skew needs one node
+    * with a pathological number of distinct out-neighbours. */
   def pageRank(edges: DataFrame, src: Column, dst: Column,
                iters: Int = 5, damping: Double = 0.85): DataFrame = {
     require(iters >= 1, "pageRank: iters must be >= 1")
     require(damping > 0 && damping < 1, "pageRank: damping must be in (0, 1)")
-    val e = edges.select(src.as("src"), dst.as("dst"))
+    val spark = edges.sparkSession
+    val pairs = edges.select(src.as("src"), dst.as("dst"))
       .where(col("src").isNotNull && col("dst").isNotNull)
-      .groupBy("src", "dst").agg(count(lit(1)).cast("double").as("__w"))
-    val outw = e.groupBy("src").agg(sum("__w").as("__ow"))
-    // per-edge transition probability; reused every round → materialised
-    // via localCheckpoint, not persist: an InMemoryRelation would embed the
-    // edge-derivation lineage (scan + window + two aggregates) in the
-    // cached plan, and every task of every round stage that scans the
-    // cache pays to deserialize that plan inside its task binary —
-    // measured (StageProbe, sf0.1) at ~100 ms CPU per TASK, ~3 CPU-seconds
-    // per 32-task round stage on a 100-node graph. The checkpoint stores
-    // the same rows but plans as a flat LogicalRDD scan, so round closures
-    // stay constant-size however expensive the caller's edge derivation
-    // was.
-    val norm = e.join(outw, "src")
-      .select(col("src"), col("dst"), (col("__w") / col("__ow")).as("__p"))
-      .localCheckpoint(true)
-    val nodes = norm.select(explode(array(col("src"), col("dst"))).as("node"))
-      .distinct()
-    // dangling-ness rides the rank rows as a flag (joined ONCE here, from
-    // the CHECKPOINTED norm), so the per-round dangling-mass is a pure
-    // scan-aggregate of the previous checkpoint — no per-round join, and
-    // nothing in the dm branch reaches back through the caller's edge
-    // derivation lineage
-    val nodesF = nodes
-      .join(norm.select(col("src").as("node")).distinct()
-        .withColumn("__out", lit(true)), Seq("node"), "left")
-      .select(col("node"), coalesce(col("__out"), lit(false)).as("__has_out"))
-      .localCheckpoint(true)
-    val n = nodesF.count().toDouble // the single driver scalar
-    var ranks = nodesF
-      .select(col("node"), lit(1.0 / n).as("rank"), col("__has_out"))
-      .localCheckpoint(true)
-    for (_ <- 1 to iters) {
-      val dm = ranks.where(!col("__has_out"))
-        .agg(coalesce(sum("rank"), lit(0.0)).as("__dm"))
-      val contribs = norm
-        .join(ranks.select(col("node").as("src"), col("rank")), "src")
-        .groupBy("dst").agg(sum(col("rank") * col("__p")).as("__c"))
-        .withColumnRenamed("dst", "node")
-      ranks = nodesF.join(contribs, Seq("node"), "left")
-        .crossJoin(broadcast(dm))
-        .select(col("node"),
-          (lit((1 - damping) / n) + lit(damping) *
-            (coalesce(col("__c"), lit(0.0)) + col("__dm") / n)).as("rank"),
-          col("__has_out"))
-        .localCheckpoint(true)
+    // the type Catalyst coerces both endpoints to, as in array(src, dst)
+    val nodeType = pairs.select(array(col("src"), col("dst"))).schema.head
+      .dataType.asInstanceOf[ArrayType].elementType
+    requireValueKeys(nodeType)
+    val part = new HashPartitioner(
+      spark.conf.get("spark.sql.shuffle.partitions").toInt)
+    val (adj, nodes, n, dangling) = JobLabel.within("pagerank", 0) {
+      val adj = pairs
+        .select(col("src").cast(nodeType), col("dst").cast(nodeType))
+        .rdd.map(r => (r.get(0), r.get(1)))
+        .aggregateByKey(mutable.HashMap.empty[Any, Long], part)(
+          (w, d) => { w(d) = w.getOrElse(d, 0L) + 1L; w },
+          (w, o) => {
+            o.foreach { case (d, c) => w(d) = w.getOrElse(d, 0L) + c }; w
+          })
+        .mapValues { w =>
+          val out = w.values.sum.toDouble
+          w.iterator.map { case (d, c) => (d, c / out) }.toArray
+        }
+        .persist()
+      val nodes = adj
+        .flatMap { case (s, out) =>
+          Iterator((s, true)) ++ out.iterator.map(o => (o._1, false))
+        }
+        .reduceByKey(part, _ || _)
+        .persist()
+      val counts = nodes.mapPartitions { it =>
+        var all, dang = 0L
+        it.foreach { case (_, hasOut) => all += 1; if (!hasOut) dang += 1 }
+        Iterator((all, dang))
+      }.collect()
+      (adj, nodes, counts.map(_._1).sum.toDouble, counts.map(_._2).sum)
     }
-    // checkpoint blocks are dropped by the ContextCleaner once these
-    // references go out of scope (the dupClusters convention)
-    ranks.select(col("node"), round(col("rank"), 6).as("pagerank"))
+    var ranks: RDD[(Any, (Double, Boolean))] =
+      nodes.mapValues(h => (1.0 / n, h))
+    var held: RDD[_] = nodes
+    var dm = dangling / n // Σ rank over dangling nodes, round 0
+    for (i <- 1 to iters) JobLabel.within("pagerank", i) {
+      val dmPrev = dm
+      val sums = ranks.join(adj, part)
+        .flatMap { case (_, ((r, _), out)) =>
+          out.iterator.map { case (d, p) => (d, r * p) }
+        }
+        .reduceByKey(part, _ + _)
+      val next = ranks.leftOuterJoin(sums, part)
+        .mapValues { case ((_, hasOut), c) =>
+          ((1 - damping) / n + damping * (c.getOrElse(0.0) + dmPrev / n),
+            hasOut)
+        }
+        .localCheckpoint()
+      dm = next.mapPartitions { it =>
+        Iterator(it.foldLeft(0.0) { case (s, (_, (r, hasOut))) =>
+          if (hasOut) s else s + r
+        })
+      }.collect().sum
+      held.unpersist(blocking = false) // next no longer depends on it
+      held = next
+      ranks = next
+    }
+    adj.unpersist(blocking = false)
+    val schema = StructType(Seq(
+      StructField("node", nodeType, nullable = false),
+      StructField("rank", DoubleType, nullable = false)))
+    spark.createDataFrame(ranks.map { case (v, (r, _)) => Row(v, r) }, schema)
+      .select(col("node"), round(col("rank"), 6).as("pagerank"))
+  }
+
+  /** Rejects node types whose JVM values do not compare as SQL does (see
+    * [[pageRank]]). */
+  private def requireValueKeys(t: DataType): Unit = t match {
+    case ByteType | ShortType | IntegerType | LongType | BooleanType |
+         DateType | TimestampType | TimestampNTZType | _: DecimalType => ()
+    case s: StringType if s.collationId == StringType.collationId => ()
+    case other => throw new IllegalArgumentException(
+      s"pageRank: node ids of type ${other.sql} are not supported; use an " +
+        "integral, decimal, boolean, date, timestamp or binary-collated " +
+        "string id")
   }
 
   /** Per-node triangle count over the undirected simple graph induced by
@@ -125,17 +190,14 @@ object GraphOps {
     * Scale shape per round: one equi-join of the (symmetrized, persisted)
     * edge list with the label frame on the neighbour key, one partial-
     * aggregated count on (node, label), and an argmax via max(struct) —
-    * no window; per-round localCheckpoint truncation as in [[pageRank]].
+    * no window; per-round localCheckpoint truncation (see [[GraphOps]]).
     * Output: (node, community). */
   def labelPropagation(edges: DataFrame, src: Column, dst: Column,
                        iters: Int = 3): DataFrame = {
     require(iters >= 1, "labelPropagation: iters must be >= 1")
     val und = simpleUndirected(edges, src, dst)
-    // localCheckpoint, not persist: sym is scanned by every round, and an
-    // InMemoryRelation would carry the whole edge-derivation lineage in
-    // every cache-scanning task's binary (the [[pageRank]] norm finding —
-    // ~100 ms CPU per task at sf0.1); the checkpoint plans as a flat
-    // LogicalRDD scan
+    // localCheckpoint, not persist: sym is scanned by every round (the
+    // task-binary finding in the [[GraphOps]] doc)
     val sym = symmetrized(und).localCheckpoint(true)
     var labels = sym.select("node").distinct()
       .select(col("node"), col("node").as("label"))
@@ -177,13 +239,13 @@ object GraphOps {
     * Scale shape per round: one equi-join of the (symmetrized, persisted)
     * edge list with the component frame on the neighbour key and one
     * partial-aggregated min on the node — hub fan-in collapses map-side;
-    * per-round localCheckpoint truncation as in [[pageRank]]. */
+    * per-round localCheckpoint truncation (see [[GraphOps]]). */
   def connectedComponents(edges: DataFrame, src: Column, dst: Column,
                           rounds: Int = 5): DataFrame = {
     require(rounds >= 1, "connectedComponents: rounds must be >= 1")
     val und = simpleUndirected(edges, src, dst)
-    // localCheckpoint, not persist — the [[pageRank]]/[[labelPropagation]]
-    // task-binary reasoning
+    // localCheckpoint, not persist — the task-binary finding in the
+    // [[GraphOps]] doc
     val sym = symmetrized(und).localCheckpoint(true)
     var comp = sym.select("node").distinct()
       .select(col("node"), col("node").as("component"))
@@ -225,8 +287,8 @@ object GraphOps {
                                maxRounds: Int = 40): DataFrame = {
     require(maxRounds >= 1, "connectedComponentsExact: maxRounds must be >= 1")
     val und = simpleUndirected(edges, src, dst)
-    // localCheckpoint, not persist — the [[pageRank]]/[[labelPropagation]]
-    // task-binary reasoning
+    // localCheckpoint, not persist — the task-binary finding in the
+    // [[GraphOps]] doc
     val sym = symmetrized(und).localCheckpoint(true)
     var comp = sym.select("node").distinct()
       .select(col("node"), col("node").as("component"))
@@ -271,7 +333,7 @@ object GraphOps {
     * Scale shape per round: one degree aggregate (partial-aggregated) and
     * two semi-joins restricting the edge list to surviving nodes — all on
     * the node key, no window, no collect; per-round localCheckpoint as in
-    * [[pageRank]]. */
+    * [[labelPropagation]]. */
   def kCore(edges: DataFrame, src: Column, dst: Column, k: Int,
             rounds: Int = 5): DataFrame = {
     require(k >= 1, "kCore: k must be >= 1")
@@ -313,7 +375,7 @@ object GraphOps {
     * 100x; the two-phase form is bit-identical (same pick function) with
     * no fan-out. PlanSpec locks the both-keys equi-join (no post-join rank
     * filter). No window per step, no collect, frontier localCheckpoint per
-    * step ([[pageRank]] truncation discipline). */
+    * step (the [[GraphOps]] truncation discipline). */
   def randomWalks(edges: DataFrame, src: Column, dst: Column,
                   steps: Int, walksPerNode: Int = 1): DataFrame = {
     require(steps >= 1, "randomWalks: steps must be >= 1")
@@ -325,8 +387,9 @@ object GraphOps {
     // localCheckpoint, not persist (measured both ways, r19): the frames
     // are scanned every step, so the persist form ships the
     // window-over-edge-derivation lineage in each step task's binary (the
-    // [[pageRank]] norm finding) — isolated min-of-3 at sf0.1: 3.05 s /
-    // 2.32 executor-CPU-s persisted vs 2.28 s / 1.44 s checkpointed
+    // task-binary finding in the [[GraphOps]] doc) — isolated min-of-3 at
+    // sf0.1: 3.05 s / 2.32 executor-CPU-s persisted vs 2.28 s / 1.44 s
+    // checkpointed
     val adj = sym.select(col("node"), col("nbr"),
       (row_number().over(w) - 1).cast("long").as("__rk"))
       .localCheckpoint(true)

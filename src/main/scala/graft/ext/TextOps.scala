@@ -465,7 +465,7 @@ object TextOps {
     * 1-ROW collect for the argmax (the pageRank scalar class), and the
     * merge applied as an in-row left-to-right fold with the classic skip
     * semantics ("aaa" + (a,a) → [aa, a]). Per-round localCheckpoint
-    * truncates lineage ([[graft.ext.GraphOps.pageRank]] discipline).
+    * truncates lineage (the [[graft.ext.GraphOps]] discipline).
     *
     * Spec-locked (BpeSpec: independent in-JVM reference over hand + real
     * corpora), not oracle-declared: the per-round argmax-then-rewrite

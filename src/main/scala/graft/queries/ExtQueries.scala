@@ -1450,8 +1450,9 @@ object ExtQueries {
 
   /** PageRank over the transition graph: five fixed power-method rounds
     * at damping 0.85 — the oracle unrolls the identical recurrence, so
-    * agreement proves the relational iteration (edge ⋈ ranks on src,
-    * partial-agg on dst, broadcast dangling mass), not just the shape. */
+    * agreement proves the co-partitioned iteration (ranks ⋈ adjacency on
+    * src, map-side sum on dst, dangling mass from the previous round's
+    * materialising action), not just the shape. */
   val xPagerank: Q = (s, dir) =>
     GraphOps.pageRank(transitionEdges(s, dir), col("src"), col("dst"),
       iters = 5, damping = 0.85)

@@ -53,6 +53,50 @@ class BenchTelemetrySpec extends SparkTestBase {
     }
   }
 
+  test("JobLabel.within labels the jobs of its block and restores the " +
+    "previous description, also when the block throws") {
+    import graft.core.JobLabel
+    val sc = spark.sparkContext
+    def description = Option(sc.getLocalProperty(JobLabel.DescriptionKey))
+    sc.setJobDescription("outer")
+    try {
+      val (_, labels) = jobDescriptionsDuring(JobLabel.within("op", 2) {
+        assert(description === Some("graft:op r2"))
+        spark.range(10).count()
+      })
+      assert(labels.nonEmpty && labels.forall(_ == "graft:op r2"), labels)
+      assert(description === Some("outer"))
+      intercept[IllegalStateException](
+        JobLabel.within("op", 3)(throw new IllegalStateException("boom")))
+      assert(description === Some("outer"))
+    } finally sc.setJobDescription(null)
+    JobLabel.within("op", 4)(())
+    assert(description === None)
+  }
+
+  test("EntryCounters.byLabel: jobs, stages and CPU grouped by job " +
+    "description, in order of first job") {
+    import graft.core.JobLabel
+    val counters = new BenchTelemetry.EntryCounters(spark.sparkContext)
+    try {
+      counters.drain(); counters.reset()
+      def shuffle(): Unit = spark.range(0, 1000, 1, 4)
+        .groupBy((col("id") % 7).as("k")).count()
+        .write.format("noop").mode("overwrite").save()
+      JobLabel.within("a", 0)(shuffle())
+      JobLabel.within("b", 1) { shuffle(); shuffle() }
+      spark.sparkContext.parallelize(1 to 4, 2).count()
+      counters.drain()
+      val rows = counters.byLabel
+      assert(rows.map(_.label) === Seq("graft:a r0", "graft:b r1", "-"), rows)
+      val Seq(a, b, none) = rows
+      assert(b.jobs === 2 * a.jobs && b.stages === 2 * a.stages, rows)
+      assert(a.stages >= 1 && none.jobs === 1 && none.stages === 1, rows)
+      assert(rows.map(_.stages).sum === counters.stages.size, rows)
+      assert(rows.map(_.cpuNs).sum === counters.totals.cpuNs, rows)
+    } finally counters.close()
+  }
+
   test("Bench.summaryLine: the sweep's last stdout line is totals-only, at " +
     "most 1 KB and valid JSON for 178 entries") {
     import BenchTelemetry.{Measured, Rep}

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import org.scalatest.prop.TableDrivenPropertyChecks
 
 import graft.ext.GraphOps
@@ -80,6 +81,87 @@ class GraphSpec extends SparkTestBase with TableDrivenPropertyChecks {
     val got = run(Seq((1L, 2L), (2L, 3L)))
     assert(math.abs(got.values.sum - 1.0) < 1e-4)
     assert(got(3L) > got(2L) && got(2L) > got(1L))
+  }
+
+  test("pageRank: an empty edge list and all-null endpoints give an empty " +
+    "frame with the (node, pagerank) schema") {
+    val want = StructType(Seq(StructField("node", LongType, nullable = false),
+      StructField("pagerank", DoubleType, nullable = true)))
+    val empty = GraphOps.pageRank(Seq.empty[(Long, Long)].toDF("s", "t"),
+      col("s"), col("t"))
+    assert(empty.schema === want)
+    assert(empty.collect().isEmpty)
+    val nulls = GraphOps.pageRank(
+      Seq[(Option[Long], Option[Long])]((None, None), (Some(1L), None),
+        (None, Some(2L))).toDF("s", "t"), col("s"), col("t"))
+    assert(nulls.schema === want)
+    assert(nulls.collect().isEmpty)
+  }
+
+  test("pageRank: a single self-loop keeps rank 1") {
+    assert(run(Seq((7L, 7L))) === Map(7L -> 1.0))
+  }
+
+  test("pageRank: string node ids rank as their numeric twins do") {
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (1L, 2L))
+    val got = GraphOps.pageRank(
+        edges.map(e => (s"n${e._1}", s"n${e._2}")).toDF("s", "t"),
+        col("s"), col("t"))
+      .as[(String, Double)].collect().toMap
+    assert(got === run(edges).map { case (k, v) => s"n$k" -> v })
+  }
+
+  test("pageRank: an Int source and a Long destination name one node per " +
+    "value") {
+    val df = GraphOps.pageRank(Seq((1, 2L), (2, 1L), (2, 3L)).toDF("s", "t"),
+      col("s"), col("t"))
+    assert(df.schema("node").dataType === LongType)
+    val got = df.as[(Long, Double)].collect()
+    assert(got.map(_._1).sorted.toSeq === Seq(1L, 2L, 3L))
+    assert(got.toMap === run(Seq((1L, 2L), (2L, 1L), (2L, 3L))))
+  }
+
+  test("pageRank: node ids whose JVM values do not compare as SQL does " +
+    "(binary, float, double) are rejected by type") {
+    val cases = Seq(
+      Seq((Array[Byte](1), Array[Byte](1))).toDF("s", "t") -> "BINARY",
+      Seq((0.0f, -0.0f)).toDF("s", "t") -> "FLOAT",
+      Seq((0.0, -0.0), (Double.NaN, 1.0)).toDF("s", "t") -> "DOUBLE")
+    for ((edges, typeName) <- cases) {
+      val e = intercept[IllegalArgumentException](
+        GraphOps.pageRank(edges, col("s"), col("t")))
+      assert(e.getMessage.contains(typeName), e.getMessage)
+    }
+  }
+
+  test("pageRank: one labelled job per round, at most iters + 4 jobs to " +
+    "build and collect, and only the result's ranks stay held") {
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (5L, 3L)).toDF("s", "t")
+    val sc = spark.sparkContext
+    val firstId = sc.emptyRDD[Int].id // RDDs made below have larger ids
+    // getPersistentRDDs holds its RDDs weakly, and a GC releases an RDD no
+    // one references; pinning a strong copy at every job start leaves only
+    // an explicit unpersist to release one
+    val pins = new java.util.concurrent.ConcurrentLinkedQueue[AnyRef]()
+    val pin = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          ev: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        pins.add(sc.getPersistentRDDs)
+    }
+    sc.addSparkListener(pin)
+    val (df, labels) = try jobDescriptionsDuring(
+      GraphOps.pageRank(edges, col("s"), col("t"), iters = 5))
+    finally sc.removeSparkListener(pin)
+    assert(labels.nonEmpty && labels.forall(l => l != null &&
+      l.startsWith("graft:pagerank ")), labels)
+    for (i <- 1 to 5)
+      assert(labels.count(_ == s"graft:pagerank r$i") === 1, labels)
+    val (rows, collectJobs) = jobsDuring(df.collect())
+    assert(rows.length === 5)
+    assert(labels.size + collectJobs <= 5 + 4,
+      s"${labels.size} jobs to build, $collectJobs to collect")
+    val held = sc.getPersistentRDDs.keys.count(_ > firstId)
+    assert(held <= 1, s"$held RDDs held after the collect")
   }
 
   // ---- triangleCount ----

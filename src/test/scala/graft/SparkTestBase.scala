@@ -21,18 +21,30 @@ trait SparkTestBase extends AnyFunSuite {
     }
   }
 
-  /** Run `body` and count the Spark jobs it starts. The listener bus is
-    * asynchronous but delivers job starts in submission order, so a marker
-    * job run after `body` bounds the count: once the marker's start is
-    * delivered, every job `body` started has been seen. */
+  /** Run `body` and count the Spark jobs it starts. */
   def jobsDuring[T](body: => T): (T, Int) = {
+    val (out, descriptions) = jobDescriptionsDuring(body)
+    (out, descriptions.size)
+  }
+
+  /** Run `body` and return the job description (`spark.job.description`,
+    * null when unset) of every Spark job it starts, in submission order.
+    * The listener bus is asynchronous but delivers job starts in
+    * submission order, so a marker job run after `body` bounds the list:
+    * once the marker's start is delivered, every job `body` started has
+    * been seen. */
+  def jobDescriptionsDuring[T](body: => T): (T, Seq[String]) = {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val sc = spark.sparkContext
     val marker = "graft.test.marker"
-    val starts = new java.util.concurrent.LinkedBlockingQueue[java.lang.Boolean]()
+    // (is the marker, description); a queue cannot hold a null description
+    val starts = new java.util.concurrent.LinkedBlockingQueue[(Boolean, Option[String])]()
     val listener = new SparkListener {
-      override def onJobStart(ev: SparkListenerJobStart): Unit =
-        starts.add(Option(ev.properties).exists(_.getProperty(marker) != null))
+      override def onJobStart(ev: SparkListenerJobStart): Unit = {
+        val props = Option(ev.properties)
+        starts.add((props.exists(_.getProperty(marker) != null),
+          props.flatMap(p => Option(p.getProperty(graft.core.JobLabel.DescriptionKey)))))
+      }
     }
     sc.addSparkListener(listener)
     try {
@@ -40,14 +52,14 @@ trait SparkTestBase extends AnyFunSuite {
       sc.setLocalProperty(marker, "1")
       try sc.parallelize(Seq(1), 1).count()
       finally sc.setLocalProperty(marker, null)
-      var jobs = 0
+      val jobs = Seq.newBuilder[String]
       var seen = false
       while (!seen) {
-        val isMarker = starts.poll(30, java.util.concurrent.TimeUnit.SECONDS)
-        assert(isMarker != null, "the marker job's start was never delivered")
-        if (isMarker.booleanValue) seen = true else jobs += 1
+        val start = starts.poll(30, java.util.concurrent.TimeUnit.SECONDS)
+        assert(start != null, "the marker job's start was never delivered")
+        if (start._1) seen = true else jobs += start._2.orNull
       }
-      (out, jobs)
+      (out, jobs.result())
     } finally sc.removeSparkListener(listener)
   }
 }

@@ -33,6 +33,16 @@ if [[ -n "$reads" ]]; then
   exit 1
 fi
 
+# one job labeller: every job description in src/main is set by
+# graft.core.JobLabel, so labels keep one format and are always restored
+labels=$(grep -rnE "setJobDescription\(|setJobGroup\(" src/main --include='*.scala' \
+  | grep -v "^src/main/scala/graft/core/JobLabel.scala:" || true)
+if [[ -n "$labels" ]]; then
+  echo "PREFLIGHT FAIL: job description set outside graft.core.JobLabel:" >&2
+  echo "$labels" >&2
+  exit 1
+fi
+
 out=$(mktemp -d)
 sbt -batch test 2>&1 | tee "$out/test.log" | grep -E "Tests:|All tests" || true
 grep -q "All tests passed." "$out/test.log" || {
